@@ -9,111 +9,13 @@ package graft
   * `bench_out.json` so a truncated log tail can't lose queries.
   */
 object Bench {
-
-  /** Fork-per-family mode (`SPARK_GRAFT_FORK=<queries-per-fork>`):
-    * runs the surface as alphabetical chunks, each in a FRESH child
-    * JVM, and merges the per-chunk artifacts into the one-line
-    * contract. Exists because a 275-query same-JVM sweep accumulates
-    * codegen-cache/GC pressure that made round-8's shared-227 subset
-    * read ~20% slower than round 7 with zero plan changes — fork
-    * isolation makes surface growth unable to masquerade as
-    * regression. `SPARK_GRAFT_FORK_XMX` overrides the child heap
-    * (default: the parent's SPARK_DRIVER_MEM convention, 8g), which
-    * doubles as the memory-bounded scale proof: a sweep at an
-    * explicit small heap shows no op silently relies on the sandbox's
-    * 128 GiB. */
-  private def runForked(ordered: Seq[String], chunk: Int, sfDir: String,
-                        cpus: String, reps: Int): Unit = {
-    val xmx = sys.env.getOrElse("SPARK_GRAFT_FORK_XMX",
-      sys.env.getOrElse("SPARK_DRIVER_MEM", "8g"))
-    val opens = Seq(
-      "java.base/java.lang", "java.base/java.lang.invoke",
-      "java.base/java.lang.reflect", "java.base/java.io",
-      "java.base/java.net", "java.base/java.nio",
-      "java.base/java.util", "java.base/java.util.concurrent",
-      "java.base/java.util.concurrent.atomic",
-      "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-      "java.base/sun.security.action", "java.base/sun.util.calendar",
-    ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-    val javaBin = new java.io.File(new java.io.File(
-      sys.props("java.home"), "bin"), "java").getAbsolutePath
-    val families = ordered.grouped(chunk).toSeq
-    val results = scala.collection.mutable.Map.empty[String, Double]
-    var failed = Set.empty[String]
-    for ((fam, i) <- families.zipWithIndex) {
-      val out = java.nio.file.Files.createTempFile(s"bench_fork_$i", ".json")
-      val cmd = (Seq(javaBin, s"-Xmx$xmx") ++ opens ++ Seq(
-        // mirror java_run.sh: G1's default GCLocker retry budget (2)
-        // starves under 32 shuffle writers + LZ4 JNI criticals and
-        // throws spurious heap OOMs on a half-empty heap (killed the
-        // forked sf20 ann_graph build, r13)
-        "-XX:+UnlockDiagnosticVMOptions", "-XX:GCLockerRetryAllocationCount=64",
-        "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
-        "-cp", sys.props("java.class.path"), "graft.Bench")).toArray
-      val pb = new ProcessBuilder(cmd: _*)
-      pb.environment.remove("SPARK_GRAFT_FORK")
-      pb.environment.put("SPARK_GRAFT_ONLY", fam.mkString(","))
-      pb.environment.put("SPARK_GRAFT_OUT", out.toString)
-      pb.environment.put("SPARK_GRAFT_SF_DIR", sfDir)
-      pb.environment.put("SPARK_GRAFT_CPUS", cpus)
-      pb.environment.put("SPARK_GRAFT_BENCH_REPS", reps.toString)
-      pb.inheritIO()
-      val code = pb.start().waitFor()
-      val text = if (java.nio.file.Files.exists(out))
-        java.nio.file.Files.readString(out) else ""
-      if (code != 0 || !text.contains("\"queries\":")) {
-        System.err.println(s"BENCH FORK $i exit=$code — marking family failed")
-        failed ++= fam
-      } else {
-        val qBlock = text.substring(text.indexOf("\"queries\":{") + 11)
-        // exponent-aware: Scala prints sub-1e-3 doubles in scientific
-        // notation (5.0E-4) — a mantissa-only regex would record that
-        // as 5.0 s, a 10,000x inflation (ADVICE r9)
-        val pairs = "\"([A-Za-z0-9_]+)\":(-?[0-9.]+(?:[Ee][+-]?[0-9]+)?)".r
-        pairs.findAllMatchIn(qBlock.substring(0, qBlock.indexOf('}')))
-          .foreach { m =>
-            val v = m.group(2).toDouble
-            if (v < 0) failed += m.group(1) else results(m.group(1)) = v
-          }
-        fam.filterNot(q => results.contains(q) || failed.contains(q))
-          .foreach(failed += _)
-      }
-      java.nio.file.Files.deleteIfExists(out)
-    }
-    val med = ordered.map(n =>
-      n -> (if (failed.contains(n)) -1.0 else results(n)))
-    val qs = med.map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val failedJson = med.collect { case (k, v) if v < 0 => s"\"" + k + "\"" }
-      .mkString("[", ",", "]")
-    val total = math.rint(med.collect { case (_, v) if v >= 0 => v }.sum * 1e4) / 1e4
-    val warmTag = if (sys.env.get("SPARK_GRAFT_WARMUP").contains("1"))
-      ""","warmup":1""" else ""
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
-      s""""failed":$failedJson,"sf":"$sfDir","reps":$reps,""" +
-      s""""fork":$chunk,"xmx":"$xmx"$warmTag}"""
-    println(line)
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_OUT", "bench_out.json")), line + "\n")
-    val slowest = med.filter(_._2 >= 0).sortBy(-_._2).take(10)
-      .map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${med.size},""" +
-      s""""failed":$failedJson,"slowest":$slowest,"sf":"$sfDir","reps":$reps,""" +
-      s""""fork":$chunk,"xmx":"$xmx","full":"bench_out.json"}""")
-  }
+  import Verify.jsonString
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
     require(reps >= 1, s"SPARK_GRAFT_BENCH_REPS must be >= 1, got $reps")
-    sys.env.get("SPARK_GRAFT_FORK").map(_.toInt).filter(_ > 0).foreach { chunk =>
-      val only = sys.env.get("SPARK_GRAFT_ONLY")
-        .map(_.split(",").map(_.trim).toSet)
-      val ordered = SparkEntry.queries.keys.toSeq.sorted
-        .filter(name => only.forall(_.contains(name)))
-      runForked(ordered, chunk, sfDir, cpus, reps)
-      return
-    }
     // single config point: tuned defaults + the §5 shuffle-sizing rule
     val spark = GraftSession.build(s"local[$cpus]", "graft-bench",
       dataDir = Some(sfDir), cores = cpus.toInt)
@@ -123,51 +25,6 @@ object Bench {
     try {
       graft.Tables.names.foreach(n => graft.Tables.load(spark, sfDir, n).count())
     } catch { case _: Throwable => () }
-    // Persisted-label mode (SPARK_GRAFT_LABELS_TABLE=<name>): write the
-    // cluster-label table ONCE (the once-per-crawl production shape,
-    // timed and reported on its own line) and point the session at it,
-    // so the four label-consuming gate queries time TABLE READS — the
-    // plan a 100 TB pipeline actually runs — instead of re-deriving
-    // MinHash+CC per query. Unset (the driver default), behavior is
-    // unchanged: every query still times its full computation.
-    sys.env.get("SPARK_GRAFT_LABELS_TABLE").foreach { tbl =>
-      // SPARK_GRAFT_LABELS_REUSE=1: skip the write when the table
-      // already exists — the fork-mode shape, where the table is
-      // written ONCE up front and every family JVM only reads it
-      // (per-child rewrites would charge the once-per-crawl cost to
-      // every family). The caller owns table-name↔SF hygiene: a label
-      // table is only reusable for the SF dir it was built from.
-      val reuse = sys.env.get("SPARK_GRAFT_LABELS_REUSE").contains("1") &&
-        spark.catalog.tableExists(tbl)
-      if (!reuse) {
-        val t0 = System.nanoTime()
-        graft.pipeline.Pipeline.writeLabels(spark, sfDir, tbl)
-        val sec = math.rint((System.nanoTime() - t0) / 1e9 * 1e4) / 1e4
-        println(s"""{"metric":"labels_write","value":$sec,"unit":"sec","table":"$tbl"}""")
-      }
-      spark.conf.set("spark.graft.labels.table", tbl)
-    }
-    // Persisted-graph mode (SPARK_GRAFT_GRAPH_TABLE=<name>): the same
-    // once-per-crawl contract for the NN-Descent kNN graph — write the
-    // node-bucketed edge table once (timed, own metric line) and point
-    // the session at it, so ann_graph times beam-search TABLE READS
-    // instead of re-running init + descent per invocation. Reuse is
-    // toggled by SPARK_GRAFT_GRAPH_REUSE, falling back to the labels
-    // flag so the common both-tables chain needs one env var — but a
-    // caller CAN reuse labels while forcing a fresh graph write (or
-    // vice versa) by setting the two flags independently (ADVICE r12).
-    sys.env.get("SPARK_GRAFT_GRAPH_TABLE").foreach { tbl =>
-      val reuse = sys.env.get("SPARK_GRAFT_GRAPH_REUSE")
-        .orElse(sys.env.get("SPARK_GRAFT_LABELS_REUSE")).contains("1") &&
-        spark.catalog.tableExists(tbl)
-      if (!reuse) {
-        val t0 = System.nanoTime()
-        graft.ann.GraphAnn.writeGraph(spark, sfDir, tbl)
-        val sec = math.rint((System.nanoTime() - t0) / 1e9 * 1e4) / 1e4
-        println(s"""{"metric":"graph_write","value":$sec,"unit":"sec","table":"$tbl"}""")
-      }
-      spark.conf.set("spark.graft.graph.table", tbl)
-    }
     // deterministic alphabetical order: hash-map iteration order would
     // shuffle which queries absorb residual warm-up round to round
     // (dev convenience: SPARK_GRAFT_ONLY=a,b,c times a subset — the
@@ -182,17 +39,7 @@ object Bench {
     val times = scala.collection.mutable.Map.empty[String, List[Double]]
     val errors = scala.collection.mutable.Map.empty[String, String]
     var failed = Set.empty[String]
-    // SPARK_GRAFT_WARMUP=1: one UNTIMED full sweep before the timed
-    // reps. Exists for fork-isolated runs: the r11 q3_join triage
-    // measured the same query at 14.2 s (fork, cold), 10.4 s
-    // (in-process 3-rep), 5.3 s (10-rep) and 3.8 s (r10 286-query hot
-    // process) — the spread is C2/codegen warmth, not plans, and 3
-    // timed reps do not outlast it. A warm rep makes a fresh-JVM
-    // family measure STEADY-STATE cost (what a long-lived production
-    // executor sees); default off so artifacts stay comparable to
-    // rounds 8-10.
-    val warmup = sys.env.get("SPARK_GRAFT_WARMUP").contains("1")
-    for (rep <- (if (warmup) 0 else 1) to reps) {
+    for (_ <- 1 to reps) {
       // drop memoized per-dir results (imputation stats, cluster labels)
       // so every rep times query EXECUTION — otherwise reps 2+ of
       // dedup_clusters/medians_modes would measure a persisted-cache hit
@@ -203,13 +50,11 @@ object Bench {
         val t0 = System.nanoTime()
         try {
           fn(spark, sfDir).count()
-          if (rep >= 1)
-            times(name) = ((System.nanoTime() - t0) / 1e9) :: times.getOrElse(name, Nil)
+          times(name) = ((System.nanoTime() - t0) / 1e9) :: times.getOrElse(name, Nil)
         } catch { case e: Throwable =>
           System.err.println(s"BENCH FAIL $name: ${e.getClass.getSimpleName}: ${e.getMessage}")
-          // full stack on demand — an OOM's allocation site is the
-          // whole triage (the r11 sf20 cascade shipped without one)
-          if (sys.env.contains("SPARK_GRAFT_BENCH_STACKS")) e.printStackTrace()
+          // full stack: an OOM's allocation site is the whole triage
+          e.printStackTrace()
           failed += name
           errors(name) = s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(120)}"
         }
@@ -228,18 +73,17 @@ object Bench {
       name -> (if (failed.contains(name)) -1.0
                else math.rint(median(times(name)) * 1e4) / 1e4)
     }
-    val qs = med.map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val failedJson = med.collect { case (k, v) if v < 0 => s"\"" + k + "\"" }
+    val qs = med.map { case (k, v) => s"${jsonString(k)}:$v" }.mkString("{", ",", "}")
+    val failedJson = med.collect { case (k, v) if v < 0 => jsonString(k) }
       .mkString("[", ",", "]")
     val total = math.rint(med.collect { case (_, v) if v >= 0 => v }.sum * 1e4) / 1e4
     // the artifact records the driver heap: every sweep is implicitly a
-    // memory-bounded proof (run/fork JVMs get -Xmx from SPARK_DRIVER_MEM,
-    // default 8g — NOT the sandbox's 128 GiB)
+    // memory-bounded proof (the run JVM gets -Xmx from SPARK_DRIVER_MEM,
+    // default 8g — not the host's physical memory)
     val xmx = java.lang.management.ManagementFactory.getMemoryMXBean
       .getHeapMemoryUsage.getMax / (1024L * 1024L)
-    val warmTag = if (warmup) ""","warmup":1""" else ""
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failedJson,"sf":"$sfDir","reps":$reps,"heap_mb":$xmx$warmTag}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failedJson,"sf":${jsonString(sfDir)},"reps":$reps,"heap_mb":$xmx}"""
     println(line)
     java.nio.file.Files.writeString(java.nio.file.Paths.get(
       sys.env.getOrElse("SPARK_GRAFT_OUT", "bench_out.json")), line + "\n")
@@ -250,16 +94,13 @@ object Bench {
     // slowest queries, and a pointer to the full table — small enough
     // that the tail always holds it whole, so the driver artifact is
     // finally self-contained and machine-parseable.
-    def jstr(s: String): String =
-      "\"" + s.flatMap { case '"' => "\\\""; case '\\' => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString } + "\""
     val slowest = med.filter(_._2 >= 0).sortBy(-_._2).take(10)
-      .map { case (k, v) => s"${jstr(k)}:$v" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonString(k)}:$v" }.mkString("{", ",", "}")
     val errJson = errors.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonString(k)}:${jsonString(v)}" }.mkString("{", ",", "}")
     println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${med.size},""" +
       s""""failed":$failedJson,"errors":$errJson,"slowest":$slowest,""" +
-      s""""sf":"$sfDir","reps":$reps,"full":"bench_out.json"}""")
+      s""""sf":${jsonString(sfDir)},"reps":$reps,"full":"bench_out.json"}""")
     spark.stop()
   }
 }

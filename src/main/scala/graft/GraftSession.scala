@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** THE single session-config point: every entry main (Bench, Verify,
-  * Plans, Profile, InvariantCheck) builds its session here, so the
+  * Profile, Plans, PlanGate, DegenerateGate, InvariantCheck) and the
+  * perfbench harness build their session here, so the
   * tuned defaults — AQE on (runtime re-plan, partition coalescing,
   * skew-join splitting), UTC for oracle parity, nanos-parquet handling
   * for the events table, graft SQL functions registered — and the
@@ -56,8 +57,8 @@ object GraftSession {
     * so on a small-heap/many-core JVM the default merges partitions
     * until ONE task's build map exceeds its heap share. That exact
     * wall killed fuzzy_match at sf20 on an 8 GiB / 32-core JVM
-    * (bench_sf20_r12.json: SparkOutOfMemoryError in the hash-map
-    * build; `advisoryPartitionSizeInBytes=8m` → 16.8 s green).
+    * (artifacts/bench_sf20_r12.json: SparkOutOfMemoryError in the
+    * hash-map build; `advisoryPartitionSizeInBytes=8m` → 16.8 s green).
     *
     * Rule: `heap / (cores × 32)` clamped to [2 MB, 64 MB] — each
     * core's share of heap, divided by a 32× headroom factor covering
@@ -79,11 +80,10 @@ object GraftSession {
             dataDir: Option[String] = None,
             cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
     val parts = dataDir.map(shufflePartitionsFor(_, cores)).getOrElse(cores)
-    // SPARK_GRAFT_ADVISORY overrides the heap rule (bytes) — the A/B
-    // knob for isolating the advisory's effect on small-SF sweeps
-    // (-D can't override: .config() below beats system properties)
-    val advisory = sys.env.get("SPARK_GRAFT_ADVISORY").map(_.toLong)
-      .getOrElse(advisoryBytesFor(Runtime.getRuntime.maxMemory(), cores))
+    // the advisory size (like coalescePartitions.parallelismFirst,
+    // left at Spark's default true) is a runtime SQL conf: A/B it with
+    // spark.conf.set on the built session, not with a knob here
+    val advisory = advisoryBytesFor(Runtime.getRuntime.maxMemory(), cores)
     val spark = SparkSession.builder()
       .master(master)
       .appName(appName)
@@ -92,12 +92,6 @@ object GraftSession {
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", advisory.toString)
-      // SPARK_GRAFT_PFIRST=false makes AQE coalesce small shuffle
-      // reads to the ADVISORY size instead of stopping early to
-      // preserve parallelism — the A/B knob for the tiny-SF
-      // stage-overhead question; default = Spark's own default
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PFIRST", "true"))
       .config("spark.sql.session.timeZone", "UTC")
       // Parquet naive timestamps (isAdjustedToUTC=false) must read as
       // TIMESTAMP, not TIMESTAMP_NTZ: the session TZ is pinned to UTC so

@@ -5,6 +5,21 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
 
+  /** JSON string literal: escapes backslash, quote, and ALL control
+    * chars (<0x20). A raw tab or CR in hand-written oracle SQL would
+    * otherwise make `json.load` reject the whole file and lose the
+    * correctness compare. The one escaper every JSON writer here uses
+    * (Verify, Bench, DumpOracle). */
+  def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
   /** The dump loop, separated from `main` so the loud-failure contract
     * is spec-testable (VerifyGateSpec): every selected query either
     * writes `outDir/<name>/` or lands in the returned failure list AND
@@ -24,24 +39,12 @@ object Verify {
         failures ::= (name, s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(300)}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     val ordered = failures.reverse
     val failJson = ordered
-      .map { case (k, m) => s"${q(k)}: ${q(m)}" }.mkString("{", ",", "}")
+      .map { case (k, m) => s"${jsonString(k)}: ${jsonString(m)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/verify_failures.json"), failJson)
     if (ordered.nonEmpty)
       // denominator = the set actually run, not the registry size —

@@ -32,11 +32,13 @@ import graft.Tables
   * s = 0 (all values equal — the degenerate corpus) INTEGER-gates both
   * iterations to the plain mean with zero downweighted rows.
   *
-  * Scale shape: THREE map-side-combined scans of the (nation, cents)
-  * projection (mean+scale, iter-1, iter-2) — each collapses to the
-  * ≤|nations| frame rebroadcast to the next; no window ever touches
-  * the corpus. At 100 TB that is 3 columnar scans of a 2-column
-  * projection, the honest cost of 2 IRLS rounds. */
+  * Scale shape: ONE map-side-combined scan of the (nation, cents)
+  * projection collapses the corpus to its value histogram (bounded by
+  * the cents grid); the mean, the scale and both IRLS iterations then
+  * run over the histogram, each collapsing to the ≤|nations| frame
+  * rebroadcast to the next. No window ever touches the corpus: at
+  * 100 TB that is 1 columnar scan of a 2-column projection plus one
+  * histogram-sized shuffle (see `huberMean`). */
 object Huber {
 
   /** Huber tuning constant ×1000 (1.345 — 95% efficiency at the

@@ -116,8 +116,8 @@ object Dedup {
 
   /** §2.21 exact dedup: canonical = min doc_id per content hash.
     *
-    * Window formulation, not groupBy + join-back (round-10 triage,
-    * tools/TriageDedupExact): the join-back self-joins a DERIVED
+    * Window formulation, not groupBy + join-back (measured per stage
+    * at sf5): the join-back self-joins a DERIVED
     * frame, so Spark re-evaluates the md5+normalize scan on BOTH
     * sides (the scan is the expensive part — 35 s of the 143 s stage
     * CPU at sf5) and then pays a second corpus shuffle for the join.

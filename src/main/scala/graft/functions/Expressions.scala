@@ -835,13 +835,13 @@ case class EqualCount(left: Expression, right: Expression)
   * time + 1.4 s GC at sf0.1, ~65 % of the query); on distinct sorted
   * inputs the merge count is the same integer with no allocation.
   * Callers OWN the precondition (arrays sorted ascending, elements
-  * distinct, no nulls — `sort_array(array_distinct(...))` upstream);
-  * unsorted input would undercount, so the sort lives next to the
-  * array construction, never separated from it. */
+  * distinct, no null elements — `sort_array(array_distinct(...))`
+  * upstream); unsorted input would undercount, so the sort lives next
+  * to the array construction, never separated from it. A null array
+  * gives null (nullability is inherited from the children). */
 case class SortedIntersectCount(left: Expression, right: Expression)
     extends BinaryExpression with KernelCodegen2 {
   override def dataType: DataType = LongType
-  override def nullable: Boolean = false
   override def compute2(l: Any, r: Any): Any = {
     val a = l.asInstanceOf[ArrayData]
     val b = r.asInstanceOf[ArrayData]
@@ -872,11 +872,11 @@ case class SortedIntersectCount(left: Expression, right: Expression)
   * the threshold plumbing); at 15 M candidate checks per million
   * input rows the verifier IS the hot loop. Byte-level comparison:
   * identical to character edits for ASCII (all candidate keys here);
-  * multi-byte codepoints would count per-byte. */
+  * multi-byte codepoints would count per-byte. A null string gives
+  * null. */
 case class BoundedLev1(left: Expression, right: Expression)
     extends BinaryExpression with KernelCodegen2 {
   override def dataType: DataType = IntegerType
-  override def nullable: Boolean = false
   override def compute2(l: Any, r: Any): Any = {
     val a = l.asInstanceOf[UTF8String]
     val b = r.asInstanceOf[UTF8String]

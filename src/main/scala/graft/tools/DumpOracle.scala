@@ -7,10 +7,7 @@ object DumpOracle {
   def main(args: Array[String]): Unit = {
     val out = args(0)
     val entries = graft.SparkEntry.oracleSql.toSeq.sortBy(_._1).map {
-      case (k, v) =>
-        val esc = v.replace("\\", "\\\\").replace("\"", "\\\"")
-          .replace("\n", "\\n").replace("\t", "\\t")
-        s""""$k": "$esc""""
+      case (k, v) => s"${graft.Verify.jsonString(k)}: ${graft.Verify.jsonString(v)}"
     }
     java.nio.file.Files.writeString(java.nio.file.Paths.get(out),
       entries.mkString("{", ",\n", "}"))

@@ -56,6 +56,28 @@ class FunctionsSpec extends AnyFunSuite {
     assert(f2.toSeq == r2.toSeq)
   }
 
+  test("SortedIntersectCount and BoundedLev1 give null on null input in generated code") {
+    import org.apache.spark.sql.execution.WholeStageCodegenExec
+    // spark.range keeps the projection in whole-stage codegen (a local
+    // Seq would be folded and evaluated by the interpreter instead)
+    val df = spark.range(3).select(
+      when(col("id") === 0, lit(null).cast("array<bigint>"))
+        .otherwise(array(lit(1L), lit(3L))).as("a"),
+      array(lit(1L), lit(2L), lit(3L)).as("b"),
+      when(col("id") === 1, lit(null).cast("string"))
+        .otherwise(lit("kitten")).as("s"),
+      lit("sitten").as("t"))
+      .select(native.sorted_intersect_count(col("a"), col("b")).as("n"),
+        native.bounded_lev1(col("s"), col("t")).as("d"))
+    assert(df.queryExecution.executedPlan.collect {
+      case w: WholeStageCodegenExec => w }.nonEmpty)
+    assert(df.schema("n").nullable && df.schema("d").nullable)
+    val rows = df.collect()
+    assert(rows(0).isNullAt(0) && rows(0).getInt(1) == 1)
+    assert(rows(1).getLong(0) == 2L && rows(1).isNullAt(1))
+    assert(rows(2).getLong(0) == 2L && rows(2).getInt(1) == 1)
+  }
+
   test("MinHashSignature equals per-permutation array_min") {
     import graft.dedup.Dedup
     val df = Seq("one two three four five six seven").toDF("text")

@@ -58,6 +58,13 @@ class VerifyGateSpec extends AnyFunSuite {
     assert(spark.read.parquet(s"$out/r").count() > 0)
   }
 
+  test("jsonString: every control char, quote and backslash parse back unchanged") {
+    val raw = (0 until 0x20).map(_.toChar).mkString + "\"\\ SELECT 'x'"
+    val parsed = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readValue(Verify.jsonString(raw), classOf[String])
+    assert(parsed === raw)
+  }
+
   test("registry totality: every SparkEntry query has oracle SQL (driver compare covers all)") {
     // duplicated from EntrySpec on purpose: THIS spec is the gate
     // contract in one place — if a query is registered without an
