@@ -1,6 +1,7 @@
 package graft
 
-/** Benchmark main. Times every `SparkEntry.queries` entry on
+/** Benchmark main. Times a full materialization (`SparkEntry.materialize`,
+  * a `noop` write) of every selected query on
   * `SPARK_GRAFT_SF_DIR`, `SPARK_GRAFT_BENCH_REPS` times each
   * (default 3), and reports the per-query MEDIAN so one contended rep
   * on a shared host cannot masquerade as a plan regression (this cost
@@ -13,26 +14,17 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
     require(reps >= 1, s"SPARK_GRAFT_BENCH_REPS must be >= 1, got $reps")
-    // single config point: tuned defaults + the §5 shuffle-sizing rule
-    val spark = GraftSession.build(s"local[$cpus]", "graft-bench",
-      dataDir = Some(sfDir), cores = cpus.toInt)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session("graft-bench", Some(sfDir))
     // Untimed session warmup: JIT/codegen bootstrap + parquet footers,
     // so the first measured query isn't charged for JVM cold start.
     try {
       graft.Tables.names.foreach(n => graft.Tables.load(spark, sfDir, n).count())
     } catch { case _: Throwable => () }
-    // deterministic alphabetical order: hash-map iteration order would
-    // shuffle which queries absorb residual warm-up round to round
-    // (dev convenience: SPARK_GRAFT_ONLY=a,b,c times a subset — the
-    // driver never sets it, so its artifact always covers everything)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+    // alphabetical order, so the same queries absorb residual warm-up
+    // every round (SPARK_GRAFT_ONLY=a,b,c times a subset)
+    val ordered = SparkEntry.selected()
     // rep-major (full sweep per rep, queries inside): back-to-back reps
     // of one query share a hot cache the driver run wouldn't, and the
     // sweep spacing makes the medians robust to a contention burst
@@ -49,14 +41,14 @@ object Bench {
       for ((name, fn) <- ordered if !failed.contains(name)) {
         val t0 = System.nanoTime()
         try {
-          fn(spark, sfDir).count()
+          SparkEntry.materialize(fn(spark, sfDir))
           times(name) = ((System.nanoTime() - t0) / 1e9) :: times.getOrElse(name, Nil)
         } catch { case e: Throwable =>
-          System.err.println(s"BENCH FAIL $name: ${e.getClass.getSimpleName}: ${e.getMessage}")
+          errors(name) = SparkEntry.failureText(e)
+          System.err.println(s"BENCH FAIL $name: ${errors(name)}")
           // full stack: an OOM's allocation site is the whole triage
           e.printStackTrace()
           failed += name
-          errors(name) = s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(120)}"
         }
       }
     }

@@ -1,8 +1,8 @@
 package graft
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each selected SparkEntry query's result → parquet,
+  * plus oracle_sql.json, for the DuckDB compare (`tools/check.py`). */
 object Verify {
 
   /** JSON string literal: escapes backslash, quote, and ALL control
@@ -27,7 +27,7 @@ object Verify {
     * vanish from the driver's compare (the round-5 silent-shrink hole).
     * Returns failures in run order as (name, "Class: message"). */
   def run(spark: SparkSession, sfDir: String, outDir: String,
-      queries: Map[String, (SparkSession, String) => DataFrame],
+      queries: Iterable[(String, (SparkSession, String) => DataFrame)],
       oracleSql: Map[String, String]): List[(String, String)] = {
     new java.io.File(outDir).mkdirs()
     var failures = List.empty[(String, String)]
@@ -35,8 +35,9 @@ object Verify {
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        failures ::= (name, s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(300)}")
+        val msg = SparkEntry.failureText(e)
+        System.err.println(s"[verify] $name failed: $msg")
+        failures ::= (name, msg)
       }
     }
     val json = oracleSql
@@ -56,18 +57,9 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // single config point: tuned defaults + the §5 shuffle-sizing rule
-    val spark = GraftSession.build(s"local[$cpus]", "graft-verify",
-      dataDir = Some(sfDir), cores = cpus.toInt)
-    spark.sparkContext.setLogLevel("WARN")
-    // dev convenience: SPARK_GRAFT_ONLY=a,b,c dumps a subset (the
-    // driver never sets it, so its gate always runs everything)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    run(spark, sfDir, outDir,
-      SparkEntry.queries.filter { case (name, _) => only.forall(_.contains(name)) },
-      SparkEntry.oracleSql)
+    val spark = SparkEntry.session("graft-verify", Some(sfDir))
+    // SPARK_GRAFT_ONLY=a,b,c dumps a subset
+    run(spark, sfDir, outDir, SparkEntry.selected(), SparkEntry.oracleSql)
     spark.stop()
   }
 }

@@ -60,9 +60,9 @@ object Eval {
     ranked.agg(
       sum("np").as("n_pos"), sum("nn").as("n_neg"), sum("rs2").as("rs2"))
       .select(col("n_pos"), col("n_neg"),
-        round((col("rs2") - col("n_pos") * (col("n_pos") + 1))
-          .cast("double") /
-          (col("n_pos") * col("n_neg") * 2).cast("double"), 6).as("auc"))
+        round(try_divide((col("rs2") - col("n_pos") * (col("n_pos") + 1))
+          .cast("double"),
+          (col("n_pos") * col("n_neg") * 2).cast("double")), 6).as("auc"))
       .withColumn("gini", round(col("auc") * 2 - 1, 6))
   }
 
@@ -1050,7 +1050,7 @@ object Eval {
       col("reliability"), col("resolution"),
       round(bs - (col("reliability") - col("resolution") + unc), 8)
         .as("decomp_gap"),
-      round(lit(1.0) - bs / unc, 6).as("skill"))
+      round(lit(1.0) - try_divide(bs, unc), 6).as("skill"))
   }
 
   val brierDecompositionSql: String = {

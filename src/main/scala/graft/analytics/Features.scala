@@ -48,7 +48,7 @@ object Features {
       .withColumn("mean_target", d("s") / 100.0 / col("n"))
       .withColumn("prior", d("st") / 100.0 / col("nt"))
       .withColumn("sd_target",
-        sqrt((d("s2") - d("s") * d("s") / col("n")) / (col("n") - 1))
+        sqrt(try_divide(d("s2") - d("s") * d("s") / col("n"), col("n") - 1))
           / 100.0)
       .select(col("category"), col("n"),
         round(col("mean_target"), 4).as("mean_target"),
@@ -116,7 +116,7 @@ object Features {
           col("nx").as("card_x"), col("ny").as("card_y"),
           round(col("hx"), 6).as("h_x"), round(col("hy"), 6).as("h_y"),
           round(col("mi"), 6).as("mi"),
-          round(col("mi") / sqrt(col("hx") * col("hy")), 6).as("nmi"))
+          round(try_divide(col("mi"), sqrt(col("hx") * col("hy"))), 6).as("nmi"))
     }
     val cust = Tables.customer(spark, dir)
       .select(col("c_nationkey").cast("string"), col("c_mktsegment"))

@@ -55,12 +55,12 @@ object Pricing {
     def d(c: String) = col(c).cast("double")
     m.select(col("p_brand"), col("n_parts"),
       col("sy").cast("long").as("units_total"),
-      round((n * d("sxy") - d("sx") * d("sy")) /
-        (n * d("sxx") - d("sx") * d("sx")) * 100.0, 6)
+      round(try_divide(n * d("sxy") - d("sx") * d("sy"),
+        n * d("sxx") - d("sx") * d("sx")) * 100.0, 6)
         .as("slope_units_per_dollar"),
-      round((n * d("sxy") - d("sx") * d("sy")) /
+      round(try_divide(n * d("sxy") - d("sx") * d("sy"),
         sqrt((n * d("sxx") - d("sx") * d("sx")) *
-          (n * d("syy") - d("sy") * d("sy"))), 6).as("pearson_r"))
+          (n * d("syy") - d("sy") * d("sy")))), 6).as("pearson_r"))
       .orderBy("p_brand")
   }
 

@@ -398,8 +398,8 @@ object Series {
       count(lit(1)).as("n_hours"))
     def d(c: String) = col(c).cast("double")
     val mean = d("s1") / col("n_days")
-    val vars = (d("s2") - d("s1") * d("s1") / col("n_days")) /
-      (col("n_days") - 1)
+    val vars = try_divide(d("s2") - d("s1") * d("s1") / col("n_days"),
+      col("n_days") - 1)
     val hEnt = log(d("nh")) - col("slc") / d("nh")
     daily.join(hstats, "event_type")
       .select(col("event_type"), col("n_days"),
@@ -715,9 +715,9 @@ object Series {
         count(lit(1)).as("n_days"), sum("n").as("s1"),
         sum(col("n") * col("n")).as("s2"))
       .withColumn("mu", col("s1").cast("double") / col("n_days"))
-      .withColumn("sd", sqrt(
-        (col("s2").cast("double") - col("n_days").cast("double") *
-          col("mu") * col("mu")) / (col("n_days").cast("double") - 1.0)))
+      .withColumn("sd", sqrt(try_divide(
+        col("s2").cast("double") - col("n_days").cast("double") *
+          col("mu") * col("mu"), col("n_days").cast("double") - 1.0)))
     stats
       .withColumn("st", expr(s"""aggregate(
         transform(series, p -> named_struct('x', CAST(p.n AS DOUBLE))),

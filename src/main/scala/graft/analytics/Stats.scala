@@ -98,13 +98,13 @@ object Stats {
     agg.select(col("n_a"), col("n_b"),
       ((col("rs2a") - col("n_a") * (col("n_a") + 1)).cast("double") / 2.0)
         .as("u_stat"),
-      round(((col("rs2a") - col("n_a") * (col("n_a") + 1)).cast("double") / 2.0
-        - col("n_a").cast("double") * col("n_b").cast("double") / 2.0) /
+      round(try_divide((col("rs2a") - col("n_a") * (col("n_a") + 1)).cast("double") / 2.0
+        - col("n_a").cast("double") * col("n_b").cast("double") / 2.0,
         sqrt(col("n_a").cast("double") * col("n_b").cast("double") / 12.0 *
           ((col("n_a") + col("n_b") + 1).cast("double") -
-            col("t3t").cast("double") /
-            ((col("n_a") + col("n_b")).cast("double") *
-             (col("n_a") + col("n_b") - 1).cast("double")))), 4).as("z_stat"))
+            try_divide(col("t3t").cast("double"),
+              (col("n_a") + col("n_b")).cast("double") *
+              (col("n_a") + col("n_b") - 1).cast("double"))))), 4).as("z_stat"))
   }
 
   val mannWhitneySql: String =
@@ -762,7 +762,7 @@ object Stats {
       " AS t(mde_pct)")
     def d(c: String) = col(c).cast("double")
     val mean = d("s") / col("n")                       // cents
-    val variance = (d("s2") - d("s") * d("s") / col("n")) / (col("n") - 1)
+    val variance = try_divide(d("s2") - d("s") * d("s") / col("n"), col("n") - 1)
     val delta = mean * col("mde_pct") / 100.0          // cents
     val nArm = ceil(lit(2.0) * (lit(1.96) + lit(0.8416)) *
       (lit(1.96) + lit(0.8416)) * variance / (delta * delta)).cast("long")
@@ -1307,9 +1307,9 @@ object Stats {
     def d(c: Column) = c.cast("double")
     def corr(n: Column, s1: Column, s2: Column, q1: Column, q2: Column,
              s12: Column): Column =
-      round((d(n) * d(s12) - d(s1) * d(s2)) /
+      round(try_divide(d(n) * d(s12) - d(s1) * d(s2),
         sqrt((d(n) * d(q1) - d(s1) * d(s1)) *
-          (d(n) * d(q2) - d(s2) * d(s2))), 6)
+          (d(n) * d(q2) - d(s2) * d(s2)))), 6)
     agg.select(col("n").as("n_items"),
       corr(col("n"), col("su"), col("sv"), col("su2"), col("sv2"),
         col("suv")).as("spearman_rho"),

@@ -252,13 +252,12 @@ object GraphAnn {
     // released as soon as its round's edges exist — the r13 sf20 build
     // measured ~26 GB of accumulated round-scoped candidate blocks
     // when release waited for the end. Single-chunk edges checkpoint
-    // lazily, so there the release must wait (localCheckpoint lineage
+    // lazily, so there nothing is released (localCheckpoint lineage
     // cannot recompute released blocks); those corpora are ≤100 k
     // vectors and the blocks are small.
     def release(df: DataFrame): Unit =
       org.apache.spark.sql.graftbridge.Bridge.releaseStorage(df)
-    var spent = List(initPairs)
-    if (chunks > 1) { release(initPairs); spent = Nil }
+    if (chunks > 1) release(initPairs)
     for (_ <- 1 to rounds) {
       // undirected view: nbr-of-nbr candidates flow along AND against
       // edges (the paper's "general" join); mutual pairs appear twice
@@ -274,16 +273,8 @@ object GraphAnn {
           .hint("shuffle_hash"), Seq("node", "nbr"), "left_anti")
         .localCheckpoint(eager = false)
       edges = scoredTopK(cand, v, kg, chunks, prior = Some(edges))
-      if (chunks > 1) release(cand) else spent ::= cand
+      if (chunks > 1) release(cand)
     }
-    // Candidate checkpoints are round-scoped scratch — release their
-    // blocks (plain unpersist is a no-op on checkpoint storage; the
-    // Bridge.releaseStorage class). Only safe on the chunked path,
-    // where every consumer (the per-chunk edge frames) is ALREADY
-    // eagerly materialized; single-chunk edges checkpoint lazily and
-    // localCheckpoint lineage cannot recompute released blocks.
-    if (chunks > 1)
-      spent.foreach(org.apache.spark.sql.graftbridge.Bridge.releaseStorage)
     edges
   }
 

@@ -50,8 +50,8 @@ object Concentration {
           .as("w")))
     docs.unionAll(ords).unionAll(rev)
       .withColumn("hhi_normalized",
-        round((col("hhi") - lit(1.0) / col("n_groups")) /
-          (lit(1.0) - lit(1.0) / col("n_groups")), 6))
+        round(try_divide(col("hhi") - lit(1.0) / col("n_groups"),
+          lit(1.0) - lit(1.0) / col("n_groups")), 6))
       .orderBy("dim")
   }
 

@@ -33,8 +33,8 @@ object Drift {
       sum(when(col("is_a"), 1L).otherwise(0L)).as("n_a"),
       sum(when(!col("is_a"), 1L).otherwise(0L)).as("n_b"))
     val tot = agg.agg(sum("n_a").as("ta"), sum("n_b").as("tb"))
-    val pa = col("n_a") / col("ta")
-    val pb = col("n_b") / col("tb")
+    val pa = try_divide(col("n_a"), col("ta"))
+    val pb = try_divide(col("n_b"), col("tb"))
     val paE = greatest(pa, lit(Eps))
     val pbE = greatest(pb, lit(Eps))
     agg.crossJoin(broadcast(tot))
@@ -85,7 +85,7 @@ object Drift {
       .agg(sum("n_a").as("ta"), sum("n_b").as("tb"))
     cum.join(broadcast(tot), "event_type")
       .withColumn("gap",
-        abs(col("ca") / col("ta") - col("cb") / col("tb")))
+        abs(try_divide(col("ca"), col("ta")) - try_divide(col("cb"), col("tb"))))
       .groupBy("event_type")
       .agg(max("ta").cast("long").as("n_a"),
         max("tb").cast("long").as("n_b"),

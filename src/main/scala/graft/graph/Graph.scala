@@ -597,9 +597,9 @@ object Graph {
       .select(col("n_nodes"),
         (col("m_dir") / 2).cast("long").as("n_edges"),
         round(d("sx") / m, 4).as("avg_deg"),
-        round((m * d("sxy") - d("sx") * d("sy")) /
+        round(try_divide(m * d("sxy") - d("sx") * d("sy"),
           sqrt((m * d("sxx") - d("sx") * d("sx")) *
-            (m * d("syy") - d("sy") * d("sy"))), 6).as("assortativity"))
+            (m * d("syy") - d("sy") * d("sy")))), 6).as("assortativity"))
   }
 
   val graphAssortativitySql: String =

@@ -76,8 +76,8 @@ object ClusterStats {
     val n = col("n").cast("double")
     val n1 = col("n1").cast("double")
     val n0 = n - n1
-    val m1 = col("s1").cast("double") / n1
-    val m0 = (col("s") - col("s1")).cast("double") / n0
+    val m1 = try_divide(col("s1").cast("double"), n1)
+    val m0 = try_divide((col("s") - col("s1")).cast("double"), n0)
     val sd = sqrt(col("s2").cast("double") / n -
       (col("s").cast("double") / n) * (col("s").cast("double") / n))
     m.select(col("n").as("n_docs"), col("n1").as("n_dup_docs"),

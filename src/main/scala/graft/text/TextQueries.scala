@@ -1038,11 +1038,11 @@ object TextQueries {
         expr("aggregate(a, 0D, (acc, s) -> acc + s.lx * s.ly)").as("slxly"),
         expr("aggregate(a, 0D, (acc, s) -> acc + s.lx * s.lx)").as("slxlx"))
       .select(col("n").as("n_checkpoints"),
-        round((col("n") * col("slxly") - col("slx") * col("sly")) /
-          (col("n") * col("slxlx") - col("slx") * col("slx")), 6).as("beta"),
+        round(try_divide(col("n") * col("slxly") - col("slx") * col("sly"),
+          col("n") * col("slxlx") - col("slx") * col("slx")), 6).as("beta"),
         round((col("sly") -
-          (col("n") * col("slxly") - col("slx") * col("sly")) /
-            (col("n") * col("slxlx") - col("slx") * col("slx")) * col("slx"))
+          try_divide(col("n") * col("slxly") - col("slx") * col("sly"),
+            col("n") * col("slxlx") - col("slx") * col("slx")) * col("slx"))
           / col("n"), 6).as("intercept"))
   }
 

@@ -1,7 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import graft.SparkEntry
 
 /** Degenerate-corpus gate (VERDICT r08 #9): Spark 4 ANSI mode ERRORS
   * on division by zero for every numeric type — including double,
@@ -12,7 +12,9 @@ import org.apache.spark.sql.functions._
   * corpus — ONE row per fact table, ONE user, ONE event type, ZERO
   * variance, a single calendar instant — and runs EVERY registered
   * query against it. n−1 terms, empty experiment arms, zero spans,
-  * and all-equal-values variances all collapse to zero here, so every
+  * and all-equal-values variances all collapse to zero here, and every
+  * query is fully materialized (`SparkEntry.materialize`: every row and
+  * column, where a `count()` would prune unread columns), so every
   * unguarded division fires. A query may legitimately return zero
   * rows; it must never throw.
   *
@@ -67,35 +69,25 @@ object DegenerateGate {
     dir
   }
 
-  /** Run every query against `dir`; return (name → error) for queries
-    * that THREW (empty result frames are fine). */
+  /** Fully materialize every selected query against `dir`; return
+    * (name → error) for queries that THREW (empty results are fine). */
   def run(spark: SparkSession, dir: String): Map[String, String] = {
     graft.Caches.clearAll()
     val out = scala.collection.mutable.Map.empty[String, String]
-    for ((name, fn) <- graft.SparkEntry.queries.toSeq.sortBy(_._1)) {
-      try { fn(spark, dir).count(); () }
-      catch { case e: Throwable =>
-        val root = {
-          var c: Throwable = e
-          while (c.getCause != null && c.getCause != c) c = c.getCause
-          c
-        }
-        out(name) = s"${root.getClass.getSimpleName}: " +
-          String.valueOf(root.getMessage).take(160).replace('\n', ' ')
-      }
+    for ((name, fn) <- SparkEntry.selected()) {
+      try SparkEntry.materialize(fn(spark, dir))
+      catch { case e: Throwable => out(name) = SparkEntry.failureText(e) }
     }
     graft.Caches.clearAll()
     out.toMap
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = graft.GraftSession.build("local[8]", "graft-degen-gate",
-      cores = 8)
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SparkEntry.session("graft-degen-gate", None, "ERROR")
     val dir = writeCorpus(spark)
     val errs = run(spark, dir)
     errs.toSeq.sortBy(_._1).foreach { case (n, e) => println(s"DEGEN FAIL $n: $e") }
-    println(s"DEGEN SUMMARY: ${errs.size} of ${graft.SparkEntry.queries.size} queries threw")
+    println(s"DEGEN SUMMARY: ${errs.size} of ${SparkEntry.selected().size} queries threw")
     spark.stop()
     if (errs.nonEmpty) sys.exit(1)
   }

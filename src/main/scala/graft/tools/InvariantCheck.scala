@@ -1476,10 +1476,7 @@ object InvariantCheck {
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/repo/testdata/sf1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = graft.GraftSession.build(s"local[$cpus]", "graft-invariants",
-      dataDir = Some(dir), cores = cpus)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SparkEntry.session("graft-invariants", Some(dir))
     val t0 = System.nanoTime()
     // SPARK_GRAFT_INV_ONLY=clusters runs just the CC family — used to
     // record rounds-to-converge at sf5 (VERDICT r08 #8) without paying

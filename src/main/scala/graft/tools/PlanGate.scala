@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.LambdaFunction
 import org.apache.spark.sql.execution._
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -43,12 +42,19 @@ import graft.SparkEntry
   * exploding per-group collected lists can reinflate to corpus size,
   * so a lambda/window above an explode must re-bound first.
   *
-  * Static mode matches the PLANS.md artifact (AQE off, sf0.01 stats):
+  * Static mode reads the plan before AQE (sf0.01 stats by default):
   * the gate reads plan SHAPE, which Catalyst fixes at compile time;
   * AQE only re-picks join strategies within the same shape class.
   *
-  * Usage: runMain graft.tools.PlanGate [dir] [only=<substr>]
-  * Exit 1 on any violation; prints one line per query.
+  * The same loop writes the plan dump `out` (default PLANS.md): one
+  * `## <query>` section per query holding a fenced plan — the
+  * `explain("formatted")` text in static mode, the final adaptive plan
+  * in `executed` mode. `tools/plandiff.py` diffs two dumps' join
+  * strategies (e.g. sf0.01 static vs sf1 executed).
+  *
+  * Usage: runMain graft.tools.PlanGate [dir] [out] [executed] [debug]
+  * (SPARK_GRAFT_ONLY=a,b,c gates a subset). Exit 1 on any violation;
+  * prints one line per query.
   */
 object PlanGate {
 
@@ -159,9 +165,9 @@ object PlanGate {
   }
 
   def main(args: Array[String]): Unit = {
-    val dir = if (args.nonEmpty && !args(0).startsWith("only=") &&
-      args(0) != "executed") args(0) else "/root/testdata/sf0.01"
-    val only = args.collectFirst { case a if a.startsWith("only=") => a.drop(5) }
+    val (flags, pos) = args.partition(Set("executed", "debug"))
+    val dir = pos.headOption.getOrElse("/root/testdata/sf0.01")
+    val out = pos.lift(1).getOrElse("PLANS.md")
     // `executed` mode (VERDICT r11 #8): run each query at the given SF
     // under the BENCH config (AQE on, real statistics) and gate the
     // FINAL adaptive plan — the static walk reads compile-time shape,
@@ -170,38 +176,43 @@ object PlanGate {
     // come back as an unbounded broadcast (the round-5 trap). This
     // asserts the pinned shuffle_hash/broadcast choices survive real
     // sf1 statistics.
-    val executed = args.contains("executed")
-    val spark: SparkSession =
-      if (executed) graft.GraftSession.build("local[32]", "graft-plangate",
-        dataDir = Some(dir), cores = 32)
-      else SparkSession.builder().master("local[4]")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val executed = flags.contains("executed")
+    val dbg = if (flags.contains("debug")) Some((s: String) => println(s)) else None
+    val spark = SparkEntry.session("graft-plangate", Some(dir), "ERROR")
+    val dump = new StringBuilder(
+      if (executed) s"# Physical plans (EXECUTED adaptive plans, $dir, AQE on)\n"
+      else s"# Physical plans (explain formatted, $dir, AQE off at plan time)\n")
     var bad = 0
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(name.contains) }
-      .foreach { case (name, fn) =>
-        graft.Caches.clearAll()
-        val dbg = if (args.contains("debug"))
-          Some((s: String) => println(s)) else None
-        val vs =
-          try {
-            val df = fn(spark, dir)
-            if (executed) {
-              // execute THIS plan (toRdd), so the AdaptiveSparkPlan is
-              // finalized with runtime stats before the walk
-              df.queryExecution.toRdd.count()
-              violations(df.queryExecution.executedPlan, dbg)
-            } else violations(df.queryExecution.sparkPlan, dbg)
-          } catch { case e: Throwable => Seq(s"ERROR building plan: $e") }
-        if (vs.isEmpty) println(s"[plangate] OK   $name")
-        else { bad += 1; vs.foreach(v => println(s"[plangate] FAIL $name — $v")) }
-      }
+    for ((name, fn) <- SparkEntry.selected()) {
+      graft.Caches.clearAll() // per-query cost, not memoized reuse
+      dump.append(s"\n## $name\n\n```\n")
+      val vs =
+        try {
+          val df = fn(spark, dir)
+          if (executed) {
+            // execute THIS plan (toRdd), so its AdaptiveSparkPlan is
+            // finalized with runtime stats before the walk; a write
+            // would finalize a separate QueryExecution's plan instead
+            df.queryExecution.toRdd.count()
+            // the FINAL plan prints first, then the initial plan section
+            dump.append(df.queryExecution.executedPlan.toString
+              .split("== Initial Plan ==")(0))
+            violations(df.queryExecution.executedPlan, dbg)
+          } else {
+            dump.append(df.queryExecution.explainString(FormattedMode))
+            violations(df.queryExecution.sparkPlan, dbg)
+          }
+        } catch { case e: Throwable =>
+          val err = s"ERROR: ${SparkEntry.failureText(e)}"
+          dump.append(err)
+          Seq(err)
+        }
+      dump.append("\n```\n")
+      if (vs.isEmpty) println(s"[plangate] OK   $name")
+      else { bad += 1; vs.foreach(v => println(s"[plangate] FAIL $name — $v")) }
+    }
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(out), dump.toString)
+    println(s"[plangate] wrote $out")
     println(if (bad == 0) s"[plangate] all plans clean"
             else s"[plangate] $bad queries violate plan invariants")
     spark.stop()

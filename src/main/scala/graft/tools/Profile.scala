@@ -66,11 +66,7 @@ object Profile {
     val name = args(0)
     val reps = if (args.length > 1) args(1).toInt else 2
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
-      .getOrElse(Runtime.getRuntime.availableProcessors())
-    val spark = graft.GraftSession.build(s"local[$cpus]", "graft-profile",
-      dataDir = Some(dir), cores = cpus)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SparkEntry.session("graft-profile", Some(dir))
     val coll = new Collector
     spark.sparkContext.addSparkListener(coll)
     val fn = graft.SparkEntry.queries(name)
@@ -78,11 +74,11 @@ object Profile {
       graft.Caches.clearAll()
       coll.clear()
       val t0 = System.nanoTime()
-      fn(spark, dir).write.format("noop").mode("overwrite").save()
+      graft.SparkEntry.materialize(fn(spark, dir))
       val sec = (System.nanoTime() - t0) / 1e9
       // listener bus is async; give it a beat to drain before reporting
       Thread.sleep(300)
-      println(f"[profile] $name rep$r noop $sec%7.2f s  (cpus=$cpus)")
+      println(f"[profile] $name rep$r noop $sec%7.2f s  (cpus=${spark.sparkContext.defaultParallelism})")
       coll.report()
       println(s"  persisted RDDs after rep$r: ${spark.sparkContext.getPersistentRDDs.size}")
     }

@@ -65,6 +65,29 @@ class VerifyGateSpec extends AnyFunSuite {
     assert(parsed === raw)
   }
 
+  test("materialize computes every column: a division by zero a count() prunes still throws") {
+    import org.apache.spark.sql.functions._
+    val df = spark.range(1).select((lit(1.0) / lit(0.0)).as("x"))
+    assert(df.count() === 1)
+    val e = intercept[Exception](SparkEntry.materialize(df))
+    assert(SparkEntry.failureText(e).contains("DIVIDE_BY_ZERO"), SparkEntry.failureText(e))
+  }
+
+  test("selected: exact names only, in name order") {
+    val names = SparkEntry.selected(Some("top_k, q1_agg,q1,dedup")).map(_._1)
+    assert(names === Seq("q1_agg", "top_k"))
+    val all = SparkEntry.selected(None).map(_._1)
+    assert(all === SparkEntry.queries.keys.toSeq.sorted)
+  }
+
+  test("failureText: root cause, one line, at most 300 chars") {
+    val e = new RuntimeException("outer",
+      new IllegalStateException("line one\nline two " + "x" * 400))
+    val t = SparkEntry.failureText(e)
+    assert(t.startsWith("IllegalStateException: line one line two"))
+    assert(t.length === 300)
+  }
+
   test("registry totality: every SparkEntry query has oracle SQL (driver compare covers all)") {
     // duplicated from EntrySpec on purpose: THIS spec is the gate
     // contract in one place — if a query is registered without an
