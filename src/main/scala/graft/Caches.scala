@@ -55,10 +55,6 @@ final class MemoCache[V](maxEntries: Int)(onEvict: V => Unit) {
     }
   }
 
-  def invalidate(spark: SparkSession, dir: String): Unit = synchronized {
-    map.remove(key(spark, dir)).foreach(safeEvict)
-  }
-
   def clear(): Unit = synchronized {
     map.valuesIterator.foreach(safeEvict)
     map.clear()

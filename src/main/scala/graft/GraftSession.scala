@@ -3,9 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** THE single session-config point: every entry main (Bench, Verify,
-  * Profile, PlanGate, DegenerateGate, InvariantCheck, all through
-  * `SparkEntry.session`) and the perfbench harness build their
-  * session here, so the
+  * PlanGate, DegenerateGate, InvariantCheck, all through
+  * `SparkEntry.session`), the test session and the perfbench harness
+  * build their session here, so the
   * tuned defaults — AQE on (runtime re-plan, partition coalescing,
   * skew-join splitting), UTC for oracle parity, nanos-parquet handling
   * for the events table, graft SQL functions registered — and the

@@ -57,9 +57,10 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val spark = SparkEntry.session("graft-verify", Some(sfDir))
     // SPARK_GRAFT_ONLY=a,b,c dumps a subset
-    run(spark, sfDir, outDir, SparkEntry.selected(), SparkEntry.oracleSql)
+    val queries = SparkEntry.selected()
+    val spark = SparkEntry.session("graft-verify", Some(sfDir))
+    run(spark, sfDir, outDir, queries, SparkEntry.oracleSql)
     spark.stop()
   }
 }

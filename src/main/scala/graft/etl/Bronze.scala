@@ -38,9 +38,6 @@ object Bronze {
   def readJson(spark: SparkSession, path: String, schema: StructType): DataFrame =
     spark.read.schema(schema).json(path)
 
-  def readParquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
-
   /** Name of the quarantine column carrying the raw malformed record. */
   val CorruptCol = "_corrupt_record"
 

@@ -2,7 +2,6 @@ package graft.etl
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 
 /** Silver-layer cleansing: imputation stats, imputation, clamping, dedup.
   *
@@ -147,11 +146,6 @@ object Silver {
     }.toMap
   }
 
-  /** Single-column exact median (see [[medians]]). */
-  def medianExact(df: DataFrame, c: String, buckets: Int = 1000): Double =
-    medians(df, Seq(c), buckets)(c)
-
-
   /** Medians + modes with the two stat jobs submitted CONCURRENTLY
     * (Spark schedules independent jobs in parallel; the two scans
     * overlap instead of serializing — the reference computes both in
@@ -222,12 +216,5 @@ object Silver {
     df.groupBy(keys.map(col): _*)
       .agg(min_by(all, struct(order.map(col): _*)).as("_row"))
       .select(df.columns.map(c => col(s"_row.$c")): _*)
-  }
-
-  /** Dedup keep-first via window row_number (general ordering). */
-  def dedupKeepFirstWindow(df: DataFrame, keys: Seq[String], order: Seq[Column]): DataFrame = {
-    val w = Window.partitionBy(keys.map(col): _*).orderBy(order: _*)
-    df.withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") === 1).drop("_rn")
   }
 }

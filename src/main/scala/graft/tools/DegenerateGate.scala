@@ -83,11 +83,12 @@ object DegenerateGate {
   }
 
   def main(args: Array[String]): Unit = {
+    val total = SparkEntry.selected().size // an unknown name fails before the session
     val spark = SparkEntry.session("graft-degen-gate", None, "ERROR")
     val dir = writeCorpus(spark)
     val errs = run(spark, dir)
     errs.toSeq.sortBy(_._1).foreach { case (n, e) => println(s"DEGEN FAIL $n: $e") }
-    println(s"DEGEN SUMMARY: ${errs.size} of ${SparkEntry.selected().size} queries threw")
+    println(s"DEGEN SUMMARY: ${errs.size} of $total queries threw")
     spark.stop()
     if (errs.nonEmpty) sys.exit(1)
   }

@@ -178,12 +178,13 @@ object PlanGate {
     // sf1 statistics.
     val executed = flags.contains("executed")
     val dbg = if (flags.contains("debug")) Some((s: String) => println(s)) else None
+    val queries = SparkEntry.selected() // an unknown name fails before the session
     val spark = SparkEntry.session("graft-plangate", Some(dir), "ERROR")
     val dump = new StringBuilder(
       if (executed) s"# Physical plans (EXECUTED adaptive plans, $dir, AQE on)\n"
       else s"# Physical plans (explain formatted, $dir, AQE off at plan time)\n")
     var bad = 0
-    for ((name, fn) <- SparkEntry.selected()) {
+    for ((name, fn) <- queries) {
       graft.Caches.clearAll() // per-query cost, not memoized reuse
       dump.append(s"\n## $name\n\n```\n")
       val vs =

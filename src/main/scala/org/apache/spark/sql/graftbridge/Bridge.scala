@@ -10,7 +10,7 @@ import org.apache.spark.sql.execution.SparkStrategy
   * the sql package, the standard extension-library idiom) exposes the
   * ones graft needs: Expression↔Column conversion for the native
   * expressions, DataFrame-from-LogicalPlan for the custom operators,
-  * and live-session strategy/rule injection. */
+  * live-session strategy/rule injection, and a listener-bus drain. */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
@@ -38,6 +38,11 @@ object Bridge {
     }
     df.unpersist(blocking = false)
   }
+
+  /** Block until every event posted so far has reached every listener
+    * (the bus is asynchronous; `listenerBus` is private[spark]). */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 
   /** Idempotently add a planner strategy to an already-built session. */
   def addStrategy(spark: org.apache.spark.sql.SparkSession,

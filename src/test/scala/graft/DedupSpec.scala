@@ -6,7 +6,7 @@ import graft.dedup.Dedup
 import graft.ann.Ann
 
 class DedupSpec extends AnyFunSuite {
-  import SparkTestSession.{spark, sf}
+  import SparkTestSession.{spark, sf, withConf}
   import spark.implicits._
 
   private val base = "the quick brown fox jumps over the lazy dog and runs far away into the woods tonight"
@@ -144,9 +144,7 @@ class DedupSpec extends AnyFunSuite {
     // only the daily batch is exchanged into the index's bucket layout
     val all = Tables.documents(spark, sf)
     Dedup.writeBandIndex(all.filter(col("doc_id") % 5 =!= 4), "dedup_band_idx2", 4)
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force non-broadcast
-    try {
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") { // force non-broadcast
       val joined = Dedup.bandIndex(all.filter(col("doc_id") % 5 === 4))
         .withColumnRenamed("doc_id", "new_id").withColumnRenamed("sigs", "new_sigs")
         .join(spark.table("dedup_band_idx2"), Seq("bkey"))
@@ -163,7 +161,7 @@ class DedupSpec extends AnyFunSuite {
       assert(exchanges == 1, s"want 1 exchange (batch side only), got $exchanges:\n$plan")
       assert(plan.contains("Bucketed: true"),
         s"index side must read its bucketed layout:\n$plan")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   test("band-index maintenance: appends accrete files, compaction drops them, " +
@@ -197,9 +195,7 @@ class DedupSpec extends AnyFunSuite {
       .collect().map(_.toSeq).toSeq
     assert(got == want)
     // the zero-exchange contract survives the catalog-level swap
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val joined = Dedup.bandIndex(batch)
         .withColumnRenamed("doc_id", "new_id").withColumnRenamed("sigs", "new_sigs")
         .join(spark.table(tbl), Seq("bkey"))
@@ -209,7 +205,7 @@ class DedupSpec extends AnyFunSuite {
       val exchanges = "Exchange hashpartitioning".r.findAllIn(plan).length
       assert(exchanges == 1, s"want 1 exchange (batch side only), got $exchanges:\n$plan")
       assert(plan.contains("Bucketed: true"))
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   test("dedup_bloom: verdicts identical to the bloom-free exact formulation") {

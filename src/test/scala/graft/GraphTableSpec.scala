@@ -11,7 +11,7 @@ import graft.ann.GraphAnn
   * reads the table, and the beam-hop edge join must come off the
   * bucketed layout without an exchange on the edge side. */
 class GraphTableSpec extends AnyFunSuite {
-  import SparkTestSession.{spark, sf}
+  import SparkTestSession.{spark, sf, withConf}
 
   private def rows(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
     df.collect().map(_.toSeq).toSeq.sortBy(_.mkString("|"))
@@ -21,8 +21,7 @@ class GraphTableSpec extends AnyFunSuite {
     val emb = Tables.embeddings(spark, sf)
     val recomputed = rows(GraphAnn.graphTopK(emb))
     GraphAnn.writeGraph(spark, sf, "graft_graph_spec", numBuckets = 4)
-    spark.conf.set("spark.graft.graph.table", "graft_graph_spec")
-    try {
+    withConf("spark.graft.graph.table" -> "graft_graph_spec") {
       assert(GraphAnn.persistedGraph(spark).isDefined)
       // the persisted edge set IS the recomputed one
       val e1 = rows(spark.table("graft_graph_spec")
@@ -33,14 +32,12 @@ class GraphTableSpec extends AnyFunSuite {
       // and beam search over it answers identically
       assert(rows(GraphAnn.graphTopK(emb)) == recomputed,
         "ann_graph diverged under the persisted graph table")
-    } finally spark.conf.unset("spark.graft.graph.table")
+    }
   }
 
   test("beam-hop edge join reads the bucketed table without an edge-side exchange") {
     GraphAnn.writeGraph(spark, sf, "graft_graph_spec2", numBuckets = 4)
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       // the hop shape: (probe rows) ⋈ edges on node
       val probe = spark.table("graft_graph_spec2").select(col("node")).limit(50)
       val joined = spark.table("graft_graph_spec2")
@@ -50,6 +47,6 @@ class GraphTableSpec extends AnyFunSuite {
         .split("== Initial Plan ==")(0)
       assert(plan.contains("Bucketed: true"),
         s"edge side must read its bucketed layout:\n$plan")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 }

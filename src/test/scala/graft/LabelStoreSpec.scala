@@ -12,7 +12,7 @@ import graft.pipeline.{ClusterStats, Pipeline, Splits}
   * recomputes or reads the table — and the table side of a label⋈doc
   * join must come off its bucketed layout without an exchange. */
 class LabelStoreSpec extends AnyFunSuite {
-  import SparkTestSession.{spark, sf}
+  import SparkTestSession.{spark, sf, withConf}
 
   private def rows(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
     df.collect().map(_.toSeq.map {
@@ -29,8 +29,7 @@ class LabelStoreSpec extends AnyFunSuite {
       "quality_dup_bias" -> rows(ClusterStats.qualityDupBias(spark, sf)),
       "dedup_keep_best" -> rows(Pipeline.dedupKeepBest(spark, sf)))
     Pipeline.writeLabels(spark, sf, "graft_labels_spec", numBuckets = 4)
-    spark.conf.set("spark.graft.labels.table", "graft_labels_spec")
-    try {
+    withConf("spark.graft.labels.table" -> "graft_labels_spec") {
       // the cached accessor now serves the table, not the memo
       assert(rows(Pipeline.persistedLabels(spark).get) == recomputedLabels)
       assert(rows(Pipeline.dedupClustersCached(spark, sf)) == recomputedLabels)
@@ -43,14 +42,12 @@ class LabelStoreSpec extends AnyFunSuite {
         }
         assert(got == want, s"$name diverged under the persisted label table")
       }
-    } finally spark.conf.unset("spark.graft.labels.table")
+    }
   }
 
   test("label⋈doc join reads the bucketed table without an exchange on the label side") {
     Pipeline.writeLabels(spark, sf, "graft_labels_spec2", numBuckets = 4)
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val joined = Tables.documents(spark, sf).select(col("doc_id"), col("lang"))
         .join(spark.table("graft_labels_spec2"), "doc_id")
       assert(joined.collect().length > 0)
@@ -60,6 +57,6 @@ class LabelStoreSpec extends AnyFunSuite {
       assert(exchanges == 1, s"want 1 exchange (doc side only), got $exchanges:\n$plan")
       assert(plan.contains("Bucketed: true"),
         s"label side must read its bucketed layout:\n$plan")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 }

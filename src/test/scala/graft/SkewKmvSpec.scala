@@ -6,7 +6,7 @@ import graft.operators.Skew
 import graft.functions.KMinValues.kmin_values
 
 class SkewKmvSpec extends AnyFunSuite {
-  import SparkTestSession.{spark, sf}
+  import SparkTestSession.{spark, sf, withConf}
 
   test("salted join returns exactly the plain join's rows") {
     val li = Tables.lineitem(spark, sf)
@@ -58,17 +58,14 @@ class SkewKmvSpec extends AnyFunSuite {
     // the OptimizeSkewedJoin rule must mark the hot partition split —
     // this is the runtime half of the skew story (the salted join
     // below is the static half, for engines/joins AQE can't reach)
-    val confs = Seq(
+    withConf(
       "spark.sql.adaptive.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "1.2",
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "2KB",
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "2KB",
       "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val r = new scala.util.Random(11)
       val big = (0 until 50000).map { i =>
         (if (i % 10 < 3) 0L else 1L + r.nextInt(500), s"payload-$i-${"x" * 40}")
@@ -81,9 +78,6 @@ class SkewKmvSpec extends AnyFunSuite {
       val finalPlan = joined.queryExecution.executedPlan.toString
       assert(finalPlan.contains("skew=true") || finalPlan.contains("skewed"),
         s"AQE did not mark a skew split:\n$finalPlan")
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.streaming.Streaming
 
 class StreamingSpec extends AnyFunSuite {
-  import SparkTestSession.{spark, sf}
+  import SparkTestSession.{spark, sf, withConf}
 
   test("streaming window agg matches the batch twin") {
     val q = Streaming.windowAggStream(Streaming.readEventsStream(spark, sf))
@@ -121,9 +121,8 @@ class StreamingSpec extends AnyFunSuite {
   test("stateful streaming runs on the RocksDB state store with identical results") {
     // production state backend: spillable, not JVM-heap-bound like the
     // default HDFSBackedStateStore — the 100-TB configuration
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConf("spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
       val q = Streaming.funnelStream(Streaming.readEventsStream(spark, sf))
         .toDF.writeStream.outputMode("update")
         .format("memory").queryName("funnel_rocksdb_out").start()
@@ -135,7 +134,7 @@ class StreamingSpec extends AnyFunSuite {
         .collect().map(r => r.getString(1) -> r.getLong(2)).toMap
       assert(lastStage.values.count(_ >= 1).toLong == batch("view"))
       assert(lastStage.values.count(_ >= 3).toLong == batch("purchase"))
-    } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    }
   }
 
   test("streaming drift monitor scores each micro-batch against a reference") {

@@ -70,14 +70,49 @@ class VerifyGateSpec extends AnyFunSuite {
     val df = spark.range(1).select((lit(1.0) / lit(0.0)).as("x"))
     assert(df.count() === 1)
     val e = intercept[Exception](SparkEntry.materialize(df))
-    assert(SparkEntry.failureText(e).contains("DIVIDE_BY_ZERO"), SparkEntry.failureText(e))
+    val text = SparkEntry.failureText(e)
+    assert(text.contains("DIVIDE_BY_ZERO"), text)
+    // the call site survives the 300-char cap: the failure locates itself
+    assert(text.contains("VerifyGateSpec.scala:"), text)
+    assert(text.length <= 300 && !text.contains("\n"), text)
   }
 
   test("selected: exact names only, in name order") {
-    val names = SparkEntry.selected(Some("top_k, q1_agg,q1,dedup")).map(_._1)
+    val names = SparkEntry.selected(Some("top_k, q1_agg")).map(_._1)
     assert(names === Seq("q1_agg", "top_k"))
     val all = SparkEntry.selected(None).map(_._1)
     assert(all === SparkEntry.queries.keys.toSeq.sorted)
+    // a name that is not registered (no substring match) throws and is
+    // named, instead of silently running fewer queries
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.selected(Some("top_k, q1_agg,q1,dedup")))
+    assert(e.getMessage.contains("dedup,q1"), e.getMessage)
+  }
+
+  test("Bench.run leaves one metrics record per (query, rep), stage rows summing to its totals") {
+    val out = s"${tmp()}/bench_out.json"
+    val (med, errors) = Bench.run(spark, sf, SparkEntry.selected(Some("q1_agg,top_k")), 2, out)
+    assert(errors.isEmpty && med.map(_._1) === Seq("q1_agg", "top_k"), errors)
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    val recs = Files.readAllLines(Paths.get(Bench.metricsPath(out))).toArray.toSeq
+      .map(l => json.readTree(l.toString))
+    assert(recs.map(r => (r.get("query").asText, r.get("rep").asInt)) ===
+      Seq(("q1_agg", 1), ("top_k", 1), ("q1_agg", 2), ("top_k", 2)))
+    for (r <- recs) {
+      assert(r.get("error").isNull && r.get("task_s").asDouble > 0, r)
+      assert(r.get("jobs").asInt >= 1 && r.get("stages").asInt >= 1, r)
+      assert(r.get("stages").asInt === r.get("stage_rows").size, r)
+      val rows = (0 until r.get("stage_rows").size).map(r.get("stage_rows").get)
+      for ((col, total, scale) <- Seq(("tasks", "tasks", 1), ("task_ms", "task_s", 1000),
+          ("gc_ms", "gc_s", 1000), ("shuffle_read_bytes", "shuffle_read_bytes", 1),
+          ("shuffle_write_bytes", "shuffle_write_bytes", 1), ("input_bytes", "input_bytes", 1)))
+        assert(rows.map(_.get(col).asLong).sum === math.round(r.get(total).asDouble * scale),
+          s"$col in $r")
+    }
+    // job and stage counts do not drift between reps (wall time does)
+    def counts(rep: Int) = recs.filter(_.get("rep").asInt == rep)
+      .map(r => (r.get("jobs").asInt, r.get("stages").asInt))
+    assert(counts(1) === counts(2))
   }
 
   test("failureText: root cause, one line, at most 300 chars") {
