@@ -14,7 +14,9 @@ import org.apache.spark.sql.SparkSession
   * belongs to the dead session. Keys therefore include the owning
   * session's identity, and the map is a small insertion-order cache:
   * once `maxEntries` is exceeded the oldest entry is dropped and
-  * `onEvict` runs (unpersist, for DataFrame values).
+  * `onEvict` runs (unpersist, for persisted DataFrame values). An entry
+  * owns the [[Barrier]]s its build cuts: they outlive the query that
+  * built it and are released when the entry is evicted or cleared.
   *
   * [[Caches.clearAll]] drops every entry of every registered cache.
   * Bench calls it between reps so reps 2+ time query execution rather
@@ -24,7 +26,8 @@ import org.apache.spark.sql.SparkSession
 final class MemoCache[V](maxEntries: Int)(onEvict: V => Unit) {
   Caches.register(this)
 
-  private val map = scala.collection.mutable.LinkedHashMap.empty[(Int, String), V]
+  private val map =
+    scala.collection.mutable.LinkedHashMap.empty[(Int, String), (V, Barrier.Owner)]
 
   // identityHashCode, not sessionUUID: stable for the session object's
   // lifetime and needs no API beyond java.lang — a stopped session's
@@ -35,15 +38,18 @@ final class MemoCache[V](maxEntries: Int)(onEvict: V => Unit) {
   def getOrElseUpdate(spark: SparkSession, dir: String)(build: => V): V = {
     val k = key(spark, dir)
     synchronized(map.get(k)) match {
-      case Some(v) => v
+      case Some((v, _)) => v
       case None =>
-        val v = build // outside the lock — build runs Spark jobs
+        val owner = new Barrier.Owner
+        // outside the lock — build runs Spark jobs
+        val v = try Barrier.owning(owner)(build)
+          catch { case e: Throwable => owner.release(); throw e }
         synchronized {
           map.get(k) match {
-            case Some(winner) => // lost a concurrent build race
-              safeEvict(v); winner
+            case Some((winner, _)) => // lost a concurrent build race
+              safeEvict((v, owner)); winner
             case None =>
-              map.put(k, v)
+              map.put(k, (v, owner))
               while (map.size > maxEntries) {
                 val (ek, ev) = map.head
                 map.remove(ek)
@@ -62,8 +68,10 @@ final class MemoCache[V](maxEntries: Int)(onEvict: V => Unit) {
 
   def size: Int = synchronized(map.size)
 
-  private def safeEvict(v: V): Unit =
-    try onEvict(v) catch { case _: Throwable => () }
+  private def safeEvict(entry: (V, Barrier.Owner)): Unit = {
+    try onEvict(entry._1) catch { case _: Throwable => () }
+    try entry._2.release() catch { case _: Throwable => () }
+  }
 }
 
 /** Registry of every [[MemoCache]] in the library, so one call can

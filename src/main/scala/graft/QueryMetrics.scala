@@ -9,7 +9,8 @@ import scala.collection.mutable
   * GC ms, shuffle read/write and input bytes); the rows' totals plus
   * CPU s, spill bytes and one task's peak execution memory;
   * `busy_frac = task_s / (wall_s × cores)` (near 0 latency-bound, near 1
-  * work-bound); and the RDDs still persisted after the query. */
+  * work-bound); the barriers the query's scope released, in creation
+  * order; and the RDDs still persisted after that release. */
 private[graft] final class QueryMetrics(spark: SparkSession) extends SparkListener {
   import Verify.jsonString
 
@@ -66,7 +67,8 @@ private[graft] final class QueryMetrics(spark: SparkSession) extends SparkListen
   }.mkString("{", ",", "}")
 
   /** Render the record of the query `reset()` opened, once its events are in. */
-  def record(query: String, rep: Int, wallS: Double, error: Option[String]): String = {
+  def record(query: String, rep: Int, wallS: Double, error: Option[String],
+      barriers: Seq[String]): String = {
     drain()
     synchronized {
       val ss = stages.toSeq
@@ -79,6 +81,7 @@ private[graft] final class QueryMetrics(spark: SparkSession) extends SparkListen
         "shuffle_read_bytes" -> sum(_.shuffleRead), "shuffle_write_bytes" -> sum(_.shuffleWrite),
         "spill_bytes" -> spill, "input_bytes" -> sum(_.input), "peak_exec_mem_bytes" -> peakMem,
         "busy_frac" -> (if (wallS > 0) taskS / (wallS * cores) else 0.0),
+        "barriers" -> barriers.map(jsonString),
         "persisted_rdds" -> spark.sparkContext.getPersistentRDDs.size,
         "stage_rows" -> ss.map { case (id, s) =>
           json("id" -> id, "name" -> s.name, "tasks" -> s.tasks, "wall_ms" -> s.wallMs,

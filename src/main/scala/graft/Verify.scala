@@ -32,9 +32,8 @@ object Verify {
     new java.io.File(outDir).mkdirs()
     var failures = List.empty[(String, String)]
     queries.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      SparkEntry.run(fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/$name"))._1.left.foreach { e =>
         val msg = SparkEntry.failureText(e)
         System.err.println(s"[verify] $name failed: $msg")
         failures ::= (name, msg)

@@ -66,12 +66,11 @@ object Huber {
     * then nation-grain arithmetic. */
   def huberMean(spark: SparkSession, dir: String): DataFrame = {
     // h: (nk, xs, cnt) — the one corpus pass; every downstream frame
-    // is histogram-sized (lazy checkpoint: 4 non-identical consumers)
-    val h = Tables.customer(spark, dir)
+    // is histogram-sized (lazy barrier: 4 non-identical consumers)
+    val h = graft.Barrier("huber.hist", Tables.customer(spark, dir)
       .select(col("c_nationkey").as("nk"),
         expr(s"CAST(round(c_acctbal * 100) AS BIGINT) + $Shift").as("xs"))
-      .groupBy("nk", "xs").agg(count(lit(1)).as("cnt"))
-      .localCheckpoint(eager = false)
+      .groupBy("nk", "xs").agg(count(lit(1)).as("cnt")))
     // pass 1: shifted mean (exact HALF-UP cents); n = Σcnt, Σxs = Σcnt·xs
     val m0 = h.groupBy("nk")
       .agg(sum("cnt").as("n"), sum(col("cnt") * col("xs")).as("sx"))

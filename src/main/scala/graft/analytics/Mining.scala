@@ -577,14 +577,13 @@ object Mining {
     * zero events are absent from the series (inner join on the DAU
     * spine), matching the oracle's range-join form. */
   def rollingActiveUsers(spark: SparkSession, dir: String): DataFrame = {
-    // lazy localCheckpoint: dau/wau/mau are three subtrees over the
-    // same user-day distinct — without the barrier the corpus scan +
-    // distinct runs three times (once per subtree), breaking the
-    // "corpus touched exactly once" contract; the checkpoint
-    // materializes the user-day grain once inside the caller's action
-    val du = Tables.events(spark, dir)
-      .select(col("user_id"), to_date(col("ts")).as("day")).distinct()
-      .localCheckpoint(eager = false)
+    // lazy barrier: dau/wau/mau are three subtrees over the same
+    // user-day distinct — without it the corpus scan + distinct runs
+    // three times (once per subtree), breaking the "corpus touched
+    // exactly once" contract; the barrier materializes the user-day
+    // grain once inside the caller's action
+    val du = graft.Barrier("active_users.user_days", Tables.events(spark, dir)
+      .select(col("user_id"), to_date(col("ts")).as("day")).distinct())
     def rolling(w: Int, name: String): DataFrame = du
       .select(col("user_id"), explode(
         expr(s"sequence(day, date_add(day, ${w - 1}), interval 1 day)")).as("day"))
@@ -637,14 +636,13 @@ object Mining {
     import graft.text.TextFunctions.hash64
     val m = graft.functions.HllSketch.M
     val sp = graft.functions.HllSketch.ScalePow
-    // lazy localCheckpoint: the register build, the exact comparator, and
-    // the real-day spine are three subtrees over the same projection —
-    // the barrier keeps the corpus scan at exactly one (the §2.150
+    // lazy barrier: the register build, the exact comparator, and the
+    // real-day spine are three subtrees over the same projection — the
+    // barrier keeps the corpus scan at exactly one (the §2.150
     // pattern); everything downstream is day- or user-day-grain
-    val ev = Tables.events(spark, dir)
+    val ev = graft.Barrier("rolling_hll.user_days", Tables.events(spark, dir)
       .select(to_date(col("ts")).as("day"), col("user_id"),
-        hash64(col("user_id").cast("string")).as("h"))
-      .localCheckpoint(eager = false)
+        hash64(col("user_id").cast("string")).as("h")))
     val realDays = ev.select("day").distinct()
     val cells = ev.groupBy("day").agg(hll_registers(col("h")).as("regs"))
       .select(col("day"), posexplode(col("regs")).as(Seq("bucket", "rho")))

@@ -1180,9 +1180,9 @@ object Queries {
     }
 
     // hist feeds the median, the deviation rebin, AND the outlier count
-    // — one materialization (lazy checkpoint) instead of three derivations
-    val hist = e.groupBy("event_type", "value").agg(count(lit(1)).as("n"))
-      .localCheckpoint(eager = false)
+    // — one materialization (lazy barrier) instead of three derivations
+    val hist = graft.Barrier("anomaly_mad.hist",
+      e.groupBy("event_type", "value").agg(count(lit(1)).as("n")))
     val med = wmedian(hist, "value", "med")
     val devHist = hist.join(broadcast(med), "event_type")
       .groupBy(col("event_type"), abs(col("value") - col("med")).as("dev"))

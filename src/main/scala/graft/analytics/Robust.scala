@@ -109,8 +109,7 @@ object Robust {
     val wall = Window.partitionBy("event_type")
     // No cache: the histogram is ≤10⁵ bins/type however big the corpus,
     // cheap to recompute for its two readers, and a cache here would
-    // outlive the query (nothing downstream could unpersist it) — the
-    // unreleased-storage class Bridge.releaseStorage exists to prevent.
+    // outlive the query (nothing downstream could unpersist it).
     val cumhist = hist
       .withColumn("cum", sum("c").over(wc))
       .withColumn("n", sum("c").over(wall))

@@ -309,15 +309,14 @@ object Series {
     * only (anomaly-sized, not calendar-sized). */
   def anomalyStl(spark: SparkSession, dir: String): DataFrame = {
     // the STL frame is calendar-bounded but its derivation scans the
-    // corpus — one materialization (lazy checkpoint) for its two
+    // corpus — one materialization (lazy barrier) for its two
     // consumers (median agg + deviation join), and again for dev
     // (MAD agg + final filter); was 32 parquet scans compiled
-    val f = stlFrame(spark, dir).localCheckpoint(eager = false)
+    val f = graft.Barrier("stl.frame", stlFrame(spark, dir))
     val med = f.groupBy("event_type")
       .agg(expr("percentile(resid, 0.5)").as("med"))
-    val dev = f.join(broadcast(med), "event_type")
-      .withColumn("adev", abs(col("resid") - col("med")))
-      .localCheckpoint(eager = false)
+    val dev = graft.Barrier("stl.dev", f.join(broadcast(med), "event_type")
+      .withColumn("adev", abs(col("resid") - col("med"))))
     val mad = dev.groupBy("event_type")
       .agg(expr("percentile(adev, 0.5)").as("mad"))
     dev.join(broadcast(mad), "event_type")

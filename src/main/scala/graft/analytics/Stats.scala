@@ -972,15 +972,14 @@ object Stats {
       (col("n_fit") * d("sxx") - d("sx") * d("sx"))
     val ab = m.select(col("n_fit"), beta.as("beta"),
       ((d("sy") - beta * d("sx")) / col("n_fit")).as("alpha"))
-    val cells = li.filter(col("g") =!= 0).crossJoin(broadcast(ab))
+    // bounded dollar-grid cells feed calibration AND evaluation — one
+    // materialization instead of re-running the residual scan
+    val cells = graft.Barrier("conformal.cells", li.filter(col("g") =!= 0).crossJoin(broadcast(ab))
       .select(col("g"), col("n_fit"), col("beta"), col("alpha"),
         expr("CAST(round(abs(y - (alpha + beta * x)) / 100) AS BIGINT)")
           .as("r"))
       .groupBy("g", "n_fit", "beta", "alpha", "r")
-      .agg(count(lit(1)).as("c"))
-      // bounded dollar-grid cells feed calibration AND evaluation —
-      // one materialization instead of re-running the residual scan
-      .localCheckpoint(eager = false)
+      .agg(count(lit(1)).as("c")))
     val wCum = Window.partitionBy("g").orderBy("r")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val wAll = Window.partitionBy("g")

@@ -89,7 +89,7 @@ object Bitext {
     val k = SemDedup.kFor(n)
     // one widening pass (lazy checkpoint) shared by the Lloyd-round
     // jobs and both language sides
-    val v = Ivf.vecsD(emb).localCheckpoint(eager = false)
+    val v = graft.Barrier("bitext.vecs", Ivf.vecsD(emb))
     val cent = Ivf.trainCentroidsV(v, k = k,
       trainStride = SemDedup.strideFor(n, k))
     val src = side(spark, dir, v, SrcLang, "q_id", "qe", "qn")
@@ -106,11 +106,11 @@ object Bitext {
   /** Best target per source doc by ratio margin, margin ≥ θ, among
     * IVF-blocked candidates. */
   def bitextMine(spark: SparkSession, dir: String): DataFrame =
-    // lazy localCheckpoint: mineFromScores reads the candidate table
-    // three times (both kNN averages + the margin join) — without the
-    // barrier the whole IVF chain (probe + assign + score) re-ran 3x
-    // (60 Exchanges / 24 parquet scans in the compiled plan)
-    mineFromScores(scoredCandidates(spark, dir).localCheckpoint(eager = false))
+    // barrier: mineFromScores reads the candidate table three times
+    // (both kNN averages + the margin join) — without it the whole IVF
+    // chain (probe + assign + score) re-ran 3x (60 Exchanges / 24
+    // parquet scans in the compiled plan)
+    mineFromScores(graft.Barrier("bitext.candidates", scoredCandidates(spark, dir)))
 
   val bitextMineSql: String = {
     // dynamic prefix: k/stride recomputed from count(*) in SQL — the

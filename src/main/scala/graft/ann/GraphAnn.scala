@@ -161,15 +161,16 @@ object GraphAnn {
       col("nrm").as("an"))
     if (chunks <= 1) {
       val scored = score(pairs, nodeVecAll)
-      topPerNode(prior.map(_.unionByName(scored)).getOrElse(scored), kg)
-        .localCheckpoint(eager = false)
+      graft.Barrier("ann_graph.edges",
+        topPerNode(prior.map(_.unionByName(scored)).getOrElse(scored), kg))
     } else {
       val parts = (0 until chunks).map { i =>
         val inChunk = pmod(xxhash64(col("node")), lit(chunks)) === i
         val scored = score(pairs.filter(inChunk), nodeVecAll.filter(inChunk))
         val merged = prior.map(_.filter(inChunk).unionByName(scored))
           .getOrElse(scored)
-        val top = topPerNode(merged, kg).localCheckpoint() // eager: serialize chunks
+        val top = graft.Barrier("ann_graph.edges_chunk", topPerNode(merged, kg),
+          eager = true) // serialize chunks
         System.gc()
         top
       }
@@ -188,7 +189,7 @@ object GraphAnn {
     // one widening pass (lazy checkpoint): every scoring round derives
     // nbr- and node-side frames from v — without the barrier each of
     // the ~6 references re-ran the parquet scan + float→double widening
-    val v = Ivf.vecsD(embeddings).localCheckpoint(eager = false) // (vec_id, e, nrm)
+    val v = graft.Barrier("ann_graph.vecs", Ivf.vecsD(embeddings)) // (vec_id, e, nrm)
     val n = embeddings.count() // one metadata-cheap count for the block modulus
     val groups = math.max(n / InitGroup, 1L)
     // two init blockings, unioned:
@@ -242,22 +243,18 @@ object GraphAnn {
     // candidate frames are narrow (two longs) but referenced once per
     // node chunk — localCheckpoint so the id/LSH blocking (and each
     // round's nbr-of-nbr join) runs once, not `chunks` times
-    val initPairs = idPairs.union(bucketPairs)
+    val initPairs = graft.Barrier("ann_graph.init_pairs", idPairs.union(bucketPairs)
       .filter(col("node") =!= col("nbr"))
-      .distinct() // Spark union = UNION ALL; the oracle's UNION dedups
-      .localCheckpoint(eager = false)
+      .distinct()) // Spark union = UNION ALL; the oracle's UNION dedups
     var edges = scoredTopK(initPairs, v, kg, chunks, prior = None)
-    // On the chunked path every consumer of a candidate checkpoint is
-    // eagerly materialized inside scoredTopK, so the checkpoint can be
+    // On the chunked path every consumer of a candidate barrier is
+    // eagerly materialized inside scoredTopK, so the barrier can be
     // released as soon as its round's edges exist — the r13 sf20 build
     // measured ~26 GB of accumulated round-scoped candidate blocks
-    // when release waited for the end. Single-chunk edges checkpoint
-    // lazily, so there nothing is released (localCheckpoint lineage
-    // cannot recompute released blocks); those corpora are ≤100 k
-    // vectors and the blocks are small.
-    def release(df: DataFrame): Unit =
-      org.apache.spark.sql.graftbridge.Bridge.releaseStorage(df)
-    if (chunks > 1) release(initPairs)
+    // when release waited for the end. Single-chunk edges are lazy
+    // barriers that still read the candidates, so there they stay until
+    // the owner closes; those corpora are ≤100 k vectors.
+    if (chunks > 1) graft.Barrier.release(initPairs)
     for (_ <- 1 to rounds) {
       // undirected view: nbr-of-nbr candidates flow along AND against
       // edges (the paper's "general" join); mutual pairs appear twice
@@ -265,15 +262,14 @@ object GraphAnn {
       // collapses them, matching the oracle's deduping UNION
       val und = edges.select("node", "nbr")
         .union(edges.select(col("nbr").as("node"), col("node").as("nbr")))
-      val cand = und.as("p")
+      val cand = graft.Barrier("ann_graph.candidates", und.as("p")
         .join(und.as("q").hint("shuffle_hash"), col("p.nbr") === col("q.node"))
         .select(col("p.node").as("node"), col("q.nbr").as("nbr"))
         .filter(col("node") =!= col("nbr")).distinct()
         .join(edges.select(col("node"), col("nbr"))
-          .hint("shuffle_hash"), Seq("node", "nbr"), "left_anti")
-        .localCheckpoint(eager = false)
+          .hint("shuffle_hash"), Seq("node", "nbr"), "left_anti"))
       edges = scoredTopK(cand, v, kg, chunks, prior = Some(edges))
-      if (chunks > 1) release(cand)
+      if (chunks > 1) graft.Barrier.release(cand)
     }
     edges
   }
@@ -337,7 +333,7 @@ object GraphAnn {
     * are keyed joins against broadcast nq-row query frames. */
   private[graft] def visitedSet(embeddings: DataFrame, nq: Int): DataFrame = {
     // one widening pass for the entry scan + every hop's scoring join
-    val v = Ivf.vecsD(embeddings).localCheckpoint(eager = false)
+    val v = graft.Barrier("ann_search.vecs", Ivf.vecsD(embeddings))
     val edges = persistedGraph(embeddings.sparkSession)
       .getOrElse(knnGraph(embeddings))
     // nq rows by construction; the limit also MARKS the bound so the
@@ -360,7 +356,7 @@ object GraphAnn {
       .join(broadcast(q), Seq("q_id"))
       .select(col("q_id"), col("vec_id"),
         cosine(col("qe"), col("qn"), col("e"), col("nrm")).as("cs"))
-    var visited = entry.localCheckpoint(eager = false)
+    var visited = graft.Barrier("ann_search.visited", entry)
     val bw = Window.partitionBy("q_id").orderBy(desc("cs"), asc("vec_id"))
     def beamOf(vis: DataFrame): DataFrame =
       vis.withColumn("rk", row_number().over(bw))
@@ -377,7 +373,7 @@ object GraphAnn {
         .join(broadcast(q), Seq("q_id"))
         .select(col("q_id"), col("vec_id"),
           cosine(col("qe"), col("qn"), col("e"), col("nrm")).as("cs"))
-      visited = visited.unionByName(scored).localCheckpoint(eager = false)
+      visited = graft.Barrier("ann_search.visited", visited.unionByName(scored))
     }
     visited
   }

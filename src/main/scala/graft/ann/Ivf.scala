@@ -147,7 +147,7 @@ object Ivf {
 
   def ivfTopK(embeddings: DataFrame, nq: Int = 5, k: Int = 10): DataFrame = {
     // one widening pass for the Lloyd-round jobs + assignment + probes
-    val v = vecsD(embeddings).localCheckpoint(eager = false)
+    val v = graft.Barrier("ivf.vecs", vecsD(embeddings))
     val cent = trainCentroidsV(v)
     // final assignment: every vector into exactly one inverted list
     val assigned = assignNearest(v, cent)

@@ -110,10 +110,10 @@ object IvfPq {
     // one widening pass (lazy checkpoint) shared by the coarse Lloyd
     // jobs, the PQ sub-Lloyd jobs, assignment, encoding, and queries;
     // likewise one subvector explode for training + encoding
-    val v = Ivf.vecsD(embeddings).localCheckpoint(eager = false)
+    val v = graft.Barrier("ivfpq.vecs", Ivf.vecsD(embeddings))
     val cent = Ivf.trainCentroidsV(v)
     val assigned = Ivf.assignNearest(v, cent)
-    val sv = subVecs(v).localCheckpoint(eager = false)
+    val sv = graft.Barrier("ivfpq.subvecs", subVecs(v))
     val cb = trainCodebookSv(sv)
     val codes = assignCodes(sv, cb).drop("sub")
     val q = v.filter(col("vec_id") < nq)

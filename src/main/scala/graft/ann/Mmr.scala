@@ -46,15 +46,14 @@ object Mmr {
     val q = v.filter(col("vec_id") < nq).limit(nq)
       .select(col("vec_id").as("q_id"), col("e").as("qe"),
         col("nrm").as("qn"))
-    val scored = v.join(broadcast(q), col("vec_id") =!= col("q_id"))
+    val scored = graft.Barrier("mmr.candidates", v.join(broadcast(q), col("vec_id") =!= col("q_id"))
       .withColumn("rel_e6",
         round(dotCol(col("qe"), col("e")) / (col("qn") * col("nrm"))
           * 1e6, 0).cast("long"))
       .withColumn("crk", row_number().over(Window.partitionBy("q_id")
         .orderBy(desc("rel_e6"), asc("vec_id"))))
       .filter(col("crk") <= CandK)
-      .select("q_id", "vec_id", "rel_e6", "e", "nrm")
-      .localCheckpoint(eager = false)
+      .select("q_id", "vec_id", "rel_e6", "e", "nrm"))
     val sims = scored.select(col("q_id"), col("vec_id").as("ca"),
         col("e").as("ea"), col("nrm").as("na"))
       .join(scored.select(col("q_id"), col("vec_id").as("cb"),

@@ -82,7 +82,7 @@ object SemDedup {
   def semanticDedup(embeddings: DataFrame, minCos: Double = MinCos): DataFrame = {
     // one widening pass (lazy checkpoint) shared by the Lloyd-round
     // jobs, the assignment, and both self-join sides
-    val v = Ivf.vecsD(embeddings).localCheckpoint(eager = false)
+    val v = graft.Barrier("semdedup.vecs", Ivf.vecsD(embeddings))
     // one metadata-cheap count (tiny-stat class) drives the K rule
     val n = embeddings.count()
     val k = kFor(n)

@@ -193,9 +193,8 @@ object ChunkBlocking {
     // window count instead of a driver collect.
     for (w <- levels.tail) {
       if (cur != null) {
-        val cnt = cur.withColumn("_n",
-            count(lit(1)).over(Window.partitionBy("key")))
-          .localCheckpoint(false)
+        val cnt = graft.Barrier("chunk_blocking.level", cur.withColumn("_n",
+            count(lit(1)).over(Window.partitionBy("key"))))
         finals += cnt.filter(col("_n") <= hotCap).select("sig", "chunk", "key")
         val hot = cnt.filter(col("_n") > hotCap)
         cur = if (hot.isEmpty) null
@@ -216,7 +215,7 @@ object ChunkBlocking {
     * when splitting activates. */
   private[graft] def rawCandidates(sigs: DataFrame, totalBits: Int,
       chunkBits: Int, nChunks: Int, maxDist: Int, hotCap: Int): DataFrame = {
-    val uniq = sigs.select("sig").distinct().localCheckpoint(false)
+    val uniq = graft.Barrier("chunk_blocking.sigs", sigs.select("sig").distinct())
     rawCandidates0(uniq, totalBits, chunkBits, nChunks, maxDist, hotCap)
   }
 
@@ -251,10 +250,10 @@ object ChunkBlocking {
     // the expensive signature kernels (tokenize+SimHash / resize+pHash)
     // over the whole corpus — and it is referenced by the distinct, the
     // cross-sig expansion (twice) and the identical-sig self-join.
-    // localCheckpoint cuts the lineage so the kernels run ONCE; the
-    // level-0 hot-key collect piggybacks the materialization.
-    val sigsC = sigs.localCheckpoint(false)
-    val uniq = sigsC.select("sig").distinct().localCheckpoint(false)
+    // a barrier cuts the lineage so the kernels run ONCE; the level-0
+    // hot-key collect piggybacks the materialization.
+    val sigsC = graft.Barrier("chunk_blocking.doc_sigs", sigs)
+    val uniq = graft.Barrier("chunk_blocking.sigs", sigsC.select("sig").distinct())
     val sigPairs = rawCandidates0(uniq, totalBits, chunkBits, nChunks,
         maxDist, hotCap)
       .withColumn("hamming", expr("bit_count(sig_a ^ sig_b)"))

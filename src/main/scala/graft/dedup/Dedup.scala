@@ -536,11 +536,10 @@ object Dedup {
     // (one O(m log m) sort per DOC here instead of a hash set per
     // PAIR there); order feeds nothing else (posting explodes to set
     // semantics, size() is order-blind).
-    val grams = docs.select(col("doc_id"),
+    val grams = graft.Barrier("containment.grams", docs.select(col("doc_id"),
         sort_array(array_distinct(graft.functions.native.shingle_hashes(
           graft.functions.native.token_poly_hashes(col("text")), 3))).as("g"))
-      .filter(size(col("g")) > 0)
-      .localCheckpoint(eager = false)
+      .filter(size(col("g")) > 0))
     val posting = grams.select(col("doc_id"), explode(col("g")).as("shg"))
     // shuffle_hash pins: rareSh, rare, and cand are all DATA-PROPORTIONAL
     // (rare shingles and their candidate pairs grow with the corpus), but

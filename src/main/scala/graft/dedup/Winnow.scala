@@ -118,13 +118,12 @@ object Winnow {
     * distinct fingerprint hashes (df-capped), with the fingerprint-set
     * Jaccard. */
   def dedupWinnow(spark: SparkSession, dir: String): DataFrame = {
-    // lazy localCheckpoint: fp feeds the per-doc sizes, the df cap, and
-    // the capped join — without the barrier the whole winnowing
-    // pipeline (tokenize + shingle + window select) re-ran 3x
-    // (68 Exchanges / 24 parquet scans in the compiled plan)
-    val fp = fingerprints(spark, dir)
-      .select("doc_id", "h").distinct()
-      .localCheckpoint(eager = false)
+    // barrier: fp feeds the per-doc sizes, the df cap, and the capped
+    // join — without it the whole winnowing pipeline (tokenize +
+    // shingle + window select) re-ran 3x (68 Exchanges / 24 parquet
+    // scans in the compiled plan)
+    val fp = graft.Barrier("winnow.fingerprints",
+      fingerprints(spark, dir).select("doc_id", "h").distinct())
     val sizes = fp.groupBy("doc_id").agg(count(lit(1)).as("n_fp"))
     // the df-capped key set is vocabulary-proportional — pinned like
     // the selected-positions frame above

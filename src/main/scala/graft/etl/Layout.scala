@@ -603,7 +603,9 @@ object Layout {
           col("p") <= expr("maxp * 5 div 10") &&
           col("s") > expr("maxs * 2 div 10") &&
           col("s") <= expr("maxs * 5 div 10"), 1L).otherwise(0L))
-    val shards = rows
+    // bounded (3 layouts × shards) but derived from a corpus scan; two
+    // boxed() consumers — one materialization (r13)
+    val shards = graft.Barrier("layout.shards", rows
       .select(col("p"), col("s"), col("m_narrow"), col("m_wide"),
         expr("stack(3, 'natural', sh_nat, 'sorted_part', sh_sort, " +
           "'zorder', sh_z)").as(Seq("layout", "shard")))
@@ -612,10 +614,7 @@ object Layout {
         min("p").as("p_min"), max("p").as("p_max"),
         min("s").as("s_min"), max("s").as("s_max"),
         sum("m_narrow").as("mn"), sum("m_wide").as("mw"))
-      .crossJoin(broadcast(maxes))
-      // bounded (3 layouts × shards) but derived from a corpus scan;
-      // two boxed() consumers — one materialization (r13)
-      .localCheckpoint(eager = false)
+      .crossJoin(broadcast(maxes)))
     def boxed(box: String, hiTenths: Int, m: Column): DataFrame =
       shards.select(col("layout"), lit(box).as("box"), col("n"),
         col("p_min"), col("p_max"), col("s_min"), col("s_max"),

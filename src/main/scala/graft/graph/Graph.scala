@@ -40,16 +40,15 @@ object Graph {
 
   /** Undirected distinct user↔item click edges: ("u<id>"|"i<k>"). */
   private def edges(spark: SparkSession, dir: String): DataFrame = {
-    // lazy localCheckpoint: the adjacency build references uv four
-    // times (both union legs on both the deg and join sides) — the
-    // distinct's internal exchange is AQE-reusable but the json
-    // extraction + final agg re-ran per reference
-    val uv = Tables.events(spark, dir)
+    // barrier: the adjacency build references uv four times (both
+    // union legs on both the deg and join sides) — the distinct's
+    // internal exchange is AQE-reusable but the json extraction + final
+    // agg re-ran per reference
+    val uv = graft.Barrier("graph.click_edges", Tables.events(spark, dir)
       .filter(col("event_type") === "click")
       .select(concat(lit("u"), col("user_id")).as("u"),
         concat(lit("i"), get_json_object(col("props"), "$.k")).as("v"))
-      .distinct()
-      .localCheckpoint(eager = false)
+      .distinct())
     uv.select(col("u").as("src"), col("v").as("dst"))
       .unionAll(uv.select(col("v").as("src"), col("u").as("dst")))
   }
@@ -205,31 +204,28 @@ object Graph {
     * number of triangles it participates in (each triangle credits
     * all three corners via the 3-struct explode). */
   def triangles(spark: SparkSession, dir: String): DataFrame = {
-    val c = Tables.events(spark, dir)
+    // barriers: without them this query's plan re-derived the events
+    // scan + distinct + projection self-join up to 128 times (pairs
+    // feeds deg twice and the orientation twice; oriented feeds both
+    // wedge legs and the closing-edge join) — 320 Exchanges / 128
+    // parquet scans in the compiled plan, and Catalyst itself pays for
+    // the 4 800-line tree on every run. Each shared frame now
+    // materializes once inside the single action.
+    val c = graft.Barrier("triangles.clicks", Tables.events(spark, dir)
       .filter(col("event_type") === "click")
       .select(col("user_id"),
         get_json_object(col("props"), "$.k").as("item"))
-      .distinct()
-      // lazy localCheckpoint (the bfsDistances pattern): without the
-      // barriers this query's plan re-derived the events scan +
-      // distinct + projection self-join up to 128 times (pairs feeds
-      // deg twice and the orientation twice; oriented feeds both wedge
-      // legs and the closing-edge join) — 320 Exchanges / 128 parquet
-      // scans in the compiled plan, and Catalyst itself pays for the
-      // 4 800-line tree on every run. Each shared frame now
-      // materializes once inside the single action.
-      .localCheckpoint(eager = false)
-    val pairs = c.join(c.select(col("user_id"), col("item").as("item2")), "user_id")
-      .filter(col("item") < col("item2"))
-      .groupBy(col("item").as("a"), col("item2").as("b"))
-      .agg(count(lit(1)).as("supp"))
-      .filter(col("supp") >= TriMinSupport)
-      .select("a", "b")
-      .localCheckpoint(eager = false)
-    val deg = pairs.select(col("a").as("node"))
+      .distinct())
+    val pairs = graft.Barrier("triangles.pairs",
+      c.join(c.select(col("user_id"), col("item").as("item2")), "user_id")
+        .filter(col("item") < col("item2"))
+        .groupBy(col("item").as("a"), col("item2").as("b"))
+        .agg(count(lit(1)).as("supp"))
+        .filter(col("supp") >= TriMinSupport)
+        .select("a", "b"))
+    val deg = graft.Barrier("triangles.deg", pairs.select(col("a").as("node"))
       .unionAll(pairs.select(col("b").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("deg"))
-      .localCheckpoint(eager = false)
+      .groupBy("node").agg(count(lit(1)).as("deg")))
     // orient a—b from the (deg, id)-smaller endpoint; carry the
     // destination's (deg, id) for the wedge ordering below
     val withDeg = pairs
@@ -241,7 +237,7 @@ object Graph {
     val rev = withDeg.filter(col("db") < col("da") ||
         (col("da") === col("db") && col("b") < col("a")))
       .select(col("b").as("src"), col("a").as("dst"), col("da").as("dd"))
-    val oriented = fwd.unionAll(rev).localCheckpoint(eager = false)
+    val oriented = graft.Barrier("triangles.oriented", fwd.unionAll(rev))
     // wedges at pivot s: out-neighbors b <(deg,id)< c; the closing
     // edge, if present, is oriented b -> c by transitivity
     val e1 = oriented.select(col("src").as("s"), col("dst").as("b"),
@@ -318,14 +314,11 @@ object Graph {
       .filter(col("src").startsWith("i"))
       .orderBy(desc("deg"), asc("src")).limit(BfsSources)
       .select(col("src").as("node"))
-    // lazy localCheckpoint per round (the bpeMerges pattern): the plan
-    // barrier stops the union's lineage re-deriving earlier frontiers,
-    // materialization happens ONCE inside the caller's single action
-    // (no per-round count() job — was ~40 fixed-cost jobs at sf0.1),
-    // and the checkpoint RDDs are context-cleaned on GC, so nothing
-    // stays pinned after the result is consumed (the cache+count
-    // version leaked the last round's frontier).
-    var dist = srcs.withColumn("dist", lit(0L)).localCheckpoint(eager = false)
+    // a lazy barrier per round: it stops the union's lineage
+    // re-deriving earlier frontiers, and materialization happens ONCE
+    // inside the caller's single action (no per-round count() job — was
+    // ~40 fixed-cost jobs at sf0.1)
+    var dist = graft.Barrier("bfs.dist", srcs.withColumn("dist", lit(0L)))
     var frontier = srcs
     for (k <- 1 to hops) {
       // shuffle_hash pinned on the frontier side: the frontier is
@@ -333,14 +326,13 @@ object Graph {
       // scale would flip this to a broadcast that at 100 TB ships a
       // hundred-million-node frontier to every executor (the
       // interval_overlap stats trap, SURVEY §6 round 5)
-      val next = adj.join(frontier.hint("shuffle_hash"),
+      val next = graft.Barrier("bfs.frontier", adj.join(frontier.hint("shuffle_hash"),
           col("src") === col("node"))
         .select(col("dst").as("node")).distinct()
         .join(dist.select("node").hint("shuffle_hash"),
-          Seq("node"), "left_anti")
-        .localCheckpoint(eager = false)
-      dist = dist.unionAll(next.withColumn("dist", lit(k.toLong)))
-        .localCheckpoint(eager = false)
+          Seq("node"), "left_anti"))
+      dist = graft.Barrier("bfs.dist",
+        dist.unionAll(next.withColumn("dist", lit(k.toLong))))
       frontier = next
     }
     dist
@@ -392,10 +384,8 @@ object Graph {
     * node-sized survivor set (twice: src and dst side) + one map-side
     * combined degree count — never edges²; survivors are pinned
     * shuffle_hash (node-sized but DATA-DEPENDENT — the §6 round-5
-    * broadcast trap), and each round's survivor frame is a lazy
-    * localCheckpoint (the bfsDistances pattern: plan barrier, no
-    * per-round driver action, nothing pinned after the single
-    * materialization job). */
+    * broadcast trap), and each round's degree frame is an eager
+    * [[graft.Barrier]] whose count decides the early exit. */
   private[graft] def kcoreSurvivors(spark: SparkSession, dir: String,
       rounds: Int = KcoreRounds): (DataFrame, DataFrame) = {
     val (adj, nodes, n) = adjacency(spark, dir)
@@ -416,7 +406,7 @@ object Graph {
     var r = 0
     var lastDeg: DataFrame = null
     while (r < rounds && !stable) {
-      val d = coreDeg(surv).localCheckpoint(true)
+      val d = graft.Barrier("kcore.deg", coreDeg(surv), eager = true)
       val next = d.filter(col("c") >= KcoreK)
         .select(col("src").as("node"))
       val cnt = next.count()
@@ -515,7 +505,7 @@ object Graph {
     val (adj, _, _) = adjacency(spark, dir)
     // three joins consume the labels; without the barrier each re-runs
     // the full LP fixed point (3 iterations × 3 consumers)
-    val labels = lpLabels(spark, dir).localCheckpoint(eager = false)
+    val labels = graft.Barrier("modularity.labels", lpLabels(spark, dir))
     val e = adj.select("src", "dst")
     val withL = e
       .join(labels.select(col("node").as("src"), col("lbl").as("la")), "src")
@@ -699,16 +689,13 @@ object Graph {
     * aggregate. Same class as PageRank: at 100 TB a bucketed edge
     * table makes every round's big-side exchange-free. */
   def hubAuthority(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.events(spark, dir)
+    // eager barrier: the 3 per-round joins read stored blocks instead
+    // of re-running the events scan + distinct
+    val e = graft.Barrier("hits.edges", Tables.events(spark, dir)
       .filter(col("event_type") === "click")
       .select(col("user_id").as("u"),
         get_json_object(col("props"), "$.k").cast("long").as("i"))
-      .distinct()
-      // materialized once (the bpeMerges localCheckpoint pattern): the
-      // 3 per-round joins read stored blocks instead of re-running the
-      // events scan + distinct; blocks are GC-reclaimed, nothing to
-      // unpersist by hand (the bfsDistances leak class can't recur)
-      .localCheckpoint()
+      .distinct(), eager = true)
     // round 1 from hub=1: authority = in-degree
     var auth = e.groupBy("i").agg(count(lit(1)).cast("double").as("auth"))
     for (_ <- 2 to HitsIters) {

@@ -33,14 +33,14 @@ object Overlap {
     * Determinism: integer set sizes; two divisions per pair row. */
   def sourceOverlap(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    val ss = Dedup.shingleHashes(docs.select(col("doc_id"), col("text")))
-      .hint("shuffle_hash")
-      .join(docs.select("doc_id", "source"), "doc_id")
-      .select(col("source"), explode(col("sh")).as("g"))
-      .distinct()
-      // ss feeds the per-source sizes AND the pair self-join (different
-      // downstream keys) — one tokenize+shingle+distinct pass (r13)
-      .localCheckpoint(eager = false)
+    // ss feeds the per-source sizes AND the pair self-join (different
+    // downstream keys) — one tokenize+shingle+distinct pass (r13)
+    val ss = graft.Barrier("overlap.shingles",
+      Dedup.shingleHashes(docs.select(col("doc_id"), col("text")))
+        .hint("shuffle_hash")
+        .join(docs.select("doc_id", "source"), "doc_id")
+        .select(col("source"), explode(col("sh")).as("g"))
+        .distinct())
     val sizes = ss.groupBy("source").agg(count(lit(1)).as("nv"))
     val pairs = ss.as("a").hint("shuffle_hash")
       .join(ss.as("b"), col("a.g") === col("b.g") &&

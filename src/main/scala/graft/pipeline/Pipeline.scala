@@ -244,20 +244,19 @@ object Pipeline {
     import graft.ann.Ivf
     val emb = Tables.embeddings(spark, dir)
     // one widening pass shared by Lloyd jobs + assignment (r13)
-    val v = Ivf.vecsD(emb).localCheckpoint(eager = false)
+    val v = graft.Barrier("topic_mix.vecs", Ivf.vecsD(emb))
     val cent = Ivf.trainCentroidsV(v)
     val assigned = Ivf.assignNearest(v, cent)
       .select(col("vec_id").as("doc_id"), col("cid"))
     // per is K-row bounded but its derivation is a corpus-sized
     // tokenize + join + agg, and it feeds total, capSum AND the final
     // projection — one materialization instead of three (r13)
-    val per = Tables.documents(spark, dir)
+    val per = graft.Barrier("topic_mix.per_topic", Tables.documents(spark, dir)
       .withColumn("n_tokens",
         size(graft.functions.native.token_poly_hashes(col("text"))).cast("long"))
       .join(assigned, "doc_id")
       .groupBy("cid")
-      .agg(count(lit(1)).as("n_docs"), sum("n_tokens").as("topic_tokens"))
-      .localCheckpoint(eager = false)
+      .agg(count(lit(1)).as("n_docs"), sum("n_tokens").as("topic_tokens")))
     val total = per.agg(sum("topic_tokens").as("total_tokens"))
     val capped = least(col("topic_tokens") * TopicCapDen,
       col("total_tokens") * TopicCapNum)
@@ -477,18 +476,14 @@ object Pipeline {
     * (§2.97's precomputed-inputs overload is the API form); within one
     * session, every consumer (dedup_clusters itself, dedup_keep_best)
     * reuses the persisted frame instead of re-running MinHash + CC.
-    * Keyed by (session, dir) and bounded — eviction unpersists (see
-    * [[graft.MemoCache]]); Bench clears all memo caches between reps
-    * so the benchmark times label computation, not cache hits. */
-  // eviction releases the localCheckpoint blocks, not just persist()
-  // cache entries — plain unpersist is a no-op on checkpoint blocks
-  // and would leak them for the session lifetime (ADVICE r10)
-  private val labelsCache =
-    new graft.MemoCache[DataFrame](4)(
-      org.apache.spark.sql.graftbridge.Bridge.releaseStorage)
+    * Keyed by (session, dir) and bounded — the entry owns its barriers,
+    * so eviction releases them (see [[graft.MemoCache]]); Bench clears
+    * all memo caches between reps so the benchmark times label
+    * computation, not cache hits. */
+  private val labelsCache = new graft.MemoCache[DataFrame](4)(_ => ())
   def dedupClustersCached(spark: SparkSession, dir: String): DataFrame =
     persistedLabels(spark).getOrElse(
-      // EAGER localCheckpoint, not persist(): round-10 profiling showed
+      // EAGER barrier, not persist(): round-10 profiling showed
       // every REFERENCE to the lazily-persisted frame re-executing its
       // plan (~2.7 s/ref at sf1, ~10 s at sf5 — host_quality paid 104 s
       // through 2 self-join references plus consumers; warm labels.count
@@ -499,7 +494,7 @@ object Pipeline {
       // the cross-session/cluster-grade path; localCheckpoint blocks
       // are executor-local and die with the session).
       labelsCache.getOrElseUpdate(spark, dir)(
-        dedupClusters(spark, dir).localCheckpoint()))
+        graft.Barrier("clusters.labels", dedupClusters(spark, dir), eager = true)))
 
   /** The §2.108 persisted-bucketed contract applied to cluster labels:
     * a crawl-scale pipeline runs MinHash + CC ONCE per crawl and
@@ -540,7 +535,6 @@ object Pipeline {
       .unionByName(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
       .cache()
     var labels = docs.select(col("doc_id"), col("doc_id").as("label"))
-    var prevCached: Option[DataFrame] = None
     var converged = false
     var iter = 0
     while (!converged && iter < maxIter) {
@@ -551,7 +545,7 @@ object Pipeline {
           lit(null).cast("long").as("old"))
       val prev = labels.select(col("doc_id"), col("label"),
         col("label").as("old"))
-      // localCheckpoint, NOT cache: each iteration references the
+      // a barrier, NOT cache: each iteration references the
       // previous frame TWICE (prev ∪ viaEdges), so with cache the
       // LOGICAL plan doubles per round — execution stays fine (the
       // cache manager substitutes InMemoryRelation) but the per-action
@@ -560,23 +554,16 @@ object Pipeline {
       // OOM'd the r11 sf20 sweep at 8 GiB. The checkpoint truncates
       // lineage so every round's plan is O(1); it materializes the
       // same rows the convergence count forced anyway.
-      val next = prev.unionByName(viaEdges)
+      val next = graft.Barrier("clusters.round", prev.unionByName(viaEdges)
         .groupBy("doc_id")
-        .agg(min("label").as("label"), max("old").as("old"))
-        .localCheckpoint()
+        .agg(min("label").as("label"), max("old").as("old")), eager = true)
       val changed = next.filter(col("label") < col("old")).limit(1).count()
-      // release the previous round's checkpoint BLOCKS (unpersist is a
-      // no-op on checkpoints — the ADVICE r10 lesson)
-      prevCached.foreach(org.apache.spark.sql.graftbridge.Bridge.releaseStorage)
-      prevCached = Some(next)
+      graft.Barrier.release(labels) // the previous round's blocks
       labels = next.select("doc_id", "label")
       converged = changed == 0
       iter += 1
     }
     edges.unpersist()
-    // the LAST round's blocks back the returned frame — the session
-    // caller (labelsCache / writeLabels) owns their release
-    prevCached = None
     // rounds-to-converge surfaced for the scale audit (VERDICT r08 #8):
     // propagation cost grows with component diameter, so InvariantCheck
     // records the count at every SF and asserts the diameter bound
@@ -694,26 +681,23 @@ object Pipeline {
     * labels = (node, label = component-min) for every non-isolated,
     * non-root node — callers coalesce missing nodes to themselves. */
   def ccBigSmallStar(pairs: DataFrame, maxIter: Int = 25): (DataFrame, Int) = {
-    // localCheckpoint (eager), not cache: each round's plan nests the
-    // previous round's joins/unions, so an uncut lineage grows
-    // exponentially and blows up planning itself — the checkpoint
-    // truncates the logical plan to the materialized edge set.
-    var cur = pairs.select(
+    // eager barrier, not cache: each round's plan nests the previous
+    // round's joins/unions, so an uncut lineage grows exponentially and
+    // blows up planning itself — the barrier truncates the logical plan
+    // to the materialized edge set.
+    var cur = graft.Barrier("cc.edges", pairs.select(
         greatest(col("id_a"), col("id_b")).as("src"),
         least(col("id_a"), col("id_b")).as("dst"))
-      .filter(col("src") =!= col("dst")).distinct().localCheckpoint(true)
+      .filter(col("src") =!= col("dst")).distinct(), eager = true)
     var curCnt = cur.count()
     var rounds = 0
     var converged = curCnt == 0
     while (!converged && rounds < maxIter) {
-      val prev = cur
-      val next = smallStar(largeStar(cur)).localCheckpoint(true)
+      val next = graft.Barrier("cc.edges", smallStar(largeStar(cur)), eager = true)
       val nextCnt = next.count()
       // sets are distinct: equal size + empty one-sided difference ⇒ equal
       converged = nextCnt == curCnt && next.except(cur).limit(1).count() == 0
-      // checkpoint blocks need releaseStorage — unpersist is a no-op
-      // on them and leaked one edge-set per round (ADVICE r10 class)
-      org.apache.spark.sql.graftbridge.Bridge.releaseStorage(prev)
+      graft.Barrier.release(cur)
       cur = next
       curCnt = nextCnt
       rounds += 1

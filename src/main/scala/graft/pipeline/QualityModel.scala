@@ -51,7 +51,7 @@ object QualityModel {
 
   /** Final weights + training accuracy after [[Iters]] GD rounds. */
   def qualityClassifier(spark: SparkSession, dir: String): DataFrame = {
-    val f = features(spark, dir).localCheckpoint() // Iters+1 passes read blocks
+    val f = graft.Barrier("quality.features", features(spark, dir), eager = true) // Iters+1 passes read blocks
     var w = Array(0.0, 0.0, 0.0, 0.0) // w0 (intercept), w1..w3
     for (_ <- 1 to Iters) {
       val z = lit(w(0)) + lit(w(1)) * col("x1") +

@@ -459,10 +459,9 @@ object TextQueries {
     * consumer there); [[bpeEncode]] consumes the fully-merged symbols. */
   private def learnAndFold(tc: DataFrame, foldLast: Boolean)
       : (Seq[(Int, String, Long)], DataFrame) = {
-    // lazy checkpoints: the materialization piggybacks each round's
+    // lazy barriers: the materialization piggybacks each round's
     // top-pair job instead of running a second job per round
-    var syms = tc.withColumn("symbols", split(col("tok"), ""))
-      .localCheckpoint(eager = false)
+    var syms = graft.Barrier("bpe.symbols", tc.withColumn("symbols", split(col("tok"), "")))
     val merges = scala.collection.mutable.ArrayBuffer[(Int, String, Long)]()
     for (r <- 1 to BpeRounds) {
       val top = syms.select(col("c"),
@@ -473,8 +472,8 @@ object TextQueries {
       val (a, b, n) = (top.getString(0), top.getString(1), top.getLong(2))
       merges += ((r, s"$a $b", n))
       if (r < BpeRounds || foldLast)
-        syms = syms.withColumn("symbols", mergeCol(a, b)(col("symbols")))
-          .localCheckpoint(eager = false)
+        syms = graft.Barrier("bpe.symbols",
+          syms.withColumn("symbols", mergeCol(a, b)(col("symbols"))))
     }
     (merges.toSeq, syms)
   }

@@ -74,10 +74,9 @@ object DegenerateGate {
   def run(spark: SparkSession, dir: String): Map[String, String] = {
     graft.Caches.clearAll()
     val out = scala.collection.mutable.Map.empty[String, String]
-    for ((name, fn) <- SparkEntry.selected()) {
-      try SparkEntry.materialize(fn(spark, dir))
-      catch { case e: Throwable => out(name) = SparkEntry.failureText(e) }
-    }
+    for ((name, fn) <- SparkEntry.selected())
+      SparkEntry.run(SparkEntry.materialize(fn(spark, dir)))._1.left
+        .foreach(e => out(name) = SparkEntry.failureText(e))
     graft.Caches.clearAll()
     out.toMap
   }

@@ -187,27 +187,26 @@ object PlanGate {
     for ((name, fn) <- queries) {
       graft.Caches.clearAll() // per-query cost, not memoized reuse
       dump.append(s"\n## $name\n\n```\n")
-      val vs =
-        try {
-          val df = fn(spark, dir)
-          if (executed) {
-            // execute THIS plan (toRdd), so its AdaptiveSparkPlan is
-            // finalized with runtime stats before the walk; a write
-            // would finalize a separate QueryExecution's plan instead
-            df.queryExecution.toRdd.count()
-            // the FINAL plan prints first, then the initial plan section
-            dump.append(df.queryExecution.executedPlan.toString
-              .split("== Initial Plan ==")(0))
-            violations(df.queryExecution.executedPlan, dbg)
-          } else {
-            dump.append(df.queryExecution.explainString(FormattedMode))
-            violations(df.queryExecution.sparkPlan, dbg)
-          }
-        } catch { case e: Throwable =>
-          val err = s"ERROR: ${SparkEntry.failureText(e)}"
-          dump.append(err)
-          Seq(err)
+      val vs = SparkEntry.run {
+        val df = fn(spark, dir)
+        if (executed) {
+          // execute THIS plan (toRdd), so its AdaptiveSparkPlan is
+          // finalized with runtime stats before the walk; a write
+          // would finalize a separate QueryExecution's plan instead
+          df.queryExecution.toRdd.count()
+          // the FINAL plan prints first, then the initial plan section
+          dump.append(df.queryExecution.executedPlan.toString
+            .split("== Initial Plan ==")(0))
+          violations(df.queryExecution.executedPlan, dbg)
+        } else {
+          dump.append(df.queryExecution.explainString(FormattedMode))
+          violations(df.queryExecution.sparkPlan, dbg)
         }
+      }._1.fold({ e =>
+        val err = s"ERROR: ${SparkEntry.failureText(e)}"
+        dump.append(err)
+        Seq(err)
+      }, identity)
       dump.append("\n```\n")
       if (vs.isEmpty) println(s"[plangate] OK   $name")
       else { bad += 1; vs.foreach(v => println(s"[plangate] FAIL $name — $v")) }

@@ -20,25 +20,6 @@ object Bridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
-  /** Release the storage behind a cached-or-checkpointed DataFrame.
-    *
-    * `Dataset.unpersist` only drops `persist()` cache entries; a
-    * `localCheckpoint()`ed frame's blocks belong to the materialized
-    * RDD inside its `LogicalRDD` leaf, which unpersist never touches —
-    * so an eviction hook that only calls unpersist leaks those blocks
-    * for the session lifetime (ADVICE r10). This walks the analyzed
-    * plan, unpersists every `LogicalRDD`'s backing RDD (covering the
-    * checkpoint case), and still calls plain unpersist for the
-    * persist() case. Safe on evicted frames: nothing re-reads them. */
-  def releaseStorage(df: org.apache.spark.sql.DataFrame): Unit = {
-    df.queryExecution.analyzed.foreach {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(blocking = false)
-      case _ =>
-    }
-    df.unpersist(blocking = false)
-  }
-
   /** Block until every event posted so far has reached every listener
     * (the bus is asynchronous; `listenerBus` is private[spark]). */
   def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =

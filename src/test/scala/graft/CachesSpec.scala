@@ -2,6 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.storage.StorageLevel
+import scala.jdk.CollectionConverters._
 
 class CachesSpec extends AnyFunSuite {
   import SparkTestSession.spark
@@ -35,31 +36,75 @@ class CachesSpec extends AnyFunSuite {
     assert(d2.storageLevel == StorageLevel.NONE, "clear() must unpersist")
   }
 
+  private def barrier(n: Int) = Barrier("spec", spark.range(n).toDF("v"), eager = true)
+
   test("releaseStorage frees localCheckpoint blocks on eviction " +
        "(plain unpersist is a no-op on them — ADVICE r10)") {
-    import org.apache.spark.sql.graftbridge.Bridge
-    val cache = new MemoCache[org.apache.spark.sql.DataFrame](1)(
-      Bridge.releaseStorage)
+    // the entry owns the barrier its build cuts, so no evictor is needed
+    val cache = new MemoCache[org.apache.spark.sql.DataFrame](1)(_ => ())
     // a localCheckpointed RDD lives in sc.getPersistentRDDs until ITS
     // unpersist runs; RDD.unpersist drops the registry entry
     // synchronously even with blocking=false, so the registry size is
-    // a deterministic release signal (Dataset.unpersist — the old
-    // evictor — never reaches that RDD and would leave it registered)
+    // a deterministic release signal (Dataset.unpersist never reaches
+    // that RDD and would leave it registered)
     def registered() = spark.sparkContext.getPersistentRDDs.size
-    // quiesce: drop anything left persisted by sibling tests
-    Caches.clearAll()
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = true))
+    SparkTestSession.releaseAll() // drop what sibling tests left persisted
     assert(registered() == 0)
-    def put(dir: String, n: Int) = cache.getOrElseUpdate(spark, dir)(
-      spark.range(n).toDF("v").localCheckpoint())
+    def put(dir: String, n: Int) = cache.getOrElseUpdate(spark, dir)(barrier(n))
     put("c1", 1000)
     assert(registered() == 1, "localCheckpoint RDD not registered?")
-    put("c2", 2000) // evicts c1 (capacity 1) → releaseStorage runs
+    put("c2", 2000) // evicts c1 (capacity 1) → its barrier is released
     assert(registered() == 1,
       "evicted localCheckpoint RDD still registered — blocks leaked")
     cache.clear()
     assert(registered() == 0, "clear() must release checkpoint blocks")
+  }
+
+  test("a scope releases its barriers when it closes, also when the body throws") {
+    SparkTestSession.releaseAll()
+    val (_, names) = Barrier.scope {
+      barrier(10); barrier(20)
+      assert(SparkTestSession.persistedIds.size == 2)
+    }
+    assert(names == Seq("spec", "spec"))
+    assert(SparkTestSession.persistedIds.isEmpty, "closed scope left its barriers")
+    intercept[IllegalStateException](Barrier.scope {
+      barrier(30)
+      throw new IllegalStateException("query failed")
+    })
+    assert(SparkTestSession.persistedIds.isEmpty, "failed scope left its barrier")
+  }
+
+  test("a barrier built in a memo entry outlives the scope and goes with clear()") {
+    SparkTestSession.releaseAll()
+    val cache = new MemoCache[org.apache.spark.sql.DataFrame](4)(_ => ())
+    val (memo, names) = Barrier.scope {
+      val m = cache.getOrElseUpdate(spark, "d")(barrier(10))
+      barrier(20) // the scope's own
+      m
+    }
+    assert(names == Seq("spec"), "the entry's barrier belongs to the entry")
+    assert(SparkTestSession.persistedIds.size == 1)
+    assert(memo.count() == 10) // a later query still reads the memoized blocks
+    cache.clear()
+    assert(SparkTestSession.persistedIds.isEmpty, "clear() must release the entry's barrier")
+  }
+
+  test("a barrier cut with no owner open stays registered") {
+    SparkTestSession.releaseAll()
+    val b = barrier(10)
+    assert(SparkTestSession.persistedIds.size == 1)
+    Barrier.release(b)
+    assert(SparkTestSession.persistedIds.isEmpty)
+  }
+
+  test("Barrier is the only localCheckpoint call in src/main") {
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root), s"no $root under ${sys.props("user.dir")}")
+    val raw = java.nio.file.Files.walk(root).iterator().asScala.toSeq
+      .filter(p => p.toString.endsWith(".scala") && p.getFileName.toString != "Barrier.scala")
+      .filter(p => java.nio.file.Files.readString(p).contains(".localCheckpoint("))
+    assert(raw.isEmpty, s"raw localCheckpoint calls (use graft.Barrier): ${raw.mkString(", ")}")
   }
 
   test("entries are keyed by session identity, not dir alone") {

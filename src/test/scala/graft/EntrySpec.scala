@@ -23,11 +23,21 @@ class EntrySpec extends AnyFunSuite {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
+  // residue gate: the query's scope and the memo caches give back every
+  // RDD the query persisted
   SparkEntry.queries.foreach { case (name, fn) =>
     test(s"query $name runs at sf0.001 with a non-empty schema") {
-      val df = fn(spark, sf)
-      assert(df.columns.nonEmpty)
-      SparkEntry.materialize(df) // every row and column, not a pruned count()
+      SparkTestSession.releaseAll()
+      val before = SparkTestSession.persistedIds
+      val (result, _) = SparkEntry.run {
+        val df = fn(spark, sf)
+        assert(df.columns.nonEmpty)
+        SparkEntry.materialize(df) // every row and column, not a pruned count()
+      }
+      Caches.clearAll()
+      result.left.foreach(e => throw e)
+      val left = SparkTestSession.persistedIds
+      assert(left == before, s"persisted RDDs after $name: $left, before: $before")
     }
   }
 }

@@ -15,6 +15,17 @@ object SparkTestSession {
   }
   val sf: String = "/root/testdata/sf0.001"
 
+  /** Ids of the RDDs the session holds persisted. `RDD.unpersist` drops
+    * an id at once, so the set is a deterministic release signal. */
+  def persistedIds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  /** Clear the memo caches and unpersist every RDD earlier suites left
+    * behind, so GC cannot shrink [[persistedIds]] while a spec reads it. */
+  def releaseAll(): Unit = {
+    Caches.clearAll()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+  }
+
   /** Run `body` with the session confs `kv` set, then put back each
     * key's prior value (or unset it if it had none). */
   def withConf[T](kv: (String, String)*)(body: => T): T = {

@@ -91,14 +91,21 @@ class VerifyGateSpec extends AnyFunSuite {
 
   test("Bench.run leaves one metrics record per (query, rep), stage rows summing to its totals") {
     val out = s"${tmp()}/bench_out.json"
-    val (med, errors) = Bench.run(spark, sf, SparkEntry.selected(Some("q1_agg,top_k")), 2, out)
-    assert(errors.isEmpty && med.map(_._1) === Seq("q1_agg", "top_k"), errors)
+    SparkTestSession.releaseAll()
+    val before = SparkTestSession.persistedIds.size
+    val queries = Seq("huber_mean", "q1_agg", "top_k") // huber_mean cuts a barrier
+    val (med, errors) = Bench.run(spark, sf, SparkEntry.selected(Some(queries.mkString(","))), 2, out)
+    assert(errors.isEmpty && med.map(_._1) === queries, errors)
     val json = new com.fasterxml.jackson.databind.ObjectMapper()
     val recs = Files.readAllLines(Paths.get(Bench.metricsPath(out))).toArray.toSeq
       .map(l => json.readTree(l.toString))
     assert(recs.map(r => (r.get("query").asText, r.get("rep").asInt)) ===
-      Seq(("q1_agg", 1), ("top_k", 1), ("q1_agg", 2), ("top_k", 2)))
+      (1 to 2).flatMap(rep => queries.map((_, rep))))
     for (r <- recs) {
+      val barriers = (0 until r.get("barriers").size).map(r.get("barriers").get(_).asText)
+      assert(barriers.contains("huber.hist") === (r.get("query").asText == "huber_mean"), r)
+      // the scope released the query's barriers before the record read the registry
+      assert(r.get("persisted_rdds").asInt === before, r)
       assert(r.get("error").isNull && r.get("task_s").asDouble > 0, r)
       assert(r.get("jobs").asInt >= 1 && r.get("stages").asInt >= 1, r)
       assert(r.get("stages").asInt === r.get("stage_rows").size, r)
