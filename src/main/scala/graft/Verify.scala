@@ -25,6 +25,8 @@ object Verify {
     * writes `outDir/<name>/` or lands in the returned failure list AND
     * `outDir/verify_failures.json` — a throwing query can never just
     * vanish from the driver's compare (the round-5 silent-shrink hole).
+    * `oracle_sql.json` holds the oracle SQL of `queries` only, so the
+    * compare reads no query this run did not dump.
     * Returns failures in run order as (name, "Class: message"). */
   def run(spark: SparkSession, sfDir: String, outDir: String,
       queries: Iterable[(String, (SparkSession, String) => DataFrame)],
@@ -39,7 +41,8 @@ object Verify {
         failures ::= (name, msg)
       }
     }
-    val json = oracleSql
+    val ran = queries.map(_._1).toSet
+    val json = oracleSql.filter { case (k, _) => ran(k) }
       .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     val ordered = failures.reverse

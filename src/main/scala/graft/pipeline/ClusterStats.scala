@@ -19,10 +19,9 @@ object ClusterStats {
     * corpus. The "how duplicated is this crawl" one-pager
     * (§2.199 gives dup-rate per source; this gives the shape).
     *
-    * Scale shape: on the persisted label table (§2.97's argument)
-    * this is two bounded groupBys; here the labels derive from the
-    * cached §2.39 propagation. Integers end-to-end but one share
-    * division. */
+    * Scale shape: two bounded groupBys over the label table — the
+    * §2.39 star labels memoized once per session, or the persisted
+    * §2.320 table. Integers end-to-end but one share division. */
   def clusterSizeDist(spark: SparkSession, dir: String): DataFrame = {
     val labels = Pipeline.dedupClustersCached(spark, dir)
       .select("doc_id", "cluster_id")

@@ -470,42 +470,53 @@ object Pipeline {
        |ORDER BY pairs.id_a, pairs.id_b""".stripMargin
   }
 
-  /** In-process cluster-label cache, keyed by data dir — the same
-    * share-the-stats pattern as EtlQueries.statsCache: a production
-    * pipeline computes labels ONCE per crawl and persists them
-    * (§2.97's precomputed-inputs overload is the API form); within one
-    * session, every consumer (dedup_clusters itself, dedup_keep_best)
-    * reuses the persisted frame instead of re-running MinHash + CC.
-    * Keyed by (session, dir) and bounded — the entry owns its barriers,
-    * so eviction releases them (see [[graft.MemoCache]]); Bench clears
-    * all memo caches between reps so the benchmark times label
-    * computation, not cache hits. */
-  private val labelsCache = new graft.MemoCache[DataFrame](4)(_ => ())
+  /** In-process cluster-label memo, keyed by (session, dir) and
+    * bounded: the share-the-stats pattern of EtlQueries.statsCache.
+    * Within one session every label reader (dedup_clusters,
+    * dedup_clusters_star, dedup_keep_best, make_splits, split_balance,
+    * cluster_size_dist, quality_dup_bias, host_quality) reuses one
+    * checkpointed frame instead of re-running MinHash + CC. The entry
+    * owns its barriers, so eviction releases them; Bench clears all
+    * memo caches between reps, so it times labeling, not cache hits. */
+  private val labelsCache = new graft.MemoCache[(DataFrame, Int)](4)(_ => ())
+
+  /** §2.39 duplicate-cluster resolution: connected components over the
+    * MinHash near-dup pair graph by [[ccBigSmallStar]], memoized;
+    * cluster_id = min doc_id in the component. Returns the labels and
+    * the star rounds (−1 = unconverged at the cap). Never reads the
+    * persisted table. */
+  def clusterLabels(spark: SparkSession, dir: String): (DataFrame, Int) =
+    labelsCache.getOrElseUpdate(spark, dir) {
+      val docs = Tables.documents(spark, dir).select(col("doc_id"))
+      val pairs = graft.dedup.Dedup.minhashPairs(Tables.documents(spark, dir))
+        .select("id_a", "id_b")
+      val (cc, rounds) = ccBigSmallStar(pairs)
+      val labels = docs.join(cc.withColumnRenamed("node", "doc_id"), Seq("doc_id"), "left")
+        .select(col("doc_id"),
+          coalesce(col("label"), col("doc_id")).as("cluster_id"),
+          (col("doc_id") === coalesce(col("label"), col("doc_id"))).as("is_canonical"))
+        .orderBy("doc_id")
+      // EAGER barrier, not persist(): every reference to a lazily
+      // persisted label frame re-executed its plan (~2.7 s/ref at sf1).
+      // The checkpoint materializes the labels once and cuts lineage,
+      // the in-process stand-in for the §2.320 persisted table.
+      val cut = graft.Barrier("clusters.labels", labels, eager = true)
+      graft.Barrier.release(labels) // the star loop's last edge set
+      (cut, rounds)
+    }
+
+  /** The labels every label reader joins: the persisted table when
+    * `spark.graft.labels.table` names one, else [[clusterLabels]]. */
   def dedupClustersCached(spark: SparkSession, dir: String): DataFrame =
-    persistedLabels(spark).getOrElse(
-      // EAGER barrier, not persist(): round-10 profiling showed
-      // every REFERENCE to the lazily-persisted frame re-executing its
-      // plan (~2.7 s/ref at sf1, ~10 s at sf5 — host_quality paid 104 s
-      // through 2 self-join references plus consumers; warm labels.count
-      // alone re-paid 2.7 s). The checkpoint materializes the label
-      // table ONCE at build and truncates lineage, so a consumer scan
-      // physically cannot recompute the MinHash+CC chain — the honest
-      // in-process stand-in for the §2.320 persisted table (which stays
-      // the cross-session/cluster-grade path; localCheckpoint blocks
-      // are executor-local and die with the session).
-      labelsCache.getOrElseUpdate(spark, dir)(
-        graft.Barrier("clusters.labels", dedupClusters(spark, dir), eager = true)))
+    persistedLabels(spark).getOrElse(clusterLabels(spark, dir)._1)
 
   /** The §2.108 persisted-bucketed contract applied to cluster labels:
-    * a crawl-scale pipeline runs MinHash + CC ONCE per crawl and
-    * persists the label table; every downstream gate (make_splits,
-    * cluster_size_dist, quality_dup_bias, dedup_keep_best) then reads
-    * a doc_id-bucketed parquet table instead of re-deriving the whole
-    * chain per run — at sf5 that chain was ~110 s of the sweep
-    * re-paid four times. Opt-in via the `spark.graft.labels.table`
-    * conf (set after [[writeLabels]]): the driver gate never sets it,
-    * so oracle runs still verify the full computation; a parity spec
-    * pins persisted == recomputed. */
+    * a crawl-scale pipeline labels ONCE per crawl and persists the
+    * table; every label reader then reads a doc_id-bucketed parquet
+    * table instead of re-deriving the chain (~110 s at sf5, re-paid
+    * per reader). Opt-in via the `spark.graft.labels.table` conf (set
+    * after [[writeLabels]]), which oracle runs never set, so they
+    * verify the full computation; a spec pins persisted == recomputed. */
   def persistedLabels(spark: SparkSession): Option[DataFrame] =
     spark.conf.getOption("spark.graft.labels.table")
       .filter(spark.catalog.tableExists)
@@ -517,69 +528,7 @@ object Pipeline {
   def writeLabels(spark: SparkSession, dir: String,
       table: String = "graft_labels", numBuckets: Int = 8): Unit =
     graft.etl.Loader.writeBucketed(
-      dedupClusters(spark, dir), table, Seq("doc_id"), numBuckets)
-
-  /** §2.39 duplicate-cluster resolution: connected components over the
-    * MinHash near-dup pair graph by iterative min-label propagation —
-    * each iteration is one join + one partial-agg'd shuffle, and the
-    * loop runs O(component diameter) rounds (near-dup clusters are
-    * near-cliques, so 2–3 in practice).
-    * cluster_id = min doc_id in the component. */
-  def dedupClusters(spark: SparkSession, dir: String,
-      maxIter: Int = 10): DataFrame = {
-    val docs = Tables.documents(spark, dir).select(col("doc_id"))
-    val pairs = graft.dedup.Dedup.minhashPairs(Tables.documents(spark, dir))
-      .select("id_a", "id_b")
-    // undirected edge list, both directions
-    val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .unionByName(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .cache()
-    var labels = docs.select(col("doc_id"), col("doc_id").as("label"))
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIter) {
-      // carry the previous label through the union so convergence falls
-      // out of the same aggregation — ONE action per iteration
-      val viaEdges = edges.join(labels, col("dst") === col("doc_id"))
-        .select(col("src").as("doc_id"), col("label"),
-          lit(null).cast("long").as("old"))
-      val prev = labels.select(col("doc_id"), col("label"),
-        col("label").as("old"))
-      // a barrier, NOT cache: each iteration references the
-      // previous frame TWICE (prev ∪ viaEdges), so with cache the
-      // LOGICAL plan doubles per round — execution stays fine (the
-      // cache manager substitutes InMemoryRelation) but the per-action
-      // plan-string rendering walks the tree form, 2^rounds copies of
-      // the whole MinHash subtree, and that string builder is what
-      // OOM'd the r11 sf20 sweep at 8 GiB. The checkpoint truncates
-      // lineage so every round's plan is O(1); it materializes the
-      // same rows the convergence count forced anyway.
-      val next = graft.Barrier("clusters.round", prev.unionByName(viaEdges)
-        .groupBy("doc_id")
-        .agg(min("label").as("label"), max("old").as("old")), eager = true)
-      val changed = next.filter(col("label") < col("old")).limit(1).count()
-      graft.Barrier.release(labels) // the previous round's blocks
-      labels = next.select("doc_id", "label")
-      converged = changed == 0
-      iter += 1
-    }
-    edges.unpersist()
-    // rounds-to-converge surfaced for the scale audit (VERDICT r08 #8):
-    // propagation cost grows with component diameter, so InvariantCheck
-    // records the count at every SF and asserts the diameter bound
-    lastPropagationRounds = if (converged) iter else -1
-    labels.select(col("doc_id"), col("label").as("cluster_id"),
-        (col("doc_id") === col("label")).as("is_canonical"))
-      .orderBy("doc_id")
-  }
-
-  /** Rounds the last [[dedupClusters]] propagation loop took to reach
-    * its fixed point (−1 = hit the iteration cap unconverged). Debug
-    * observability only — never feeds results. */
-  @volatile var lastPropagationRounds: Int = -1
-
-  /** Rounds the last [[dedupClustersStar]] run took (−1 = not run). */
-  @volatile var lastStarRounds: Int = -1
+      clusterLabels(spark, dir)._1, table, Seq("doc_id"), numBuckets)
 
   /** §2.84 the end-to-end corpus-construction capstone: everything a
     * training-data job runs, composed — corpus_filter survivors
@@ -679,7 +628,11 @@ object Pipeline {
     * needs ~100 — each round two groupBy+join passes over the
     * (monotonically shrinking) edge set. Returns (labels, rounds);
     * labels = (node, label = component-min) for every non-isolated,
-    * non-root node — callers coalesce missing nodes to themselves. */
+    * non-root node — callers coalesce missing nodes to themselves.
+    * rounds = −1 when the loop stops at `maxIter` unconverged (its
+    * labels are then not components), so a rounds gate fails loudly.
+    * The labels read the last round's barrier: release it with
+    * `Barrier.release` once they are materialized. */
   def ccBigSmallStar(pairs: DataFrame, maxIter: Int = 25): (DataFrame, Int) = {
     // eager barrier, not cache: each round's plan nests the previous
     // round's joins/unions, so an uncut lineage grows exponentially and
@@ -702,26 +655,8 @@ object Pipeline {
       curCnt = nextCnt
       rounds += 1
     }
-    val labels = cur.select(col("src").as("node"), col("dst").as("label"))
-    (labels, rounds)
-  }
-
-  /** §2.39 variant: duplicate-cluster resolution through
-    * [[ccBigSmallStar]] — same output contract as [[dedupClusters]],
-    * logarithmic rounds on deep chain components (the propagation
-    * variant is cheaper on the near-clique clusters MinHash actually
-    * produces; this is the safe choice when component shape is unknown). */
-  def dedupClustersStar(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir).select(col("doc_id"))
-    val pairs = graft.dedup.Dedup.minhashPairs(Tables.documents(spark, dir))
-      .select("id_a", "id_b")
-    val (labels, rounds) = ccBigSmallStar(pairs)
-    lastStarRounds = rounds
-    docs.join(labels.withColumnRenamed("node", "doc_id"), Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("label"), col("doc_id")).as("cluster_id"),
-        (col("doc_id") === coalesce(col("label"), col("doc_id"))).as("is_canonical"))
-      .orderBy("doc_id")
+    (cur.select(col("src").as("node"), col("dst").as("label")),
+      if (converged) rounds else -1)
   }
 
   /** Min-label propagation rounds the oracle unrolls. Plain
@@ -763,7 +698,7 @@ object Pipeline {
   /** §2.97 keep-best duplicate resolution: within each near-dup
     * cluster keep the HIGHEST-QUALITY document (tie → lowest doc_id),
     * which is what production dedup actually ships — min-id canonicals
-    * ([[dedupClusters]]) throw away the best copy whenever it isn't
+    * ([[clusterLabels]]) throw away the best copy whenever it isn't
     * the oldest. Composition: cluster labels ⋈ quality scores, then
     * one per-cluster argmax window (clusters are near-dup groups —
     * tiny — so the window sort is bounded; the shuffle key is

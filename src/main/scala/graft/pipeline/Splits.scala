@@ -66,11 +66,11 @@ object Splits {
     * pipelines cut train/val/test (group-split on dedup clusters, not
     * documents).
     *
-    * Scale shape: one hash join of the doc-sized cluster-label table
-    * (computed once per crawl and persisted — the §2.97 precomputed-
-    * frame contract) onto a row-local hash+bucket projection; no new
-    * corpus-sized shuffle. Output is doc-grain (doc_id, cluster_id,
-    * split). */
+    * Scale shape: a row-local hash+bucket projection of the doc-sized
+    * cluster-label table (the §2.39 star labels, memoized once per
+    * session, or the persisted §2.320 table — the §2.97 precomputed-
+    * frame contract); no new corpus-sized shuffle. Output is doc-grain
+    * (doc_id, cluster_id, split). */
   def makeSplits(spark: SparkSession, dir: String): DataFrame = {
     val clusters = Pipeline.dedupClustersCached(spark, dir)
       .select("doc_id", "cluster_id")
@@ -223,7 +223,9 @@ object Splits {
     * docs, expected under independence E = row·col/n, standardized
     * residual (O−E)/√E, plus the overall χ² and its degrees of
     * freedom — the residuals localize WHICH cell drove a significant
-    * χ² (|std_residual| > 2 is the usual flag).
+    * χ² (|std_residual| > 2 is the usual flag). The table is every
+    * split × source pair present: an empty cell is a row with O = 0,
+    * since Pearson's χ² sums over the whole table and it adds its E.
     *
     * Scale shape: the split table is the §2.159 doc-grain frame; one
     * hash join onto the doc-grain source projection, then ONE
@@ -237,15 +239,18 @@ object Splits {
     * the cross-cell sum is pure BIGINT. */
   def splitBalance(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir).select("doc_id", "source")
-    val cells = makeSplits(spark, dir).select("doc_id", "split")
+    val obs = makeSplits(spark, dir).select("doc_id", "split")
       .join(docs, "doc_id")
       .groupBy("split", "source").agg(count(lit(1)).as("n_docs"))
+    val cells = obs.select("split").distinct()
+      .crossJoin(broadcast(obs.select("source").distinct()))
+      .join(obs, Seq("split", "source"), "left").na.fill(0L, Seq("n_docs"))
     val all = org.apache.spark.sql.expressions.Window.partitionBy(lit(1))
     val e = col("row_t").cast("double") * col("col_t") / col("n")
-    // dims come from window collect_sets over the bounded cell frame,
-    // NOT a second cells.agg — a separate aggregate re-traverses the
-    // whole makeSplits subtree (clustering included) in the plan,
-    // which doubled this query's sf1 cost (0.85 -> 10.7 s, round 8)
+    // dims come from window collect_sets over the bounded cell frame.
+    // The labels under `obs` are the memo's checkpoint, so its three
+    // reads never re-run the clustering (a plan that re-traversed it
+    // cost 0.85 -> 10.7 s at sf1, round 8)
     cells
       .withColumn("row_t", sum("n_docs").over(org.apache.spark.sql.expressions.Window.partitionBy("split")))
       .withColumn("col_t", sum("n_docs").over(org.apache.spark.sql.expressions.Window.partitionBy("source")))
@@ -269,8 +274,12 @@ object Splits {
   val splitBalanceSql: String = {
     val e = "(CAST(row_t AS DOUBLE) * col_t / n)"
     s"""WITH s AS (SELECT doc_id, split FROM (${makeSplitsSql}) t),
-       |cells AS (SELECT s.split, d.source, count(*) AS n_docs
+       |obs AS (SELECT s.split, d.source, count(*) AS n_docs
        |  FROM s JOIN documents d USING (doc_id) GROUP BY 1, 2),
+       |cells AS (SELECT sp.split, so.source, coalesce(o.n_docs, 0) AS n_docs
+       |  FROM (SELECT DISTINCT split FROM obs) sp
+       |  CROSS JOIN (SELECT DISTINCT source FROM obs) so
+       |  LEFT JOIN obs o ON o.split = sp.split AND o.source = so.source),
        |dims AS (SELECT CAST(count(DISTINCT split) AS BIGINT) AS n_splits,
        |    CAST(count(DISTINCT source) AS BIGINT) AS n_sources
        |  FROM cells),

@@ -188,8 +188,8 @@ object Urls {
     * exact micro-unit integers, so no float boundary exists for the
     * oracle to disagree on.
     *
-    * Scale shape: labels come from the cached/persisted §2.320 table
-    * (this is the 5th label consumer); the host decoration is the
+    * Scale shape: labels are the §2.39 star labels memoized once per
+    * session, or the persisted §2.320 table; the host decoration is the
     * zero-shuffle §2.329 frame; everything after doc grain is two
     * host-bounded groupBys plus a 1-row corpus-total broadcast. */
   def hostQuality(spark: SparkSession, dir: String): DataFrame = {

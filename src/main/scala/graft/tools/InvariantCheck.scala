@@ -7,7 +7,9 @@ import org.apache.spark.sql.functions._
 /** Scale-correctness invariant checker for the 5 iterative operators
   * (`dedup_clusters`, `dedup_clusters_star`, `dedup_keep_best`,
   * `ann_ivf`, `bpe_merges`) whose DuckDB oracle replays are infeasible
-  * past sf0.1 (recursive CTEs / k-means over 6 M rows run >25 min).
+  * past sf0.1 (recursive CTEs / k-means over 6 M rows run >25 min),
+  * plus conservation laws and replays for many other operators
+  * (`checkGrowth` through `checkRound12`).
   * Instead of replaying, verify INVARIANTS that pin the outputs as
   * tightly as the replay would, each computed in Spark in a few linear
   * passes — so the same gate the oracle provides at sf≤0.1 extends to
@@ -16,9 +18,10 @@ import org.apache.spark.sql.functions._
   *  - connected components: one label per doc; every MinHash edge
   *    connects equal labels (⟺ the labels are a fixed point of
   *    min-propagation); each cluster_id IS the minimum member of its
-  *    cluster; and the propagation labels equal the big-star/small-star
-  *    labels EXACTLY — two independent algorithms agreeing rules out
-  *    over- and under-merging together with the edge/min checks.
+  *    cluster; and the program's big-star/small-star labels equal a
+  *    private min-label-propagation reference ([[propagationLabels]])
+  *    EXACTLY — two independent algorithms agreeing rules out over-
+  *    and under-merging together with the edge/min checks.
   *  - keep-best: exactly one kept doc per cluster; the kept doc is the
   *    (quality_score desc, doc_id asc) argmax of its cluster; labels
   *    match dedup_clusters.
@@ -38,8 +41,8 @@ import org.apache.spark.sql.functions._
   *
   * Usage: `sbt "runMain graft.tools.InvariantCheck <dataDir>"`.
   * Prints one `INVARIANT <name> PASS|FAIL <detail>` line each plus a
-  * JSON summary; exits nonzero on any failure. The same checks run in
-  * InvariantSpec at sf0.01 on every `sbt test`.
+  * JSON summary; exits nonzero on any failure. Every family `runAll`
+  * runs is also an InvariantSpec case, so each `sbt test` runs them all.
   */
 object InvariantCheck {
 
@@ -52,33 +55,34 @@ object InvariantCheck {
 
   def checkClusters(spark: SparkSession, dir: String): Seq[Res] = {
     val docs = graft.Tables.documents(spark, dir)
-    val prop = graft.pipeline.Pipeline.dedupClusters(spark, dir).cache()
-    val star = graft.pipeline.Pipeline.dedupClustersStar(spark, dir).cache()
+    // the labels every label reader shares, checked against the reference
+    val (labels, starRounds) = graft.pipeline.Pipeline.clusterLabels(spark, dir)
+    val (prop, propRounds) = propagationLabels(spark, dir)
     val pairs = graft.dedup.Dedup.minhashPairs(docs)
       .select("id_a", "id_b").cache()
     val nDocs = docs.count()
-    val nLab = prop.count()
-    val nIds = prop.select("doc_id").distinct().count()
+    val nLab = labels.count()
+    val nIds = labels.select("doc_id").distinct().count()
     val partitionOk = Res("cc_partition", nLab == nDocs && nIds == nDocs,
       s"docs=$nDocs labeled=$nLab distinct=$nIds")
     // edge consistency ⟺ fixed point: if every edge joins equal labels,
     // min over self ∪ neighbors changes nothing (and vice versa)
-    val la = prop.select(col("doc_id").as("id_a"), col("cluster_id").as("ca"))
-    val lb = prop.select(col("doc_id").as("id_b"), col("cluster_id").as("cb"))
+    val la = labels.select(col("doc_id").as("id_a"), col("cluster_id").as("ca"))
+    val lb = labels.select(col("doc_id").as("id_b"), col("cluster_id").as("cb"))
     val badEdge = pairs.join(la, "id_a").join(lb, "id_b")
       .filter(col("ca") =!= col("cb")).count()
     // the label is a member, and the smallest one
-    val badMin = prop.groupBy("cluster_id").agg(min("doc_id").as("mn"))
+    val badMin = labels.groupBy("cluster_id").agg(min("doc_id").as("mn"))
       .filter(col("mn") =!= col("cluster_id")).count()
-    val badCanon = prop
+    val badCanon = labels
       .filter(col("is_canonical") =!= (col("doc_id") === col("cluster_id")))
       .count()
-    // cross-algorithm agreement (propagation vs big-star/small-star)
+    // cross-algorithm agreement (big-star/small-star vs propagation)
     val p2 = prop.select("doc_id", "cluster_id")
-    val s2 = star.select("doc_id", "cluster_id")
+    val s2 = labels.select("doc_id", "cluster_id")
     val badAlgo = p2.exceptAll(s2).count() + s2.exceptAll(p2).count()
 
-    // keep-best on top of the same labels
+    // keep-best on top of the program labels, matched to the reference
     val kb = graft.pipeline.Pipeline.dedupKeepBest(spark, dir).cache()
     val badKeptCnt = kb.groupBy("cluster_id")
       .agg(sum(when(col("is_kept"), 1).otherwise(0)).as("k"))
@@ -94,10 +98,9 @@ object InvariantCheck {
     // rounds-to-converge audit (VERDICT r08 #8): propagation rounds are
     // bounded by the largest cluster's size (rounds ≤ diameter+1 <
     // size+1), star rounds by the Kiveris O(log n) shape — recorded at
-    // every SF so cluster-diameter growth can't silently blow the loop
-    val propRounds = graft.pipeline.Pipeline.lastPropagationRounds
-    val starRounds = graft.pipeline.Pipeline.lastStarRounds
-    val maxClusterSize = prop.groupBy("cluster_id").count()
+    // every SF so cluster-diameter growth can't silently blow the loop;
+    // both loops report −1 when they stop at their cap unconverged
+    val maxClusterSize = labels.groupBy("cluster_id").count()
       .agg(max("count")).head().getLong(0)
     val log2n = math.ceil(math.log(math.max(nDocs, 2).toDouble)
       / math.log(2)).toInt
@@ -111,11 +114,11 @@ object InvariantCheck {
     val roundsOk = Seq(
       Res("cc_propagation_rounds",
         propRounds >= 1 && propRounds <= maxClusterSize + 1,
-        s"rounds=$propRounds (converged, bound=max_cluster_size+1=" +
+        s"rounds=$propRounds (-1 = unconverged; bound=max_cluster_size+1=" +
           s"${maxClusterSize + 1})"),
       Res("cc_star_rounds",
         starRounds >= 0 && starRounds <= starBound,
-        s"rounds=$starRounds (converged, typical~ceil(log2 n)+2=" +
+        s"rounds=$starRounds (-1 = unconverged; typical~ceil(log2 n)+2=" +
           s"${log2n + 2}, gate=log2(n)^2=$starBound)"))
 
     val out = roundsOk ++ Seq(
@@ -123,12 +126,47 @@ object InvariantCheck {
       res("cc_edges_fixed_point", badEdge, s"${pairs.count()} minhash edges"),
       res("cc_label_is_min_member", badMin, "per-cluster min(doc_id)=cluster_id"),
       res("cc_canonical_flag", badCanon, "is_canonical = (doc_id=cluster_id)"),
-      res("cc_cross_algorithm", badAlgo, "propagation = big-star/small-star"),
+      res("cc_cross_algorithm", badAlgo, "big-star/small-star = propagation"),
       res("kb_one_kept_per_cluster", badKeptCnt, "sum(is_kept)=1 per cluster"),
       res("kb_kept_is_argmax", badArgmax, "kept = max(quality, -doc_id)"),
-      res("kb_labels_match", badKbLab, "keep_best labels = dedup_clusters"))
-    prop.unpersist(); star.unpersist(); pairs.unpersist(); kb.unpersist()
+      res("kb_labels_match", badKbLab, "keep_best labels = propagation labels"))
+    graft.Barrier.release(prop); pairs.unpersist(); kb.unpersist()
     out
+  }
+
+  /** The reference connected components: min-label propagation over
+    * the MinHash pair graph, independent of the program's
+    * big-star/small-star ([[graft.pipeline.Pipeline.ccBigSmallStar]]);
+    * O(component diameter) rounds of one join + one groupBy. Same rows
+    * as `Pipeline.dedupClustersCached`; returns them and the rounds to
+    * the fixed point (−1 = stopped at `maxIter` unconverged). The labels
+    * read the last round's barrier: `Barrier.release` them when done. */
+  private[graft] def propagationLabels(spark: SparkSession, dir: String,
+      maxIter: Int = 10): (DataFrame, Int) = {
+    val docs = graft.Tables.documents(spark, dir)
+    val pairs = graft.dedup.Dedup.minhashPairs(docs)
+    // both directions, plus a self-loop carrying each node's own label
+    val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
+      .union(pairs.select(col("id_b"), col("id_a")))
+      .union(docs.select(col("doc_id"), col("doc_id"))).cache()
+    var labels = docs.select(col("doc_id"), col("doc_id").as("label"))
+    var (rounds, changed) = (0, 1L)
+    while (changed > 0 && rounds < maxIter) {
+      // a barrier, not cache: a cached round still nests its whole
+      // lineage in the plan, whose string rendering OOM'd an sf20 sweep
+      val next = graft.Barrier("clusters.round", edges
+        .join(labels, col("dst") === col("doc_id"))
+        .groupBy(col("src").as("doc_id")).agg(min("label").as("label")), eager = true)
+      changed = next.join(labels.withColumnRenamed("label", "old"), "doc_id")
+        .filter(col("label") < col("old")).count()
+      graft.Barrier.release(labels) // the previous round's blocks
+      labels = next
+      rounds += 1
+    }
+    edges.unpersist()
+    (labels.select(col("doc_id"), col("label").as("cluster_id"),
+        (col("doc_id") === col("label")).as("is_canonical")).orderBy("doc_id"),
+      if (changed == 0) rounds else -1)
   }
 
   // ---- IVF ----
@@ -1341,20 +1379,20 @@ object InvariantCheck {
 
   /** The five label-chain consumers whose sf1 oracles exceed the 60 s
     * guard: each recomputed on INDEPENDENT components — cluster labels
-    * from the big-star/small-star algorithm instead of min-label
-    * propagation (two algorithms agreeing is checkClusters' own pin),
+    * from the min-label-propagation reference instead of the program's
+    * big-star/small-star (two algorithms agreeing is checkClusters' own pin),
     * dup flags via a window count instead of the sizes join — and
     * compared EXACTLY. */
   def checkRound12(spark: SparkSession, dir: String): Seq[Res] = {
-    import graft.pipeline.{Pipeline, Splits}
+    import graft.pipeline.Splits
     val docs = graft.Tables.documents(spark, dir)
-    val star = Pipeline.dedupClustersStar(spark, dir)
-      .select("doc_id", "cluster_id").cache()
+    val (prop, _) = propagationLabels(spark, dir)
+    val ref = prop.select("doc_id", "cluster_id").cache()
 
-    // host_quality == recomputation over star labels + window dup flag
+    // host_quality == recomputation over reference labels + window dup flag
     val hq = graft.text.Urls.hostQuality(spark, dir).cache()
     val hosts = graft.text.Urls.urlFrame(docs).select("doc_id", "host")
-    val dup = star.withColumn("sz",
+    val dup = ref.withColumn("sz",
         count(lit(1)).over(Window.partitionBy("cluster_id")))
       .select(col("doc_id"), (col("sz") >= 2).cast("long").as("is_dup"))
     val q = graft.text.TextQueries.textQuality(spark, dir)
@@ -1378,7 +1416,7 @@ object InvariantCheck {
           .as("keep"))
     val badHq = hq.exceptAll(hq2).count() + hq2.exceptAll(hq).count()
     val rHq = res("hostq_replay", badHq,
-      s"host_quality == star-label/window-dup recomputation (${hq.count()} hosts)")
+      s"host_quality == reference-label/window-dup recomputation (${hq.count()} hosts)")
 
     // make_splits: partition + leakage-free + labels match + rule replay
     val ms = Splits.makeSplits(spark, dir).cache()
@@ -1389,10 +1427,10 @@ object InvariantCheck {
     val badVal = ms.filter(!col("split").isin("train", "val", "test")).count()
     val badLeak = ms.groupBy("cluster_id")
       .agg(countDistinct("split").as("k")).filter(col("k") =!= 1).count()
-    val badLab = ms.select("doc_id", "cluster_id").exceptAll(star).count() +
-      star.exceptAll(ms.select("doc_id", "cluster_id")).count()
+    val badLab = ms.select("doc_id", "cluster_id").exceptAll(ref).count() +
+      ref.exceptAll(ms.select("doc_id", "cluster_id")).count()
     val rSplit = res("splits_leakfree", badVal + badLeak + badLab,
-      "every cluster in ONE valid split; labels == star CC")
+      "every cluster in ONE valid split; labels == propagation CC")
     // the hash rule replayed per ROW (same function, independent of the
     // column pipeline it rode in) + distribution sanity at cluster grain
     val badRule = ms
@@ -1415,11 +1453,13 @@ object InvariantCheck {
       .join(docs.select("doc_id", "source"), "doc_id")
       .groupBy("split", "source").agg(count(lit(1)).as("n"))
       .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-    val badCells = sb.count(r =>
-      cells2.getOrElse((r.getString(0), r.getString(1)), -1L) != r.getLong(2))
     val n = sb.map(_.getLong(2)).sum.toDouble
     val rowT = sb.groupBy(_.getString(0)).map { case (k, v) => k -> v.map(_.getLong(2)).sum }
     val colT = sb.groupBy(_.getString(1)).map { case (k, v) => k -> v.map(_.getLong(2)).sum }
+    // the full split x source table: an empty cell is a row at 0
+    val badCells = sb.count(r =>
+      cells2.getOrElse((r.getString(0), r.getString(1)), 0L) != r.getLong(2)) +
+      (if (sb.length == rowT.size * colT.size) 0 else 1)
     val chi2 = sb.map { r =>
       val e = rowT(r.getString(0)).toDouble * colT(r.getString(1)) / n
       math.round((r.getLong(2) - e) * (r.getLong(2) - e) / e * 1000000)
@@ -1435,10 +1475,10 @@ object InvariantCheck {
       s"cells recount + driver-side chi2 replay over ${sb.length} cells")
 
     // quality_dup_bias: the 5 exact integer moments recomputed over
-    // star labels via a DIFFERENT aggregation path, floats re-derived
+    // reference labels via a DIFFERENT aggregation path, floats re-derived
     val qb = graft.pipeline.ClusterStats.qualityDupBias(spark, dir).collect().head
-    val sizes = star.groupBy("cluster_id").agg(count(lit(1)).as("sz"))
-    val jm = star.join(sizes, "cluster_id").join(q, "doc_id")
+    val sizes = ref.groupBy("cluster_id").agg(count(lit(1)).as("sz"))
+    val jm = ref.join(sizes, "cluster_id").join(q, "doc_id")
       .withColumn("dup", (col("sz") >= 2).cast("int"))
       .agg(count(lit(1)).as("n"), sum("dup").as("n1"),
         sum(when(col("dup") === 1, col("q6")).otherwise(0L)).as("s1"),
@@ -1458,9 +1498,10 @@ object InvariantCheck {
         close(qb.getDouble(2), m1 / 1e6) && close(qb.getDouble(3), m0 / 1e6) &&
         close(qb.getDouble(4), (m1 - m0) / 1e6) &&
         close(qb.getDouble(5), (m1 - m0) / sd * math.sqrt(n1 * (cn - n1)) / cn),
-      "moments recomputed over star labels; floats re-derived driver-side")
+      "moments recomputed over reference labels; floats re-derived driver-side")
 
-    star.unpersist(); hq.unpersist(); ms.unpersist(); q.unpersist()
+    ref.unpersist(); graft.Barrier.release(prop)
+    hq.unpersist(); ms.unpersist(); q.unpersist()
     Seq(rHq, rPart, rSplit, rShare, rBal, rQb)
   }
 

@@ -1,10 +1,11 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.tools.InvariantCheck
 
 /** The sf1 scale-verification invariants (tools/InvariantCheck) run at
-  * sf0.01 on every test pass, so the checker itself is continuously
+  * sf0.001 on every test pass, so the checker itself is continuously
   * verified against data the DuckDB oracle also fully replays — at sf1
   * the same checks stand in for the infeasible >25-min replays of the
   * 5 iterative operators. */
@@ -16,77 +17,41 @@ class InvariantSpec extends AnyFunSuite {
     assert(bad.isEmpty, bad.map(r => s"${r.name}: ${r.detail}").mkString("; "))
   }
 
-  test("connected-components + keep-best invariants hold at sf0.01") {
-    assertAll(InvariantCheck.checkClusters(spark, sf))
-  }
-
-  test("IVF invariants hold at sf0.01") {
-    assertAll(InvariantCheck.checkIvf(spark, sf))
-  }
-
-  test("BPE replay invariants hold at sf0.01") {
-    assertAll(InvariantCheck.checkBpe(spark, sf))
-  }
-
-  test("semantic-dedup invariants hold at sf0.01") {
-    assertAll(InvariantCheck.checkSemantic(spark, sf))
-  }
-
-  test("PageRank + label-propagation invariants hold at sf0.01") {
-    assertAll(InvariantCheck.checkGraph(spark, sf))
-  }
-
-  test("bitext-mining invariants hold at sf0.01") {
-    assertAll(InvariantCheck.checkBitext(spark, sf))
-  }
-
-  test("IVF-PQ invariants hold at sf0.01") {
-    assertAll(InvariantCheck.checkIvfPq(spark, sf))
-  }
-
-  test("BFS invariants hold") {
-    assertAll(InvariantCheck.checkBfs(spark, sf))
-  }
-
-  test("k-core invariants hold") {
-    assertAll(InvariantCheck.checkKcore(spark, sf))
-  }
+  // one case per family `InvariantCheck.runAll` runs
+  for ((name, family) <- Seq[(String, (SparkSession, String) => Seq[InvariantCheck.Res])](
+      "connected-components + keep-best invariants hold at sf0.01" -> InvariantCheck.checkClusters,
+      "IVF invariants hold at sf0.01" -> (InvariantCheck.checkIvf(_, _)),
+      "BPE replay invariants hold at sf0.01" -> InvariantCheck.checkBpe,
+      "semantic-dedup invariants hold at sf0.01" -> InvariantCheck.checkSemantic,
+      "PageRank + label-propagation invariants hold at sf0.01" -> InvariantCheck.checkGraph,
+      "bitext-mining invariants hold at sf0.01" -> InvariantCheck.checkBitext,
+      "IVF-PQ invariants hold at sf0.01" -> (InvariantCheck.checkIvfPq(_, _)),
+      "BFS invariants hold" -> InvariantCheck.checkBfs,
+      "k-core invariants hold" -> InvariantCheck.checkKcore,
+      "growth/sweep/concentration conservation laws hold" -> InvariantCheck.checkGrowth,
+      "round-8 layout/dedup/normalize/split invariants hold" -> InvariantCheck.checkRound8,
+      "round-8 third-push invariants hold (cuped/lift/prune/conformal/...)" ->
+        InvariantCheck.checkRound8b,
+      "round-8 power/shard/logrank/eval/split/zorder invariants hold" -> InvariantCheck.checkRound8c,
+      "round-8 movers/loo/upsert invariants hold" -> InvariantCheck.checkRound8d,
+      "round-8 hash/tail-risk/slo invariants hold" -> InvariantCheck.checkRound8e,
+      "skyline quadratic-dominance invariant holds at sf0.01" -> InvariantCheck.checkSkyline,
+      "fuzzy-match soundness + reversed-blocking completeness hold" -> InvariantCheck.checkFuzzy,
+      "label-consumer replays hold (host_quality/splits/balance/bias)" ->
+        InvariantCheck.checkRound12))
+    test(name)(assertAll(family(spark, sf)))
 
   test("invariants detect a planted violation (checker is not vacuous)") {
     // corrupt one cluster label and confirm the edge/min checks would
     // catch it — guard against a checker that trivially passes
     import org.apache.spark.sql.functions._
-    val prop = pipeline.Pipeline.dedupClusters(spark, sf)
+    val prop = pipeline.Pipeline.dedupClustersCached(spark, sf)
     val corrupted = prop.withColumn("cluster_id",
       when(col("doc_id") === col("cluster_id") && col("doc_id") > 0,
         col("cluster_id") + 1).otherwise(col("cluster_id")))
     val badMin = corrupted.groupBy("cluster_id").agg(min("doc_id").as("mn"))
       .filter(col("mn") =!= col("cluster_id")).count()
     assert(badMin > 0, "planted corruption must trip the min-member invariant")
-  }
-
-  test("growth/sweep/concentration conservation laws hold") {
-    assertAll(InvariantCheck.checkGrowth(spark, sf))
-  }
-
-  test("round-8 layout/dedup/normalize/split invariants hold") {
-    assertAll(InvariantCheck.checkRound8(spark, sf))
-  }
-
-  test("round-8 third-push invariants hold (cuped/lift/prune/conformal/...)") {
-    assertAll(InvariantCheck.checkRound8b(spark, sf))
-  }
-
-  test("skyline quadratic-dominance invariant holds at sf0.01") {
-    assertAll(InvariantCheck.checkSkyline(spark, sf))
-  }
-
-  test("fuzzy-match soundness + reversed-blocking completeness hold") {
-    assertAll(InvariantCheck.checkFuzzy(spark, sf))
-  }
-
-  test("label-consumer replays hold (host_quality/splits/balance/bias)") {
-    assertAll(InvariantCheck.checkRound12(spark, sf))
   }
 
   test("round-12 checkers detect planted violations (not vacuous)") {

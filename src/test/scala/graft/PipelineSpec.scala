@@ -123,10 +123,16 @@ class PipelineSpec extends AnyFunSuite {
     (1 to 99).foreach(i => assert(m(i.toLong) == 0L, s"node $i → ${m.get(i.toLong)}"))
   }
 
+  test("big-star/small-star CC: a loop cut before convergence reports -1 rounds") {
+    import spark.implicits._
+    val chain = (0 until 99).map(i => (i.toLong, (i + 1).toLong)).toDF("id_a", "id_b")
+    assert(Pipeline.ccBigSmallStar(chain, maxIter = 1)._2 == -1)
+  }
+
   test("star CC matches propagation CC on the corpus") {
-    val byProp = Pipeline.dedupClusters(spark, sf).collect()
+    val byProp = graft.tools.InvariantCheck.propagationLabels(spark, sf)._1.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
-    val byStar = Pipeline.dedupClustersStar(spark, sf).collect()
+    val byStar = Pipeline.dedupClustersCached(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
     assert(byProp.sameElements(byStar))
   }
@@ -142,12 +148,12 @@ class PipelineSpec extends AnyFunSuite {
       (2L, base + " nu xi", "en"),
       (3L, "totally different words entirely unrelated content goes here now", "en"))
       .toDF("doc_id", "text", "lang")
-    // run the same label propagation as dedupClusters but on local docs
+    // the MinHash pairing the cluster labels read, on local docs
     val pairs = graft.dedup.Dedup.minhashPairs(docs, 0.25).select("id_a", "id_b")
     val got = pairs.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got.contains((0L, 1L)) && got.contains((1L, 2L)))
     // full operator on corpus: every doc labeled, canonical = min of cluster
-    val clusters = Pipeline.dedupClusters(spark, sf)
+    val clusters = Pipeline.dedupClustersCached(spark, sf)
     assert(clusters.count() == Tables.documents(spark, sf).count())
     assert(clusters.filter(col("cluster_id") > col("doc_id")).count() == 0)
   }
@@ -156,7 +162,7 @@ class PipelineSpec extends AnyFunSuite {
     // the 100-TB shape: cluster labels / filter survivors / contamination
     // / mixture are persisted once per crawl and REUSED — the overloads
     // taking those frames must be byte-identical to the one-shot ops
-    val labels = Pipeline.dedupClusters(spark, sf).select("doc_id", "cluster_id")
+    val labels = Pipeline.dedupClustersCached(spark, sf).select("doc_id", "cluster_id")
     val quality = graft.text.TextQueries.textQuality(spark, sf)
       .select(col("doc_id"), col("quality_score"))
     val viaLabels = Pipeline.dedupKeepBest(labels, quality).collect().map(_.toSeq).toSeq

@@ -5,10 +5,11 @@ import org.apache.spark.sql.functions._
 import graft.tools.PlanGate
 
 /** The §2.334 whole-surface plan gate's DETECTOR, proven on synthetic
-  * plans: the closing chain runs `graft.tools.PlanGate` over every
-  * registered query (it must exit 0); this spec pins that the gate
-  * actually catches each anti-pattern class — a gate that flags
-  * nothing is indistinguishable from a gate that checks nothing.
+  * plans: `graft.tools.PlanGate` runs over every registered query (the
+  * PlanGate line of the verify recipe, usage in the README's tools list;
+  * it must exit 0); this spec pins that the gate actually catches each
+  * anti-pattern class — a gate that flags nothing is indistinguishable
+  * from a gate that checks nothing.
   */
 class PlanGateSpec extends AnyFunSuite {
   import SparkTestSession.{spark, sf}

@@ -207,11 +207,12 @@ class Round8dSpec extends AnyFunSuite {
     val rowT = cells.groupBy(_._1._1).map { case (k, g) => k -> g.values.sum }
     val colT = cells.groupBy(_._1._2).map { case (k, g) => k -> g.values.sum }
     val got = graft.pipeline.Splits.splitBalance(spark, sf).collect()
-    assert(got.length == cells.size)
+    // every split x source pair, an empty one at 0
+    assert(got.length == rowT.size * colT.size)
     var chi2 = 0.0
     got.foreach { r =>
       val k = (r.getString(0), r.getString(1))
-      val o = cells(k)
+      val o = cells.getOrElse(k, 0L)
       val e = rowT(k._1).toDouble * colT(k._2) / n
       assert(r.getLong(2) == o, s"n_docs $k")
       assert(math.abs(r.getDouble(3) - e) < 1e-4, s"expected $k")

@@ -31,6 +31,19 @@ class VerifyGateSpec extends AnyFunSuite {
         .select(raise_error(lit("late planted failure")).as("x"))
     }
 
+  /** A Bench sweep of `queries`: its medians and its metrics records. */
+  private def bench(queries: Seq[String], reps: Int) = {
+    val out = s"${tmp()}/bench_out.json"
+    val (med, errors) = Bench.run(spark, sf, SparkEntry.selected(Some(queries.mkString(","))), reps, out)
+    assert(errors.isEmpty, errors)
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    (med, Files.readAllLines(Paths.get(Bench.metricsPath(out))).toArray.toSeq
+      .map(l => json.readTree(l.toString)))
+  }
+
+  private def barriers(r: com.fasterxml.jackson.databind.JsonNode): Seq[String] =
+    (0 until r.get("barriers").size).map(r.get("barriers").get(_).asText)
+
   test("a throwing query lands in the failure file; healthy ones still dump") {
     val out = tmp()
     val fails = Verify.run(spark, sf, out,
@@ -52,10 +65,13 @@ class VerifyGateSpec extends AnyFunSuite {
   test("clean run: empty failure file, every query dumped") {
     val out = tmp()
     val fails = Verify.run(spark, sf, out,
-      Map("r" -> good), Map("r" -> "SELECT * FROM region"))
+      Map("r" -> good), Map("r" -> "SELECT * FROM region", "not_run" -> "SELECT 2"))
     assert(fails.isEmpty)
     assert(Files.readString(Paths.get(s"$out/verify_failures.json")) === "{}")
     assert(spark.read.parquet(s"$out/r").count() > 0)
+    // the oracle file names only the queries this run dumped
+    assert(Files.readString(Paths.get(s"$out/oracle_sql.json")) ===
+      """{"r": "SELECT * FROM region"}""")
   }
 
   test("jsonString: every control char, quote and backslash parse back unchanged") {
@@ -90,20 +106,15 @@ class VerifyGateSpec extends AnyFunSuite {
   }
 
   test("Bench.run leaves one metrics record per (query, rep), stage rows summing to its totals") {
-    val out = s"${tmp()}/bench_out.json"
     SparkTestSession.releaseAll()
     val before = SparkTestSession.persistedIds.size
     val queries = Seq("huber_mean", "q1_agg", "top_k") // huber_mean cuts a barrier
-    val (med, errors) = Bench.run(spark, sf, SparkEntry.selected(Some(queries.mkString(","))), 2, out)
-    assert(errors.isEmpty && med.map(_._1) === queries, errors)
-    val json = new com.fasterxml.jackson.databind.ObjectMapper()
-    val recs = Files.readAllLines(Paths.get(Bench.metricsPath(out))).toArray.toSeq
-      .map(l => json.readTree(l.toString))
+    val (med, recs) = bench(queries, 2)
+    assert(med.map(_._1) === queries)
     assert(recs.map(r => (r.get("query").asText, r.get("rep").asInt)) ===
       (1 to 2).flatMap(rep => queries.map((_, rep))))
     for (r <- recs) {
-      val barriers = (0 until r.get("barriers").size).map(r.get("barriers").get(_).asText)
-      assert(barriers.contains("huber.hist") === (r.get("query").asText == "huber_mean"), r)
+      assert(barriers(r).contains("huber.hist") === (r.get("query").asText == "huber_mean"), r)
       // the scope released the query's barriers before the record read the registry
       assert(r.get("persisted_rdds").asInt === before, r)
       assert(r.get("error").isNull && r.get("task_s").asDouble > 0, r)
@@ -120,6 +131,13 @@ class VerifyGateSpec extends AnyFunSuite {
     def counts(rep: Int) = recs.filter(_.get("rep").asInt == rep)
       .map(r => (r.get("jobs").asInt, r.get("stages").asInt))
     assert(counts(1) === counts(2))
+  }
+
+  test("a sweep labels the corpus once: dedup_clusters_star reads cluster_size_dist's labels") {
+    val (_, Seq(sizes, star)) = bench(Seq("cluster_size_dist", "dedup_clusters_star"), 1)
+    // the labels and the star loop's barriers belong to the memo entry
+    assert(barriers(sizes).isEmpty && barriers(star).isEmpty, Seq(sizes, star))
+    assert(star.get("jobs").asInt < sizes.get("jobs").asInt, Seq(sizes, star))
   }
 
   test("failureText: root cause, one line, at most 300 chars") {
