@@ -3,11 +3,12 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.{Tables => T}
 
-/** Driver contract — see /root/repo/SURVEY.md §2 + §7.
+/** Query contract — see SURVEY.md §2 + §7.
   *
-  * Each `queries` key is one operator from the SURVEY.md §2 inventory;
-  * `oracleSql` holds the DuckDB-equivalent SQL over the same parquet
-  * tables (omitted only for non-SQL-expressible ops → rows-only check).
+  * One registry: each operator from the SURVEY.md §2 inventory is one
+  * entry (name, operator, DuckDB oracle SQL over the same parquet
+  * tables, with the operator's column aliases), listed once.
+  * `queries` and `oracleSql` are its two views.
   */
 object SparkEntry {
 
@@ -17,320 +18,373 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     etl.EtlQueries.silverPipeline(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "bronze_ingest" -> (etl.EtlQueries.bronzeIngest _),
-    "dq_report" -> (etl.EtlQueries.dqReport _),
-    "dq_drift" -> (dq.Drift.dqDrift _),
-    "medians_modes" -> (etl.EtlQueries.mediansModes _),
-    "silver_dedup" -> (etl.EtlQueries.silverDedup _),
-    "silver_pipeline" -> (etl.EtlQueries.silverPipeline _),
-    "incremental_upsert" -> (etl.EtlQueries.incrementalUpsert _),
-    "load_report" -> (etl.EtlQueries.loadReport _),
-    "q1_agg" -> (analytics.Queries.q1Agg _),
-    "q3_join" -> (analytics.Queries.q3Join _),
-    "top_k" -> (analytics.Queries.topK _),
-    "distinct_count" -> (analytics.Queries.distinctCount _),
-    "conditional_pivot" -> (analytics.Queries.conditionalPivot _),
-    "time_series" -> (analytics.Queries.timeSeries _),
-    "window_running" -> (analytics.Queries.windowRunning _),
-    "percentiles" -> (analytics.Queries.percentiles _),
-    "winsorize" -> (analytics.Queries.winsorize _),
-    "corr_stats" -> (analytics.Queries.corrStats _),
-    "histogram" -> (analytics.Queries.histogram _),
-    "semi_anti_join" -> (analytics.Queries.semiAntiJoin _),
-    "set_ops" -> (analytics.Queries.setOps _),
-    "rollup_agg" -> (analytics.Queries.rollupAgg _),
-    "text_tokens" -> (text.TextQueries.textTokens _),
-    "text_quality" -> (text.TextQueries.textQuality _),
-    "text_langid" -> (text.TextQueries.textLangid _),
-    "text_fingerprint" -> (text.TextQueries.textFingerprint _),
-    "text_entropy" -> (text.TextQueries.textEntropy _),
-    "text_entropy2" -> (text.TextQueries.textEntropy2 _),
-    "text_entropy_holdout" -> (text.TextQueries.textEntropyHoldout _),
-    "sample_weighted" -> (pipeline.Pipeline.sampleWeighted _),
-    "events_funnel" -> (analytics.Queries.eventsFunnel _),
-    "events_funnel_skew" -> (analytics.Queries.eventsFunnelSkewSafe _),
-    "events_retention" -> (analytics.Queries.eventsRetention _),
-    "q18_big_orders" -> (analytics.Queries.q18BigOrders _),
-    "quantile_sketch" -> (analytics.Queries.quantileSketch _),
-    "ks_drift" -> (dq.Drift.ksDrift _),
-    "graph_kcore" -> (graph.Graph.graphKcore _),
-    "make_splits" -> (pipeline.Splits.makeSplits _),
-    "anomaly_rolling" -> (analytics.Mining.anomalyRolling _),
-    "conversion_lag" -> (analytics.Mining.conversionLag _),
-    "hll_distinct" -> (analytics.Queries.hllDistinct _),
-    "dedup_keep_best" -> (pipeline.Pipeline.dedupKeepBest _),
-    "vocab_coverage" -> (text.TextQueries.vocabCoverage _),
-    "bpe_pairs" -> (text.TextQueries.bpePairs _),
-    "bpe_merges" -> (text.TextQueries.bpeMerges _),
-    "dedup_exact" -> ((s, d) => dedup.Dedup.exactDedup(T.documents(s, d))),
-    "dedup_minhash" -> ((s, d) => dedup.Dedup.minhashPairs(T.documents(s, d))),
-    "dedup_incremental" -> ((s, d) => dedup.Dedup.dedupIncremental(T.documents(s, d))),
-    "dedup_simhash" -> ((s, d) => dedup.Dedup.simhashPairs(T.documents(s, d))),
-    "dedup_ngram_jaccard" -> ((s, d) => dedup.Dedup.ngramJaccardPairs(T.documents(s, d))),
-    "dedup_embed_cosine" -> ((s, d) => ann.Ann.embedCosinePairs(T.embeddings(s, d))),
-    "ann_topk" -> ((s, d) => ann.Ann.bruteForceTopK(T.embeddings(s, d))),
-    "ann_lsh" -> ((s, d) => ann.Ann.lshTopK(T.embeddings(s, d))),
-    "ann_lsh_multiprobe" -> ((s, d) => ann.Ann.lshTopKMultiProbe(T.embeddings(s, d))),
-    "ann_ivf" -> ((s, d) => ann.Ivf.ivfTopK(T.embeddings(s, d))),
-    "ann_ivfpq" -> ((s, d) => ann.IvfPq.ivfPqTopK(T.embeddings(s, d))),
-    "ann_graph" -> ((s, d) => ann.GraphAnn.graphTopK(T.embeddings(s, d))),
-    "graph_triangles" -> ((s, d) => graph.Graph.triangles(s, d)),
-    "mm_features" -> (multimodal.Multimodal.mmFeatures _),
-    "mm_dedup" -> (multimodal.Multimodal.mmDedup _),
-    "mm_frames" -> (multimodal.Multimodal.mmFrames _),
-    "mm_resize" -> (multimodal.Multimodal.mmResize _),
-    "events_window_agg" -> (streaming.Streaming.eventsWindowAgg _),
-    "sessionize" -> (streaming.Streaming.sessionize _),
-    "sample_stratified" -> (pipeline.Pipeline.sampleStratified _),
-    "sample_fixed" -> (pipeline.Pipeline.sampleFixed _),
-    "pack_sequences" -> (pipeline.Pipeline.packSequences _),
-    "dedup_clusters" -> (pipeline.Pipeline.dedupClustersCached _),
-    "dedup_clusters_star" -> (pipeline.Pipeline.dedupClustersCached _),
-    "asof_join" -> (analytics.Queries.asofJoin _),
-    "asof_join_native" -> (analytics.Queries.asofJoinNative _),
-    "q5_join" -> (analytics.Queries.q5Join _),
-    "above_customer_avg" -> (analytics.Queries.aboveCustomerAvg _),
-    "scalar_funcs" -> (analytics.Queries.scalarFuncs _),
-    "kmv_distinct" -> (analytics.Queries.kmvDistinct _),
-    "json_extract" -> (analytics.Queries.jsonExtract _),
-    "word_count" -> (analytics.Queries.wordCount _),
-    "outer_join_nulls" -> (analytics.Queries.outerJoinNulls _),
-    "grouping_sets" -> (analytics.Queries.groupingSets _),
-    "sliding_window" -> (analytics.Queries.slidingWindow _),
-    "corpus_filter" -> (pipeline.Pipeline.corpusFilter _),
-    "dedup_crossmodal" -> (pipeline.Pipeline.dedupCrossmodal _),
-    "ntile_bins" -> (analytics.Queries.ntileBins _),
-    "ts_delta" -> (analytics.Queries.tsDelta _),
-    "collect_sorted" -> (analytics.Queries.collectSorted _),
-    "regression" -> (analytics.Queries.regression _),
-    "repetition_score" -> (text.TextQueries.repetitionScore _),
-    "pii_scrub" -> (text.TextQueries.piiScrub _),
-    "decontaminate" -> ((s, d) => pipeline.Contamination.decontaminate(T.documents(s, d))),
-    "corpus_mix" -> (pipeline.Pipeline.corpusMix _),
-    "corpus_manifest" -> (pipeline.Pipeline.corpusManifest _),
-    "doc_chunk" -> (pipeline.Pipeline.docChunk _),
-    "dedup_bloom" -> ((s, d) => dedup.Dedup.dedupBloom(T.documents(s, d))),
-    "dedup_semantic" -> ((s, d) => ann.SemDedup.semanticDedup(T.embeddings(s, d))),
-    "ann_sq8" -> ((s, d) => ann.Ann.sq8TopK(T.embeddings(s, d))),
-    "bpe_encode" -> (text.TextQueries.bpeEncode _),
-    "tfidf" -> (text.TextQueries.tfidf _),
-    "interval_overlap" -> (analytics.Queries.intervalOverlap _),
-    "skyline" -> (analytics.Queries.skyline _),
-    "anomaly_mad" -> (analytics.Queries.anomalyMad _),
-    "fuzzy_match" -> (dedup.Fuzzy.fuzzyMatch _),
-    "heavy_hitters" -> (text.TextQueries.heavyHitters _),
-    "dedup_substring" -> (dedup.Substring.dedupSubstring _),
-    "bitext_mine" -> (ann.Bitext.bitextMine _),
-    "item_pagerank" -> (graph.Graph.itemPagerank _),
-    "dup_spans" -> (dedup.Substring.dupSpans _),
-    "mixed_lang" -> (text.TextQueries.mixedLang _),
-    "scd2_history" -> (etl.EtlQueries.scd2History _),
-    "dq_referential" -> (dq.Referential.dqReferential _),
-    "market_basket" -> (analytics.Mining.marketBasket _),
-    "event_transitions" -> (analytics.Mining.eventTransitions _),
-    "gap_fill" -> (analytics.Mining.gapFill _),
-    "split_leakage" -> (pipeline.Splits.splitLeakage _),
-    "chi2_terms" -> (text.Keywords.chi2Terms _),
-    "rfm_segments" -> (analytics.Rfm.rfmSegments _),
-    "collocations" -> (text.Keywords.collocations _),
-    "cube_agg" -> (analytics.Queries.cubeAgg _),
-    "time_weighted_avg" -> (analytics.Mining.timeWeightedAvg _),
-    "session_paths" -> (analytics.Mining.sessionPaths _),
-    "label_propagation" -> (graph.Graph.labelPropagation _),
-    "attribution" -> (analytics.Mining.attribution _),
-    "rolling_active_users" -> (analytics.Mining.rollingActiveUsers _),
-    "seasonality" -> (analytics.Mining.seasonality _),
-    "graph_bfs" -> (graph.Graph.graphBfs _),
-    "dedup_containment" -> ((s, d) => dedup.Dedup.containmentPairs(T.documents(s, d))),
-    "data_skew_report" -> (dq.SkewReport.skewReport _),
-    "q7_volume" -> (analytics.Tpch.q7Volume _),
-    "q10_returned" -> (analytics.Tpch.q10Returned _),
-    "q14_promo" -> (analytics.Tpch.q14Promo _),
-    "q17_small_qty" -> (analytics.Tpch.q17SmallQty _),
-    "q2_min_cost" -> (analytics.Tpch.q2MinCost _),
-    "embed_stats" -> ((s, d) => ann.Embed.embedStats(s, d)),
-    "knn_classify" -> ((s, d) => ann.Embed.knnClassify(s, d)),
-    "cohort_matrix" -> (analytics.Cohorts.cohortMatrix _),
-    "zipf_fit" -> (text.TextQueries.zipfFit _),
-    "lang_confusion" -> (text.TextQueries.langConfusion _),
-    "jaccard_neighbors" -> (graph.Graph.jaccardNeighbors _),
-    "hub_authority" -> (graph.Graph.hubAuthority _),
-    "kmv_intersect" -> (analytics.Sketches.kmvIntersect _),
-    "q15_top_supplier" -> (analytics.Tpch.q15TopSupplier _),
-    "q22_lost_customers" -> (analytics.Tpch.q22LostCustomers _),
-    "q4_priority" -> (analytics.Tpch2.q4Priority _),
-    "q6_forecast" -> (analytics.Tpch2.q6Forecast _),
-    "q8_market_share" -> (analytics.Tpch2.q8MarketShare _),
-    "q9_profit" -> (analytics.Tpch2.q9ProfitShare _),
-    "q11_important_stock" -> (analytics.Tpch2.q11ImportantStock _),
-    "q12_ship_priority" -> (analytics.Tpch2.q12ShipPriority _),
-    "q13_custdist" -> (analytics.Tpch2.q13CustDist _),
-    "q16_supplier_cnt" -> (analytics.Tpch2.q16SupplierCnt _),
-    "q19_disjunctive" -> (analytics.Tpch2.q19Disjunctive _),
-    "q20_promo_suppliers" -> (analytics.Tpch2.q20PromoSuppliers _),
-    "q21_waiting_suppliers" -> (analytics.Tpch2.q21WaitingSuppliers _),
-    "cms_counts" -> (analytics.Sketches.cmsCounts _),
-    "ngram_novelty" -> (text.CorpusOps.ngramNovelty _),
-    "boilerplate_ngrams" -> (text.CorpusOps.boilerplateNgrams _),
-    "corpus_datacard" -> (text.CorpusOps.corpusDatacard _),
-    "embed_outliers" -> (ann.EmbedQc.embedOutliers _),
-    "dup_rate_by_source" -> (text.CorpusOps.dupRateBySource _),
-    "length_filter_sweep" -> (text.CorpusOps.lengthFilterSweep _),
-    "join_size_estimate" -> (analytics.Sketches.joinSizeEstimate _),
-    "bm25_topk" -> (text.Bm25.bm25Topk _),
-    "sax_symbols" -> (analytics.Sax.saxSymbols _),
-    "quality_classifier" -> (pipeline.QualityModel.qualityClassifier _),
-    "rolling_hll_users" -> (analytics.Mining.rollingHllUsers _),
-    "auc_eval" -> (analytics.Eval.aucEval _),
-    "woe_iv" -> (analytics.Eval.woeIv _),
-    "ndcg_eval" -> (analytics.Eval.ndcgEval _),
-    "minhash_calibration" -> ((s, d) =>
-      dedup.Dedup.minhashCalibration(T.documents(s, d))),
-    "hll_profile" -> (dq.Profile.hllProfile _),
-    "ab_test_ttest" -> (analytics.Stats.abTestTtest _),
-    "mann_whitney" -> (analytics.Stats.mannWhitney _),
-    "bootstrap_ci" -> (analytics.Stats.bootstrapCi _),
-    "graph_modularity" -> (graph.Graph.graphModularity _),
-    "forecast_backtest" -> (analytics.Mining.forecastBacktest _),
-    "changepoint_cusum" -> (analytics.Mining.changepointCusum _),
-    "funnel_significance" -> (analytics.Stats.funnelSignificance _),
-    "pareto_report" -> (analytics.Mining.paretoReport _),
-    "embed_drift" -> ((s, d) => ann.Embed.embedDrift(s, d)),
-    "recommender_coverage" -> (analytics.Eval.recommenderCoverage _),
-    "survival_km" -> (analytics.Survival.survivalKm _),
-    "acf_lags" -> (analytics.Series.acfLags _),
-    "stl_decompose" -> (analytics.Series.stlDecompose _),
-    "k_anonymity" -> (dq.Privacy.kAnonymity _),
-    "graph_assortativity" -> (graph.Graph.graphAssortativity _),
-    "pr_curve" -> (analytics.Eval.prCurve _),
-    "ece_calibration" -> (analytics.Eval.eceCalibration _),
-    "cohort_ltv" -> (analytics.Cohorts.cohortLtv _),
-    "target_encode" -> (analytics.Features.targetEncode _),
-    "ab_test_multi" -> (analytics.Stats.abTestMulti _),
-    "sample_aes" -> (pipeline.Pipeline.sampleAes _),
-    "embed_pca" -> ((s, d) => ann.Embed.embedPca(s, d)),
-    "mi_matrix" -> (analytics.Features.miMatrix _),
-    "ann_recall" -> ((s, d) => ann.Ivf.annRecall(s, d)),
-    "dedup_cdc" -> (dedup.Substring.dedupCdc _),
-    "attribution_markov" -> (analytics.Mining.attributionMarkov _),
-    "rank_overlap" -> (analytics.Eval.rankOverlap _),
-    "dispersion_report" -> (analytics.Series.dispersionReport _),
-    "peak_concurrency" -> (analytics.Mining.peakConcurrency _),
-    "anomaly_stl" -> (analytics.Series.anomalyStl _),
-    "benford_check" -> (dq.Benford.benfordCheck _),
-    "text_readability" -> (text.Readability.textReadability _),
-    "ljung_box" -> (analytics.Series.ljungBox _),
-    "demand_curve" -> (analytics.Pricing.demandCurve _),
-    "slice_metrics" -> (dq.Slices.sliceMetrics _),
-    "ewma_smooth" -> (analytics.Series.ewmaSmooth _),
-    "sq8_error_report" -> (ann.Sq8Report.sq8ErrorReport _),
-    "xcorr_lags" -> (analytics.Series.xcorrLags _),
-    "rolling_corr" -> (analytics.Series.rollingCorr _),
-    "holt_linear" -> (analytics.Series.holtLinear _),
-    "growth_accounting" -> (analytics.Growth.growthAccounting _),
-    "streak_lengths" -> (analytics.Growth.streakLengths _),
-    "dq_freshness" -> (dq.Freshness.dqFreshness _),
-    "source_overlap" -> (pipeline.Overlap.sourceOverlap _),
-    "theil_sen" -> (analytics.Stats.theilSen _),
-    "did_estimate" -> (analytics.Stats.didEstimate _),
-    "revenue_deciles" -> (analytics.Stats.revenueDeciles _),
-    "hhi_report" -> (dq.Concentration.hhiReport _),
-    "srm_check" -> (dq.Concentration.srmCheck _),
-    "page_hinkley" -> (analytics.Series.pageHinkley _),
-    "item_novelty" -> (analytics.Growth.itemNovelty _),
-    "interevent_stats" -> (analytics.Growth.intereventStats _),
-    "session_gap_sweep" -> (analytics.Sweeps.sessionGapSweep _),
-    "source_lang_mix" -> (analytics.Sweeps.sourceLangMix _),
-    "attribution_decay" -> (analytics.Mining.attributionDecay _),
-    "hard_negatives" -> ((s, d) => ann.Negatives.hardNegatives(s, d)),
-    "pair_negatives" -> (pipeline.Negatives.pairNegatives _),
-    "cluster_size_dist" -> (pipeline.ClusterStats.clusterSizeDist _),
-    "quality_dup_bias" -> (pipeline.ClusterStats.qualityDupBias _),
-    "trailing_30d_revenue" -> (analytics.Frames.trailing30dRevenue _),
-    "value_ranks" -> (analytics.Frames.valueRanks _),
-    "weighted_median" -> (analytics.Frames.weightedMedian _),
-    "abc_analysis" -> (analytics.Frames.abcAnalysis _),
-    "unpivot_metrics" -> (analytics.Frames.unpivotMetrics _),
-    "shard_plan" -> (etl.Layout.shardPlan _),
-    "salt_plan" -> (etl.Layout.saltPlan _),
-    "encoding_stats" -> (etl.Layout.encodingStats _),
-    "dedup_winnow" -> (dedup.Winnow.dedupWinnow _),
-    "nelson_aalen" -> (analytics.Survival.nelsonAalen _),
-    "seq_patterns" -> (analytics.Sequences.seqPatterns _),
-    "mix_shift" -> (analytics.MixShift.mixShift _),
-    "quantile_normalize" -> (pipeline.Normalize.quantileNormalize _),
-    "rank_fusion" -> ((s, d) => ann.Fusion.rankFusion(s, d)),
-    "time_split_embargo" -> (pipeline.Splits.timeSplitEmbargo _),
-    "cluster_silhouette" -> (ann.Silhouette.clusterSilhouette _),
-    "holt_winters" -> (analytics.Series.holtWinters _),
-    "cuped_adjust" -> (analytics.Stats.cupedAdjust _),
-    "lift_table" -> (analytics.Eval.liftTable _),
-    "graph_clustering" -> (graph.Graph.graphClustering _),
-    "bloom_plan" -> (etl.Layout.bloomPlan _),
-    "partition_plan" -> (etl.Layout.partitionPlan _),
-    "prune_stats" -> (etl.Layout.pruneStats _),
-    "heaps_fit" -> (text.TextQueries.heapsFit _),
-    "conformal_pi" -> (analytics.Stats.conformalPi _),
-    "sequential_test" -> (analytics.Stats.sequentialTest _),
-    "watermark_plan" -> (etl.Layout.watermarkPlan _),
-    "power_analysis" -> (analytics.Stats.powerAnalysis _),
-    "mm_shard_plan" -> (multimodal.Multimodal.mmShardPlan _),
-    "logrank_test" -> (analytics.Survival.logrankTest _),
-    "mrr_eval" -> (analytics.Eval.mrrEval _),
-    "degree_dist" -> (graph.Graph.degreeDist _),
-    "split_balance" -> (pipeline.Splits.splitBalance _),
-    "bpe_fertility" -> (text.TextQueries.bpeFertility _),
-    "cohens_kappa" -> (analytics.Eval.cohensKappa _),
-    "brier_decomposition" -> (analytics.Eval.brierDecomposition _),
-    "gini_lorenz" -> (analytics.Mining.giniLorenz _),
-    "zorder_stats" -> (etl.Layout.zorderStats _),
-    "context_len_sweep" -> (text.CorpusOps.contextLenSweep _),
-    "slice_auc" -> (analytics.Eval.sliceAuc _),
-    "strata_adjust" -> (analytics.Stats.strataAdjust _),
-    "spearman_corr" -> (analytics.Stats.spearmanCorr _),
-    "rank_movers" -> (analytics.Growth.rankMovers _),
-    "loo_source_impact" -> (text.CorpusOps.looSourceImpact _),
-    "upsert_amplification" -> (etl.Layout.upsertAmplification _),
-    "hash_uniformity" -> (analytics.Stats.hashUniformity _),
-    "tail_risk" -> (analytics.Mining.tailRisk _),
-    "slo_burn" -> (analytics.Growth.sloBurn _),
-    "gold_rollup" -> (etl.EtlQueries.goldRollup _),
-    "kendall_tau" -> (analytics.Assoc.kendallTau _),
-    "cramers_v" -> (analytics.Assoc.cramersV _),
-    "runs_test" -> (analytics.Assoc.runsTest _),
-    "js_drift" -> (dq.Drift.jsDrift _),
-    "dau_mau_stickiness" -> (analytics.Growth.dauMauStickiness _),
-    "mann_kendall" -> (analytics.Assoc.mannKendall _),
-    "dup_spans_cut" -> (dedup.Substring.dupSpansCut _),
-    "url_canonicalize" -> (text.Urls.urlCanonicalize _),
-    "host_quality" -> (text.Urls.hostQuality _),
-    "corpus_mix_topic" -> (pipeline.Pipeline.corpusMixTopic _),
-    "record_linkage" -> (dedup.Linkage.recordLinkage _),
-    "blocking_eval" -> (dedup.Linkage.blockingEval _),
-    "uplift_deciles" -> (analytics.Uplift.upliftDeciles _),
-    "jl_projection" -> (ann.Jl.jlProjection _),
-    "token_budget_plan" -> (pipeline.Budget.tokenBudgetPlan _),
-    "compaction_plan" -> (etl.Compaction.compactionPlan _),
-    "t_closeness" -> (dq.Privacy.tCloseness _),
-    "link_scores" -> (graph.LinkPred.linkScores _),
-    "shapley_attribution" -> (analytics.Shapley.shapleyAttribution _),
-    "isotonic_calibration" -> (analytics.Calibration.isotonicCalibration _),
-    "null_pattern" -> (dq.NullPatterns.nullPattern _),
-    "eb_shrinkage" -> (analytics.Shrinkage.ebShrinkage _),
-    "sax_motifs" -> (analytics.SaxMotifs.saxMotifs _),
-    "huber_mean" -> (analytics.Huber.huberMean _),
-    "dtw_distance" -> (analytics.Dtw.dtwDistance _),
-    "burst_detect" -> (analytics.Burst.burstDetect _),
-    "mmr_diversify" -> ((s, d) => ann.Mmr.mmrDiversify(s, d)),
-    "l_diversity" -> (dq.LDiversity.lDiversity _),
-    "cliffs_delta" -> (analytics.Stats.cliffsDelta _),
-    "trimmed_mean" -> (analytics.Robust.trimmedMean _),
-    "tukey_fences" -> (analytics.Robust.tukeyFences _),
-    "hill_tail" -> ((s, d) => analytics.Robust.hillTail(s, d)),
-    "dedup_url" -> (text.Urls.dedupUrl _),
-    "chao1_vocab" -> (text.CorpusOps.chao1Vocab _)
+  /** The operator of each registered query. */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    byName(registry.map { case (name, op, _) => name -> op })
+
+  /** The DuckDB oracle SQL of each registered query. */
+  lazy val oracleSql: Map[String, String] =
+    byName(registry.map { case (name, _, sql) => name -> sql })
+
+  /** `entries` as a map; a name listed twice throws (a `Map(...)`
+    * literal would silently keep the last). */
+  private[graft] def byName[V](entries: Seq[(String, V)]): Map[String, V] = {
+    val twice = entries.groupBy(_._1).collect { case (name, es) if es.size > 1 => name }
+    require(twice.isEmpty, s"query registered twice: ${twice.toSeq.sorted.mkString(",")}")
+    entries.toMap
+  }
+
+  private lazy val registry: Seq[(String, (SparkSession, String) => DataFrame, String)] = Seq(
+    ("bronze_ingest", etl.EtlQueries.bronzeIngest, etl.EtlQueries.bronzeIngestSql),
+    ("dq_report", etl.EtlQueries.dqReport, etl.EtlQueries.dqReportSql),
+    ("dq_drift", dq.Drift.dqDrift, dq.Drift.dqDriftSql),
+    ("medians_modes", etl.EtlQueries.mediansModes, etl.EtlQueries.mediansModesSql),
+    ("silver_dedup", etl.EtlQueries.silverDedup, etl.EtlQueries.silverDedupSql),
+    ("silver_pipeline", etl.EtlQueries.silverPipeline, etl.EtlQueries.silverPipelineSql),
+    ("incremental_upsert", etl.EtlQueries.incrementalUpsert, etl.EtlQueries.incrementalUpsertSql),
+    ("load_report", etl.EtlQueries.loadReport, etl.EtlQueries.loadReportSql),
+    ("q1_agg", analytics.Queries.q1Agg, analytics.Queries.q1AggSql),
+    ("q3_join", analytics.Queries.q3Join, analytics.Queries.q3JoinSql),
+    ("top_k", analytics.Queries.topK, analytics.Queries.topKSql),
+    ("distinct_count", analytics.Queries.distinctCount, analytics.Queries.distinctCountSql),
+    ("conditional_pivot", analytics.Queries.conditionalPivot,
+      analytics.Queries.conditionalPivotSql),
+    ("time_series", analytics.Queries.timeSeries, analytics.Queries.timeSeriesSql),
+    ("window_running", analytics.Queries.windowRunning, analytics.Queries.windowRunningSql),
+    ("percentiles", analytics.Queries.percentiles, analytics.Queries.percentilesSql),
+    ("winsorize", analytics.Queries.winsorize, analytics.Queries.winsorizeSql),
+    ("corr_stats", analytics.Queries.corrStats, analytics.Queries.corrStatsSql),
+    ("histogram", analytics.Queries.histogram, analytics.Queries.histogramSql),
+    ("semi_anti_join", analytics.Queries.semiAntiJoin, analytics.Queries.semiAntiJoinSql),
+    ("set_ops", analytics.Queries.setOps, analytics.Queries.setOpsSql),
+    ("rollup_agg", analytics.Queries.rollupAgg, analytics.Queries.rollupAggSql),
+    ("text_tokens", text.TextQueries.textTokens, text.TextQueries.textTokensSql),
+    ("text_quality", text.TextQueries.textQuality, text.TextQueries.textQualitySql),
+    ("text_langid", text.TextQueries.textLangid, text.TextQueries.textLangidSql),
+    ("text_fingerprint", text.TextQueries.textFingerprint, text.TextQueries.textFingerprintSql),
+    ("text_entropy", text.TextQueries.textEntropy, text.TextQueries.textEntropySql),
+    ("text_entropy2", text.TextQueries.textEntropy2, text.TextQueries.textEntropy2Sql),
+    ("text_entropy_holdout", text.TextQueries.textEntropyHoldout,
+      text.TextQueries.textEntropyHoldoutSql),
+    ("sample_weighted", pipeline.Pipeline.sampleWeighted, pipeline.Pipeline.sampleWeightedSql),
+    ("events_funnel", analytics.Queries.eventsFunnel, analytics.Queries.eventsFunnelSql),
+    // same oracle text: the skew-safe aggregation formulation is
+    // semantically identical to the window formulation
+    ("events_funnel_skew", analytics.Queries.eventsFunnelSkewSafe,
+      analytics.Queries.eventsFunnelSql),
+    ("events_retention", analytics.Queries.eventsRetention, analytics.Queries.eventsRetentionSql),
+    ("q18_big_orders", analytics.Queries.q18BigOrders, analytics.Queries.q18BigOrdersSql),
+    ("quantile_sketch", analytics.Queries.quantileSketch, analytics.Queries.quantileSketchSql),
+    ("ks_drift", dq.Drift.ksDrift, dq.Drift.ksDriftSql),
+    ("graph_kcore", graph.Graph.graphKcore, graph.Graph.graphKcoreSql),
+    ("make_splits", pipeline.Splits.makeSplits, pipeline.Splits.makeSplitsSql),
+    ("anomaly_rolling", analytics.Mining.anomalyRolling, analytics.Mining.anomalyRollingSql),
+    ("conversion_lag", analytics.Mining.conversionLag, analytics.Mining.conversionLagSql),
+    ("hll_distinct", analytics.Queries.hllDistinct, analytics.Queries.hllDistinctSql),
+    ("dedup_keep_best", pipeline.Pipeline.dedupKeepBest, pipeline.Pipeline.dedupKeepBestSql),
+    ("vocab_coverage", text.TextQueries.vocabCoverage, text.TextQueries.vocabCoverageSql),
+    ("bpe_pairs", text.TextQueries.bpePairs, text.TextQueries.bpePairsSql),
+    ("bpe_merges", text.TextQueries.bpeMerges, text.TextQueries.bpeMergesSql),
+    ("dedup_exact", (s, d) => dedup.Dedup.exactDedup(T.documents(s, d)), dedup.Dedup.exactDedupSql),
+    ("dedup_minhash", (s, d) => dedup.Dedup.minhashPairs(T.documents(s, d)),
+      dedup.Dedup.minhashPairsSql()),
+    ("dedup_incremental", (s, d) => dedup.Dedup.dedupIncremental(T.documents(s, d)),
+      dedup.Dedup.dedupIncrementalSql()),
+    ("dedup_simhash", (s, d) => dedup.Dedup.simhashPairs(T.documents(s, d)),
+      dedup.Dedup.simhashPairsSql()),
+    ("dedup_ngram_jaccard", (s, d) => dedup.Dedup.ngramJaccardPairs(T.documents(s, d)),
+      dedup.Dedup.ngramJaccardPairsSql()),
+    ("dedup_embed_cosine", (s, d) => ann.Ann.embedCosinePairs(T.embeddings(s, d)),
+      ann.Ann.embedCosinePairsSql()),
+    ("ann_topk", (s, d) => ann.Ann.bruteForceTopK(T.embeddings(s, d)), ann.Ann.bruteForceTopKSql()),
+    ("ann_lsh", (s, d) => ann.Ann.lshTopK(T.embeddings(s, d)), ann.Ann.lshTopKSql()),
+    ("ann_lsh_multiprobe", (s, d) => ann.Ann.lshTopKMultiProbe(T.embeddings(s, d)),
+      ann.Ann.lshTopKMultiProbeSql()),
+    ("ann_ivf", (s, d) => ann.Ivf.ivfTopK(T.embeddings(s, d)), ann.Ivf.ivfTopKSql()),
+    ("ann_ivfpq", (s, d) => ann.IvfPq.ivfPqTopK(T.embeddings(s, d)), ann.IvfPq.ivfPqTopKSql()),
+    ("ann_graph", (s, d) => ann.GraphAnn.graphTopK(T.embeddings(s, d)),
+      ann.GraphAnn.graphTopKSql()),
+    ("graph_triangles", (s, d) => graph.Graph.triangles(s, d), graph.Graph.trianglesSql),
+    ("mm_features", multimodal.Multimodal.mmFeatures, multimodal.Multimodal.mmFeaturesSql),
+    ("mm_dedup", multimodal.Multimodal.mmDedup, multimodal.Multimodal.mmDedupSql),
+    ("mm_frames", multimodal.Multimodal.mmFrames, multimodal.Multimodal.mmFramesSql),
+    ("mm_resize", multimodal.Multimodal.mmResize, multimodal.Multimodal.mmResizeSql),
+    ("events_window_agg", streaming.Streaming.eventsWindowAgg,
+      streaming.Streaming.eventsWindowAggSql),
+    ("sessionize", streaming.Streaming.sessionize, streaming.Streaming.sessionizeSql),
+    ("sample_stratified", pipeline.Pipeline.sampleStratified,
+      pipeline.Pipeline.sampleStratifiedSql),
+    ("sample_fixed", pipeline.Pipeline.sampleFixed, pipeline.Pipeline.sampleFixedSql),
+    ("pack_sequences", pipeline.Pipeline.packSequences, pipeline.Pipeline.packSequencesSql),
+    ("dedup_clusters", pipeline.Pipeline.dedupClustersCached, pipeline.Pipeline.dedupClustersSql),
+    ("dedup_clusters_star", pipeline.Pipeline.dedupClustersCached,
+      pipeline.Pipeline.dedupClustersSql),
+    ("asof_join", analytics.Queries.asofJoin, analytics.Queries.asofJoinSql),
+    ("asof_join_native", analytics.Queries.asofJoinNative, analytics.Queries.asofJoinSql),
+    ("q5_join", analytics.Queries.q5Join, analytics.Queries.q5JoinSql),
+    ("above_customer_avg", analytics.Queries.aboveCustomerAvg,
+      analytics.Queries.aboveCustomerAvgSql),
+    ("scalar_funcs", analytics.Queries.scalarFuncs, analytics.Queries.scalarFuncsSql),
+    ("kmv_distinct", analytics.Queries.kmvDistinct, analytics.Queries.kmvDistinctSql),
+    ("json_extract", analytics.Queries.jsonExtract, analytics.Queries.jsonExtractSql),
+    ("word_count", analytics.Queries.wordCount, analytics.Queries.wordCountSql),
+    ("outer_join_nulls", analytics.Queries.outerJoinNulls, analytics.Queries.outerJoinNullsSql),
+    ("grouping_sets", analytics.Queries.groupingSets, analytics.Queries.groupingSetsSql),
+    ("sliding_window", analytics.Queries.slidingWindow, analytics.Queries.slidingWindowSql),
+    ("corpus_filter", pipeline.Pipeline.corpusFilter, pipeline.Pipeline.corpusFilterSql),
+    ("dedup_crossmodal", pipeline.Pipeline.dedupCrossmodal, pipeline.Pipeline.dedupCrossmodalSql),
+    ("ntile_bins", analytics.Queries.ntileBins, analytics.Queries.ntileBinsSql),
+    ("ts_delta", analytics.Queries.tsDelta, analytics.Queries.tsDeltaSql),
+    ("collect_sorted", analytics.Queries.collectSorted, analytics.Queries.collectSortedSql),
+    ("regression", analytics.Queries.regression, analytics.Queries.regressionSql),
+    ("repetition_score", text.TextQueries.repetitionScore, text.TextQueries.repetitionScoreSql),
+    ("pii_scrub", text.TextQueries.piiScrub, text.TextQueries.piiScrubSql),
+    ("decontaminate", (s, d) => pipeline.Contamination.decontaminate(T.documents(s, d)),
+      pipeline.Contamination.decontaminateSql),
+    ("corpus_mix", pipeline.Pipeline.corpusMix, pipeline.Pipeline.corpusMixSql),
+    ("corpus_manifest", pipeline.Pipeline.corpusManifest, pipeline.Pipeline.corpusManifestSql),
+    ("doc_chunk", pipeline.Pipeline.docChunk, pipeline.Pipeline.docChunkSql),
+    // oracle is the bloom-free exact formulation: the bloom is a
+    // pruning step with no false negatives, so the output is exact
+    ("dedup_bloom", (s, d) => dedup.Dedup.dedupBloom(T.documents(s, d)), dedup.Dedup.dedupBloomSql),
+    ("dedup_semantic", (s, d) => ann.SemDedup.semanticDedup(T.embeddings(s, d)),
+      ann.SemDedup.semanticDedupSql()),
+    ("ann_sq8", (s, d) => ann.Ann.sq8TopK(T.embeddings(s, d)), ann.Ann.sq8TopKSql()),
+    ("bpe_encode", text.TextQueries.bpeEncode, text.TextQueries.bpeEncodeSql),
+    ("tfidf", text.TextQueries.tfidf, text.TextQueries.tfidfSql),
+    ("interval_overlap", analytics.Queries.intervalOverlap, analytics.Queries.intervalOverlapSql),
+    ("skyline", analytics.Queries.skyline, analytics.Queries.skylineSql),
+    ("anomaly_mad", analytics.Queries.anomalyMad, analytics.Queries.anomalyMadSql),
+    ("fuzzy_match", dedup.Fuzzy.fuzzyMatch, dedup.Fuzzy.fuzzyMatchSql),
+    ("heavy_hitters", text.TextQueries.heavyHitters, text.TextQueries.heavyHittersSql),
+    ("dedup_substring", dedup.Substring.dedupSubstring, dedup.Substring.dedupSubstringSql),
+    ("bitext_mine", ann.Bitext.bitextMine, ann.Bitext.bitextMineSql),
+    ("item_pagerank", graph.Graph.itemPagerank, graph.Graph.itemPagerankSql),
+    ("dup_spans", dedup.Substring.dupSpans, dedup.Substring.dupSpansSql),
+    ("mixed_lang", text.TextQueries.mixedLang, text.TextQueries.mixedLangSql),
+    ("scd2_history", etl.EtlQueries.scd2History, etl.EtlQueries.scd2HistorySql),
+    ("dq_referential", dq.Referential.dqReferential, dq.Referential.dqReferentialSql),
+    ("market_basket", analytics.Mining.marketBasket, analytics.Mining.marketBasketSql),
+    ("event_transitions", analytics.Mining.eventTransitions, analytics.Mining.eventTransitionsSql),
+    ("gap_fill", analytics.Mining.gapFill, analytics.Mining.gapFillSql),
+    ("split_leakage", pipeline.Splits.splitLeakage, pipeline.Splits.splitLeakageSql),
+    ("chi2_terms", text.Keywords.chi2Terms, text.Keywords.chi2TermsSql),
+    ("rfm_segments", analytics.Rfm.rfmSegments, analytics.Rfm.rfmSegmentsSql),
+    ("collocations", text.Keywords.collocations, text.Keywords.collocationsSql),
+    ("cube_agg", analytics.Queries.cubeAgg, analytics.Queries.cubeAggSql),
+    ("time_weighted_avg", analytics.Mining.timeWeightedAvg, analytics.Mining.timeWeightedAvgSql),
+    ("session_paths", analytics.Mining.sessionPaths, analytics.Mining.sessionPathsSql),
+    ("label_propagation", graph.Graph.labelPropagation, graph.Graph.labelPropagationSql),
+    ("attribution", analytics.Mining.attribution, analytics.Mining.attributionSql),
+    ("rolling_active_users", analytics.Mining.rollingActiveUsers,
+      analytics.Mining.rollingActiveUsersSql),
+    ("seasonality", analytics.Mining.seasonality, analytics.Mining.seasonalitySql),
+    ("graph_bfs", graph.Graph.graphBfs, graph.Graph.graphBfsSql),
+    ("dedup_containment", (s, d) => dedup.Dedup.containmentPairs(T.documents(s, d)),
+      dedup.Dedup.containmentPairsSql()),
+    ("data_skew_report", dq.SkewReport.skewReport, dq.SkewReport.skewReportSql),
+    ("q7_volume", analytics.Tpch.q7Volume, analytics.Tpch.q7VolumeSql),
+    ("q10_returned", analytics.Tpch.q10Returned, analytics.Tpch.q10ReturnedSql),
+    ("q14_promo", analytics.Tpch.q14Promo, analytics.Tpch.q14PromoSql),
+    ("q17_small_qty", analytics.Tpch.q17SmallQty, analytics.Tpch.q17SmallQtySql),
+    ("q2_min_cost", analytics.Tpch.q2MinCost, analytics.Tpch.q2MinCostSql),
+    ("embed_stats", (s, d) => ann.Embed.embedStats(s, d), ann.Embed.embedStatsSql),
+    ("knn_classify", (s, d) => ann.Embed.knnClassify(s, d), ann.Embed.knnClassifySql()),
+    ("cohort_matrix", analytics.Cohorts.cohortMatrix, analytics.Cohorts.cohortMatrixSql),
+    ("zipf_fit", text.TextQueries.zipfFit, text.TextQueries.zipfFitSql),
+    ("lang_confusion", text.TextQueries.langConfusion, text.TextQueries.langConfusionSql),
+    ("jaccard_neighbors", graph.Graph.jaccardNeighbors, graph.Graph.jaccardNeighborsSql),
+    ("hub_authority", graph.Graph.hubAuthority, graph.Graph.hubAuthoritySql),
+    ("kmv_intersect", analytics.Sketches.kmvIntersect, analytics.Sketches.kmvIntersectSql),
+    ("q15_top_supplier", analytics.Tpch.q15TopSupplier, analytics.Tpch.q15TopSupplierSql),
+    ("q22_lost_customers", analytics.Tpch.q22LostCustomers, analytics.Tpch.q22LostCustomersSql),
+    ("q4_priority", analytics.Tpch2.q4Priority, analytics.Tpch2.q4PrioritySql),
+    ("q6_forecast", analytics.Tpch2.q6Forecast, analytics.Tpch2.q6ForecastSql),
+    ("q8_market_share", analytics.Tpch2.q8MarketShare, analytics.Tpch2.q8MarketShareSql),
+    ("q9_profit", analytics.Tpch2.q9ProfitShare, analytics.Tpch2.q9ProfitShareSql),
+    ("q11_important_stock", analytics.Tpch2.q11ImportantStock,
+      analytics.Tpch2.q11ImportantStockSql),
+    ("q12_ship_priority", analytics.Tpch2.q12ShipPriority, analytics.Tpch2.q12ShipPrioritySql),
+    ("q13_custdist", analytics.Tpch2.q13CustDist, analytics.Tpch2.q13CustDistSql),
+    ("q16_supplier_cnt", analytics.Tpch2.q16SupplierCnt, analytics.Tpch2.q16SupplierCntSql),
+    ("q19_disjunctive", analytics.Tpch2.q19Disjunctive, analytics.Tpch2.q19DisjunctiveSql),
+    ("q20_promo_suppliers", analytics.Tpch2.q20PromoSuppliers,
+      analytics.Tpch2.q20PromoSuppliersSql),
+    ("q21_waiting_suppliers", analytics.Tpch2.q21WaitingSuppliers,
+      analytics.Tpch2.q21WaitingSuppliersSql),
+    ("cms_counts", analytics.Sketches.cmsCounts, analytics.Sketches.cmsCountsSql),
+    ("ngram_novelty", text.CorpusOps.ngramNovelty, text.CorpusOps.ngramNoveltySql),
+    ("boilerplate_ngrams", text.CorpusOps.boilerplateNgrams, text.CorpusOps.boilerplateNgramsSql),
+    ("corpus_datacard", text.CorpusOps.corpusDatacard, text.CorpusOps.corpusDatacardSql),
+    ("embed_outliers", ann.EmbedQc.embedOutliers, ann.EmbedQc.embedOutliersSql),
+    ("dup_rate_by_source", text.CorpusOps.dupRateBySource, text.CorpusOps.dupRateBySourceSql),
+    ("length_filter_sweep", text.CorpusOps.lengthFilterSweep, text.CorpusOps.lengthFilterSweepSql),
+    ("join_size_estimate", analytics.Sketches.joinSizeEstimate,
+      analytics.Sketches.joinSizeEstimateSql),
+    ("bm25_topk", text.Bm25.bm25Topk, text.Bm25.bm25TopkSql),
+    ("sax_symbols", analytics.Sax.saxSymbols, analytics.Sax.saxSymbolsSql),
+    ("quality_classifier", pipeline.QualityModel.qualityClassifier,
+      pipeline.QualityModel.qualityClassifierSql),
+    ("rolling_hll_users", analytics.Mining.rollingHllUsers, analytics.Mining.rollingHllUsersSql),
+    ("auc_eval", analytics.Eval.aucEval, analytics.Eval.aucEvalSql),
+    ("woe_iv", analytics.Eval.woeIv, analytics.Eval.woeIvSql),
+    ("ndcg_eval", analytics.Eval.ndcgEval, analytics.Eval.ndcgEvalSql),
+    ("minhash_calibration", (s, d) => dedup.Dedup.minhashCalibration(T.documents(s, d)),
+      dedup.Dedup.minhashCalibrationSql),
+    ("hll_profile", dq.Profile.hllProfile, dq.Profile.hllProfileSql),
+    ("ab_test_ttest", analytics.Stats.abTestTtest, analytics.Stats.abTestTtestSql),
+    ("mann_whitney", analytics.Stats.mannWhitney, analytics.Stats.mannWhitneySql),
+    ("bootstrap_ci", analytics.Stats.bootstrapCi, analytics.Stats.bootstrapCiSql),
+    ("graph_modularity", graph.Graph.graphModularity, graph.Graph.graphModularitySql),
+    ("forecast_backtest", analytics.Mining.forecastBacktest, analytics.Mining.forecastBacktestSql),
+    ("changepoint_cusum", analytics.Mining.changepointCusum, analytics.Mining.changepointCusumSql),
+    ("funnel_significance", analytics.Stats.funnelSignificance,
+      analytics.Stats.funnelSignificanceSql),
+    ("pareto_report", analytics.Mining.paretoReport, analytics.Mining.paretoReportSql),
+    ("embed_drift", (s, d) => ann.Embed.embedDrift(s, d), ann.Embed.embedDriftSql),
+    ("recommender_coverage", analytics.Eval.recommenderCoverage,
+      analytics.Eval.recommenderCoverageSql),
+    ("survival_km", analytics.Survival.survivalKm, analytics.Survival.survivalKmSql),
+    ("acf_lags", analytics.Series.acfLags, analytics.Series.acfLagsSql),
+    ("stl_decompose", analytics.Series.stlDecompose, analytics.Series.stlDecomposeSql),
+    ("k_anonymity", dq.Privacy.kAnonymity, dq.Privacy.kAnonymitySql),
+    ("graph_assortativity", graph.Graph.graphAssortativity, graph.Graph.graphAssortativitySql),
+    ("pr_curve", analytics.Eval.prCurve, analytics.Eval.prCurveSql),
+    ("ece_calibration", analytics.Eval.eceCalibration, analytics.Eval.eceCalibrationSql),
+    ("cohort_ltv", analytics.Cohorts.cohortLtv, analytics.Cohorts.cohortLtvSql),
+    ("target_encode", analytics.Features.targetEncode, analytics.Features.targetEncodeSql),
+    ("ab_test_multi", analytics.Stats.abTestMulti, analytics.Stats.abTestMultiSql),
+    ("sample_aes", pipeline.Pipeline.sampleAes, pipeline.Pipeline.sampleAesSql),
+    ("embed_pca", (s, d) => ann.Embed.embedPca(s, d), ann.Embed.embedPcaSql),
+    ("mi_matrix", analytics.Features.miMatrix, analytics.Features.miMatrixSql),
+    ("ann_recall", (s, d) => ann.Ivf.annRecall(s, d), ann.Ivf.annRecallSql()),
+    ("dedup_cdc", dedup.Substring.dedupCdc, dedup.Substring.dedupCdcSql),
+    ("attribution_markov", analytics.Mining.attributionMarkov,
+      analytics.Mining.attributionMarkovSql),
+    ("rank_overlap", analytics.Eval.rankOverlap, analytics.Eval.rankOverlapSql),
+    ("dispersion_report", analytics.Series.dispersionReport, analytics.Series.dispersionReportSql),
+    ("peak_concurrency", analytics.Mining.peakConcurrency, analytics.Mining.peakConcurrencySql),
+    ("anomaly_stl", analytics.Series.anomalyStl, analytics.Series.anomalyStlSql),
+    ("benford_check", dq.Benford.benfordCheck, dq.Benford.benfordCheckSql),
+    ("text_readability", text.Readability.textReadability, text.Readability.textReadabilitySql),
+    ("ljung_box", analytics.Series.ljungBox, analytics.Series.ljungBoxSql),
+    ("demand_curve", analytics.Pricing.demandCurve, analytics.Pricing.demandCurveSql),
+    ("slice_metrics", dq.Slices.sliceMetrics, dq.Slices.sliceMetricsSql),
+    ("ewma_smooth", analytics.Series.ewmaSmooth, analytics.Series.ewmaSmoothSql),
+    ("sq8_error_report", ann.Sq8Report.sq8ErrorReport, ann.Sq8Report.sq8ErrorReportSql),
+    ("xcorr_lags", analytics.Series.xcorrLags, analytics.Series.xcorrLagsSql),
+    ("rolling_corr", analytics.Series.rollingCorr, analytics.Series.rollingCorrSql),
+    ("holt_linear", analytics.Series.holtLinear, analytics.Series.holtLinearSql),
+    ("growth_accounting", analytics.Growth.growthAccounting, analytics.Growth.growthAccountingSql),
+    ("streak_lengths", analytics.Growth.streakLengths, analytics.Growth.streakLengthsSql),
+    ("dq_freshness", dq.Freshness.dqFreshness, dq.Freshness.dqFreshnessSql),
+    ("source_overlap", pipeline.Overlap.sourceOverlap, pipeline.Overlap.sourceOverlapSql),
+    ("theil_sen", analytics.Stats.theilSen, analytics.Stats.theilSenSql),
+    ("did_estimate", analytics.Stats.didEstimate, analytics.Stats.didEstimateSql),
+    ("revenue_deciles", analytics.Stats.revenueDeciles, analytics.Stats.revenueDecilesSql),
+    ("hhi_report", dq.Concentration.hhiReport, dq.Concentration.hhiReportSql),
+    ("srm_check", dq.Concentration.srmCheck, dq.Concentration.srmCheckSql),
+    ("page_hinkley", analytics.Series.pageHinkley, analytics.Series.pageHinkleySql),
+    ("item_novelty", analytics.Growth.itemNovelty, analytics.Growth.itemNoveltySql),
+    ("interevent_stats", analytics.Growth.intereventStats, analytics.Growth.intereventStatsSql),
+    ("session_gap_sweep", analytics.Sweeps.sessionGapSweep, analytics.Sweeps.sessionGapSweepSql),
+    ("source_lang_mix", analytics.Sweeps.sourceLangMix, analytics.Sweeps.sourceLangMixSql),
+    ("attribution_decay", analytics.Mining.attributionDecay, analytics.Mining.attributionDecaySql),
+    ("hard_negatives", (s, d) => ann.Negatives.hardNegatives(s, d),
+      ann.Negatives.hardNegativesSql()),
+    ("pair_negatives", pipeline.Negatives.pairNegatives, pipeline.Negatives.pairNegativesSql),
+    ("cluster_size_dist", pipeline.ClusterStats.clusterSizeDist,
+      pipeline.ClusterStats.clusterSizeDistSql),
+    ("quality_dup_bias", pipeline.ClusterStats.qualityDupBias,
+      pipeline.ClusterStats.qualityDupBiasSql),
+    ("trailing_30d_revenue", analytics.Frames.trailing30dRevenue,
+      analytics.Frames.trailing30dRevenueSql),
+    ("value_ranks", analytics.Frames.valueRanks, analytics.Frames.valueRanksSql),
+    ("weighted_median", analytics.Frames.weightedMedian, analytics.Frames.weightedMedianSql),
+    ("abc_analysis", analytics.Frames.abcAnalysis, analytics.Frames.abcAnalysisSql),
+    ("unpivot_metrics", analytics.Frames.unpivotMetrics, analytics.Frames.unpivotMetricsSql),
+    ("shard_plan", etl.Layout.shardPlan, etl.Layout.shardPlanSql),
+    ("salt_plan", etl.Layout.saltPlan, etl.Layout.saltPlanSql),
+    ("encoding_stats", etl.Layout.encodingStats, etl.Layout.encodingStatsSql),
+    ("dedup_winnow", dedup.Winnow.dedupWinnow, dedup.Winnow.dedupWinnowSql),
+    ("nelson_aalen", analytics.Survival.nelsonAalen, analytics.Survival.nelsonAalenSql),
+    ("seq_patterns", analytics.Sequences.seqPatterns, analytics.Sequences.seqPatternsSql),
+    ("mix_shift", analytics.MixShift.mixShift, analytics.MixShift.mixShiftSql),
+    ("quantile_normalize", pipeline.Normalize.quantileNormalize,
+      pipeline.Normalize.quantileNormalizeSql),
+    ("rank_fusion", (s, d) => ann.Fusion.rankFusion(s, d), ann.Fusion.rankFusionSql),
+    ("time_split_embargo", pipeline.Splits.timeSplitEmbargo, pipeline.Splits.timeSplitEmbargoSql),
+    ("cluster_silhouette", ann.Silhouette.clusterSilhouette, ann.Silhouette.clusterSilhouetteSql),
+    ("holt_winters", analytics.Series.holtWinters, analytics.Series.holtWintersSql),
+    ("cuped_adjust", analytics.Stats.cupedAdjust, analytics.Stats.cupedAdjustSql),
+    ("lift_table", analytics.Eval.liftTable, analytics.Eval.liftTableSql),
+    ("graph_clustering", graph.Graph.graphClustering, graph.Graph.graphClusteringSql),
+    ("bloom_plan", etl.Layout.bloomPlan, etl.Layout.bloomPlanSql),
+    ("partition_plan", etl.Layout.partitionPlan, etl.Layout.partitionPlanSql),
+    ("prune_stats", etl.Layout.pruneStats, etl.Layout.pruneStatsSql),
+    ("heaps_fit", text.TextQueries.heapsFit, text.TextQueries.heapsFitSql),
+    ("conformal_pi", analytics.Stats.conformalPi, analytics.Stats.conformalPiSql),
+    ("sequential_test", analytics.Stats.sequentialTest, analytics.Stats.sequentialTestSql),
+    ("watermark_plan", etl.Layout.watermarkPlan, etl.Layout.watermarkPlanSql),
+    ("power_analysis", analytics.Stats.powerAnalysis, analytics.Stats.powerAnalysisSql),
+    ("mm_shard_plan", multimodal.Multimodal.mmShardPlan, multimodal.Multimodal.mmShardPlanSql),
+    ("logrank_test", analytics.Survival.logrankTest, analytics.Survival.logrankTestSql),
+    ("mrr_eval", analytics.Eval.mrrEval, analytics.Eval.mrrEvalSql),
+    ("degree_dist", graph.Graph.degreeDist, graph.Graph.degreeDistSql),
+    ("split_balance", pipeline.Splits.splitBalance, pipeline.Splits.splitBalanceSql),
+    ("bpe_fertility", text.TextQueries.bpeFertility, text.TextQueries.bpeFertilitySql),
+    ("cohens_kappa", analytics.Eval.cohensKappa, analytics.Eval.cohensKappaSql),
+    ("brier_decomposition", analytics.Eval.brierDecomposition,
+      analytics.Eval.brierDecompositionSql),
+    ("gini_lorenz", analytics.Mining.giniLorenz, analytics.Mining.giniLorenzSql),
+    ("zorder_stats", etl.Layout.zorderStats, etl.Layout.zorderStatsSql),
+    ("context_len_sweep", text.CorpusOps.contextLenSweep, text.CorpusOps.contextLenSweepSql),
+    ("slice_auc", analytics.Eval.sliceAuc, analytics.Eval.sliceAucSql),
+    ("strata_adjust", analytics.Stats.strataAdjust, analytics.Stats.strataAdjustSql),
+    ("spearman_corr", analytics.Stats.spearmanCorr, analytics.Stats.spearmanCorrSql),
+    ("rank_movers", analytics.Growth.rankMovers, analytics.Growth.rankMoversSql),
+    ("loo_source_impact", text.CorpusOps.looSourceImpact, text.CorpusOps.looSourceImpactSql),
+    ("upsert_amplification", etl.Layout.upsertAmplification, etl.Layout.upsertAmplificationSql),
+    ("hash_uniformity", analytics.Stats.hashUniformity, analytics.Stats.hashUniformitySql),
+    ("tail_risk", analytics.Mining.tailRisk, analytics.Mining.tailRiskSql),
+    ("slo_burn", analytics.Growth.sloBurn, analytics.Growth.sloBurnSql),
+    ("gold_rollup", etl.EtlQueries.goldRollup, etl.EtlQueries.goldRollupSql),
+    ("kendall_tau", analytics.Assoc.kendallTau, analytics.Assoc.kendallTauSql),
+    ("cramers_v", analytics.Assoc.cramersV, analytics.Assoc.cramersVSql),
+    ("runs_test", analytics.Assoc.runsTest, analytics.Assoc.runsTestSql),
+    ("js_drift", dq.Drift.jsDrift, dq.Drift.jsDriftSql),
+    ("dau_mau_stickiness", analytics.Growth.dauMauStickiness, analytics.Growth.dauMauStickinessSql),
+    ("mann_kendall", analytics.Assoc.mannKendall, analytics.Assoc.mannKendallSql),
+    ("dup_spans_cut", dedup.Substring.dupSpansCut, dedup.Substring.dupSpansCutSql),
+    ("url_canonicalize", text.Urls.urlCanonicalize, text.Urls.urlCanonicalizeSql),
+    ("host_quality", text.Urls.hostQuality, text.Urls.hostQualitySql),
+    ("corpus_mix_topic", pipeline.Pipeline.corpusMixTopic, pipeline.Pipeline.corpusMixTopicSql),
+    ("record_linkage", dedup.Linkage.recordLinkage, dedup.Linkage.recordLinkageSql),
+    ("blocking_eval", dedup.Linkage.blockingEval, dedup.Linkage.blockingEvalSql),
+    ("uplift_deciles", analytics.Uplift.upliftDeciles, analytics.Uplift.upliftDecilesSql),
+    ("jl_projection", ann.Jl.jlProjection, ann.Jl.jlProjectionSql),
+    ("token_budget_plan", pipeline.Budget.tokenBudgetPlan, pipeline.Budget.tokenBudgetPlanSql),
+    ("compaction_plan", etl.Compaction.compactionPlan, etl.Compaction.compactionPlanSql),
+    ("t_closeness", dq.Privacy.tCloseness, dq.Privacy.tClosenessSql),
+    ("link_scores", graph.LinkPred.linkScores, graph.LinkPred.linkScoresSql),
+    ("shapley_attribution", analytics.Shapley.shapleyAttribution,
+      analytics.Shapley.shapleyAttributionSql),
+    ("isotonic_calibration", analytics.Calibration.isotonicCalibration,
+      analytics.Calibration.isotonicCalibrationSql),
+    ("null_pattern", dq.NullPatterns.nullPattern, dq.NullPatterns.nullPatternSql),
+    ("eb_shrinkage", analytics.Shrinkage.ebShrinkage, analytics.Shrinkage.ebShrinkageSql),
+    ("sax_motifs", analytics.SaxMotifs.saxMotifs, analytics.SaxMotifs.saxMotifsSql),
+    ("huber_mean", analytics.Huber.huberMean, analytics.Huber.huberMeanSql),
+    ("dtw_distance", analytics.Dtw.dtwDistance, analytics.Dtw.dtwDistanceSql),
+    ("burst_detect", analytics.Burst.burstDetect, analytics.Burst.burstDetectSql),
+    ("mmr_diversify", (s, d) => ann.Mmr.mmrDiversify(s, d), ann.Mmr.mmrDiversifySql()),
+    ("l_diversity", dq.LDiversity.lDiversity, dq.LDiversity.lDiversitySql),
+    ("cliffs_delta", analytics.Stats.cliffsDelta, analytics.Stats.cliffsDeltaSql),
+    ("trimmed_mean", analytics.Robust.trimmedMean, analytics.Robust.trimmedMeanSql),
+    ("tukey_fences", analytics.Robust.tukeyFences, analytics.Robust.tukeyFencesSql),
+    ("hill_tail", (s, d) => analytics.Robust.hillTail(s, d), analytics.Robust.hillTailSql()),
+    ("dedup_url", text.Urls.dedupUrl, text.Urls.dedupUrlSql),
+    ("chao1_vocab", text.CorpusOps.chao1Vocab, text.CorpusOps.chao1VocabSql)
   )
 
   // ---- the whole-surface runner: Bench, Verify, DegenerateGate,
@@ -398,323 +452,4 @@ object SparkEntry {
       (if (head.length + at.length <= 300 || cut < 0) head else head.take(cut + 1)) + at
     }.replace('\n', ' ').take(300)
   }
-
-  /** DuckDB oracle SQL, same column aliases as the Spark queries. */
-  def oracleSql: Map[String, String] = Map(
-    "bronze_ingest" -> etl.EtlQueries.bronzeIngestSql,
-    "dq_report" -> etl.EtlQueries.dqReportSql,
-    "dq_drift" -> dq.Drift.dqDriftSql,
-    "medians_modes" -> etl.EtlQueries.mediansModesSql,
-    "silver_dedup" -> etl.EtlQueries.silverDedupSql,
-    "silver_pipeline" -> etl.EtlQueries.silverPipelineSql,
-    "incremental_upsert" -> etl.EtlQueries.incrementalUpsertSql,
-    "load_report" -> etl.EtlQueries.loadReportSql,
-    "q1_agg" -> analytics.Queries.q1AggSql,
-    "q3_join" -> analytics.Queries.q3JoinSql,
-    "top_k" -> analytics.Queries.topKSql,
-    "distinct_count" -> analytics.Queries.distinctCountSql,
-    "conditional_pivot" -> analytics.Queries.conditionalPivotSql,
-    "time_series" -> analytics.Queries.timeSeriesSql,
-    "window_running" -> analytics.Queries.windowRunningSql,
-    "percentiles" -> analytics.Queries.percentilesSql,
-    "winsorize" -> analytics.Queries.winsorizeSql,
-    "corr_stats" -> analytics.Queries.corrStatsSql,
-    "histogram" -> analytics.Queries.histogramSql,
-    "semi_anti_join" -> analytics.Queries.semiAntiJoinSql,
-    "set_ops" -> analytics.Queries.setOpsSql,
-    "rollup_agg" -> analytics.Queries.rollupAggSql,
-    "text_tokens" -> text.TextQueries.textTokensSql,
-    "text_quality" -> text.TextQueries.textQualitySql,
-    "text_langid" -> text.TextQueries.textLangidSql,
-    "text_fingerprint" -> text.TextQueries.textFingerprintSql,
-    "text_entropy" -> text.TextQueries.textEntropySql,
-    "text_entropy2" -> text.TextQueries.textEntropy2Sql,
-    "text_entropy_holdout" -> text.TextQueries.textEntropyHoldoutSql,
-    "sample_weighted" -> pipeline.Pipeline.sampleWeightedSql,
-    "events_funnel" -> analytics.Queries.eventsFunnelSql,
-    // same oracle text: the skew-safe aggregation formulation is
-    // semantically identical to the window formulation
-    "events_funnel_skew" -> analytics.Queries.eventsFunnelSql,
-    "events_retention" -> analytics.Queries.eventsRetentionSql,
-    "q18_big_orders" -> analytics.Queries.q18BigOrdersSql,
-    "quantile_sketch" -> analytics.Queries.quantileSketchSql,
-    "ks_drift" -> dq.Drift.ksDriftSql,
-    "graph_kcore" -> graph.Graph.graphKcoreSql,
-    "make_splits" -> pipeline.Splits.makeSplitsSql,
-    "anomaly_rolling" -> analytics.Mining.anomalyRollingSql,
-    "conversion_lag" -> analytics.Mining.conversionLagSql,
-    "hll_distinct" -> analytics.Queries.hllDistinctSql,
-    "dedup_keep_best" -> pipeline.Pipeline.dedupKeepBestSql,
-    "vocab_coverage" -> text.TextQueries.vocabCoverageSql,
-    "bpe_pairs" -> text.TextQueries.bpePairsSql,
-    "bpe_merges" -> text.TextQueries.bpeMergesSql,
-    "dedup_exact" -> dedup.Dedup.exactDedupSql,
-    "dedup_minhash" -> dedup.Dedup.minhashPairsSql(),
-    "dedup_incremental" -> dedup.Dedup.dedupIncrementalSql(),
-    "dedup_simhash" -> dedup.Dedup.simhashPairsSql(),
-    "dedup_ngram_jaccard" -> dedup.Dedup.ngramJaccardPairsSql(),
-    "dedup_embed_cosine" -> ann.Ann.embedCosinePairsSql(),
-    "ann_topk" -> ann.Ann.bruteForceTopKSql(),
-    "ann_lsh" -> ann.Ann.lshTopKSql(),
-    "ann_lsh_multiprobe" -> ann.Ann.lshTopKMultiProbeSql(),
-    "ann_ivf" -> ann.Ivf.ivfTopKSql(),
-    "ann_ivfpq" -> ann.IvfPq.ivfPqTopKSql(),
-    "ann_graph" -> ann.GraphAnn.graphTopKSql(),
-    "graph_triangles" -> graph.Graph.trianglesSql,
-    "mm_features" -> multimodal.Multimodal.mmFeaturesSql,
-    "mm_dedup" -> multimodal.Multimodal.mmDedupSql,
-    "mm_frames" -> multimodal.Multimodal.mmFramesSql,
-    "mm_resize" -> multimodal.Multimodal.mmResizeSql,
-    "events_window_agg" -> streaming.Streaming.eventsWindowAggSql,
-    "sessionize" -> streaming.Streaming.sessionizeSql,
-    "sample_stratified" -> pipeline.Pipeline.sampleStratifiedSql,
-    "sample_fixed" -> pipeline.Pipeline.sampleFixedSql,
-    "pack_sequences" -> pipeline.Pipeline.packSequencesSql,
-    "dedup_clusters" -> pipeline.Pipeline.dedupClustersSql,
-    "dedup_clusters_star" -> pipeline.Pipeline.dedupClustersSql,
-    "asof_join" -> analytics.Queries.asofJoinSql,
-    "asof_join_native" -> analytics.Queries.asofJoinSql,
-    "q5_join" -> analytics.Queries.q5JoinSql,
-    "above_customer_avg" -> analytics.Queries.aboveCustomerAvgSql,
-    "scalar_funcs" -> analytics.Queries.scalarFuncsSql,
-    "kmv_distinct" -> analytics.Queries.kmvDistinctSql,
-    "json_extract" -> analytics.Queries.jsonExtractSql,
-    "word_count" -> analytics.Queries.wordCountSql,
-    "outer_join_nulls" -> analytics.Queries.outerJoinNullsSql,
-    "grouping_sets" -> analytics.Queries.groupingSetsSql,
-    "sliding_window" -> analytics.Queries.slidingWindowSql,
-    "corpus_filter" -> pipeline.Pipeline.corpusFilterSql,
-    "dedup_crossmodal" -> pipeline.Pipeline.dedupCrossmodalSql,
-    "ntile_bins" -> analytics.Queries.ntileBinsSql,
-    "ts_delta" -> analytics.Queries.tsDeltaSql,
-    "collect_sorted" -> analytics.Queries.collectSortedSql,
-    "regression" -> analytics.Queries.regressionSql,
-    "repetition_score" -> text.TextQueries.repetitionScoreSql,
-    "pii_scrub" -> text.TextQueries.piiScrubSql,
-    "decontaminate" -> pipeline.Contamination.decontaminateSql,
-    "corpus_mix" -> pipeline.Pipeline.corpusMixSql,
-    "corpus_manifest" -> pipeline.Pipeline.corpusManifestSql,
-    "doc_chunk" -> pipeline.Pipeline.docChunkSql,
-    // oracle is the bloom-free exact formulation: the bloom is a
-    // pruning step with no false negatives, so the output is exact
-    "dedup_bloom" -> dedup.Dedup.dedupBloomSql,
-    "dedup_semantic" -> ann.SemDedup.semanticDedupSql(),
-    "ann_sq8" -> ann.Ann.sq8TopKSql(),
-    "bpe_encode" -> text.TextQueries.bpeEncodeSql,
-    "tfidf" -> text.TextQueries.tfidfSql,
-    "interval_overlap" -> analytics.Queries.intervalOverlapSql,
-    "skyline" -> analytics.Queries.skylineSql,
-    "anomaly_mad" -> analytics.Queries.anomalyMadSql,
-    "fuzzy_match" -> dedup.Fuzzy.fuzzyMatchSql,
-    "heavy_hitters" -> text.TextQueries.heavyHittersSql,
-    "dedup_substring" -> dedup.Substring.dedupSubstringSql,
-    "bitext_mine" -> ann.Bitext.bitextMineSql,
-    "item_pagerank" -> graph.Graph.itemPagerankSql,
-    "dup_spans" -> dedup.Substring.dupSpansSql,
-    "mixed_lang" -> text.TextQueries.mixedLangSql,
-    "scd2_history" -> etl.EtlQueries.scd2HistorySql,
-    "dq_referential" -> dq.Referential.dqReferentialSql,
-    "market_basket" -> analytics.Mining.marketBasketSql,
-    "event_transitions" -> analytics.Mining.eventTransitionsSql,
-    "gap_fill" -> analytics.Mining.gapFillSql,
-    "split_leakage" -> pipeline.Splits.splitLeakageSql,
-    "chi2_terms" -> text.Keywords.chi2TermsSql,
-    "rfm_segments" -> analytics.Rfm.rfmSegmentsSql,
-    "collocations" -> text.Keywords.collocationsSql,
-    "cube_agg" -> analytics.Queries.cubeAggSql,
-    "time_weighted_avg" -> analytics.Mining.timeWeightedAvgSql,
-    "session_paths" -> analytics.Mining.sessionPathsSql,
-    "label_propagation" -> graph.Graph.labelPropagationSql,
-    "attribution" -> analytics.Mining.attributionSql,
-    "rolling_active_users" -> analytics.Mining.rollingActiveUsersSql,
-    "seasonality" -> analytics.Mining.seasonalitySql,
-    "graph_bfs" -> graph.Graph.graphBfsSql,
-    "dedup_containment" -> dedup.Dedup.containmentPairsSql(),
-    "data_skew_report" -> dq.SkewReport.skewReportSql,
-    "q7_volume" -> analytics.Tpch.q7VolumeSql,
-    "q10_returned" -> analytics.Tpch.q10ReturnedSql,
-    "q14_promo" -> analytics.Tpch.q14PromoSql,
-    "q17_small_qty" -> analytics.Tpch.q17SmallQtySql,
-    "q2_min_cost" -> analytics.Tpch.q2MinCostSql,
-    "embed_stats" -> ann.Embed.embedStatsSql,
-    "knn_classify" -> ann.Embed.knnClassifySql(),
-    "cohort_matrix" -> analytics.Cohorts.cohortMatrixSql,
-    "zipf_fit" -> text.TextQueries.zipfFitSql,
-    "lang_confusion" -> text.TextQueries.langConfusionSql,
-    "jaccard_neighbors" -> graph.Graph.jaccardNeighborsSql,
-    "hub_authority" -> graph.Graph.hubAuthoritySql,
-    "kmv_intersect" -> analytics.Sketches.kmvIntersectSql,
-    "q15_top_supplier" -> analytics.Tpch.q15TopSupplierSql,
-    "q22_lost_customers" -> analytics.Tpch.q22LostCustomersSql,
-    "q4_priority" -> analytics.Tpch2.q4PrioritySql,
-    "q6_forecast" -> analytics.Tpch2.q6ForecastSql,
-    "q8_market_share" -> analytics.Tpch2.q8MarketShareSql,
-    "q9_profit" -> analytics.Tpch2.q9ProfitShareSql,
-    "q11_important_stock" -> analytics.Tpch2.q11ImportantStockSql,
-    "q12_ship_priority" -> analytics.Tpch2.q12ShipPrioritySql,
-    "q13_custdist" -> analytics.Tpch2.q13CustDistSql,
-    "q16_supplier_cnt" -> analytics.Tpch2.q16SupplierCntSql,
-    "q19_disjunctive" -> analytics.Tpch2.q19DisjunctiveSql,
-    "q20_promo_suppliers" -> analytics.Tpch2.q20PromoSuppliersSql,
-    "q21_waiting_suppliers" -> analytics.Tpch2.q21WaitingSuppliersSql,
-    "cms_counts" -> analytics.Sketches.cmsCountsSql,
-    "ngram_novelty" -> text.CorpusOps.ngramNoveltySql,
-    "boilerplate_ngrams" -> text.CorpusOps.boilerplateNgramsSql,
-    "corpus_datacard" -> text.CorpusOps.corpusDatacardSql,
-    "embed_outliers" -> ann.EmbedQc.embedOutliersSql,
-    "dup_rate_by_source" -> text.CorpusOps.dupRateBySourceSql,
-    "length_filter_sweep" -> text.CorpusOps.lengthFilterSweepSql,
-    "join_size_estimate" -> analytics.Sketches.joinSizeEstimateSql,
-    "bm25_topk" -> text.Bm25.bm25TopkSql,
-    "sax_symbols" -> analytics.Sax.saxSymbolsSql,
-    "quality_classifier" -> pipeline.QualityModel.qualityClassifierSql,
-    "rolling_hll_users" -> analytics.Mining.rollingHllUsersSql,
-    "auc_eval" -> analytics.Eval.aucEvalSql,
-    "woe_iv" -> analytics.Eval.woeIvSql,
-    "ndcg_eval" -> analytics.Eval.ndcgEvalSql,
-    "minhash_calibration" -> dedup.Dedup.minhashCalibrationSql,
-    "hll_profile" -> dq.Profile.hllProfileSql,
-    "ab_test_ttest" -> analytics.Stats.abTestTtestSql,
-    "mann_whitney" -> analytics.Stats.mannWhitneySql,
-    "bootstrap_ci" -> analytics.Stats.bootstrapCiSql,
-    "graph_modularity" -> graph.Graph.graphModularitySql,
-    "forecast_backtest" -> analytics.Mining.forecastBacktestSql,
-    "changepoint_cusum" -> analytics.Mining.changepointCusumSql,
-    "funnel_significance" -> analytics.Stats.funnelSignificanceSql,
-    "pareto_report" -> analytics.Mining.paretoReportSql,
-    "embed_drift" -> ann.Embed.embedDriftSql,
-    "recommender_coverage" -> analytics.Eval.recommenderCoverageSql,
-    "survival_km" -> analytics.Survival.survivalKmSql,
-    "acf_lags" -> analytics.Series.acfLagsSql,
-    "stl_decompose" -> analytics.Series.stlDecomposeSql,
-    "k_anonymity" -> dq.Privacy.kAnonymitySql,
-    "graph_assortativity" -> graph.Graph.graphAssortativitySql,
-    "pr_curve" -> analytics.Eval.prCurveSql,
-    "ece_calibration" -> analytics.Eval.eceCalibrationSql,
-    "cohort_ltv" -> analytics.Cohorts.cohortLtvSql,
-    "target_encode" -> analytics.Features.targetEncodeSql,
-    "ab_test_multi" -> analytics.Stats.abTestMultiSql,
-    "sample_aes" -> pipeline.Pipeline.sampleAesSql,
-    "embed_pca" -> ann.Embed.embedPcaSql,
-    "mi_matrix" -> analytics.Features.miMatrixSql,
-    "ann_recall" -> ann.Ivf.annRecallSql(),
-    "dedup_cdc" -> dedup.Substring.dedupCdcSql,
-    "attribution_markov" -> analytics.Mining.attributionMarkovSql,
-    "rank_overlap" -> analytics.Eval.rankOverlapSql,
-    "dispersion_report" -> analytics.Series.dispersionReportSql,
-    "peak_concurrency" -> analytics.Mining.peakConcurrencySql,
-    "anomaly_stl" -> analytics.Series.anomalyStlSql,
-    "benford_check" -> dq.Benford.benfordCheckSql,
-    "text_readability" -> text.Readability.textReadabilitySql,
-    "ljung_box" -> analytics.Series.ljungBoxSql,
-    "demand_curve" -> analytics.Pricing.demandCurveSql,
-    "slice_metrics" -> dq.Slices.sliceMetricsSql,
-    "ewma_smooth" -> analytics.Series.ewmaSmoothSql,
-    "sq8_error_report" -> ann.Sq8Report.sq8ErrorReportSql,
-    "xcorr_lags" -> analytics.Series.xcorrLagsSql,
-    "rolling_corr" -> analytics.Series.rollingCorrSql,
-    "holt_linear" -> analytics.Series.holtLinearSql,
-    "growth_accounting" -> analytics.Growth.growthAccountingSql,
-    "streak_lengths" -> analytics.Growth.streakLengthsSql,
-    "dq_freshness" -> dq.Freshness.dqFreshnessSql,
-    "source_overlap" -> pipeline.Overlap.sourceOverlapSql,
-    "theil_sen" -> analytics.Stats.theilSenSql,
-    "did_estimate" -> analytics.Stats.didEstimateSql,
-    "revenue_deciles" -> analytics.Stats.revenueDecilesSql,
-    "hhi_report" -> dq.Concentration.hhiReportSql,
-    "srm_check" -> dq.Concentration.srmCheckSql,
-    "page_hinkley" -> analytics.Series.pageHinkleySql,
-    "item_novelty" -> analytics.Growth.itemNoveltySql,
-    "interevent_stats" -> analytics.Growth.intereventStatsSql,
-    "session_gap_sweep" -> analytics.Sweeps.sessionGapSweepSql,
-    "source_lang_mix" -> analytics.Sweeps.sourceLangMixSql,
-    "attribution_decay" -> analytics.Mining.attributionDecaySql,
-    "hard_negatives" -> ann.Negatives.hardNegativesSql(),
-    "pair_negatives" -> pipeline.Negatives.pairNegativesSql,
-    "cluster_size_dist" -> pipeline.ClusterStats.clusterSizeDistSql,
-    "quality_dup_bias" -> pipeline.ClusterStats.qualityDupBiasSql,
-    "trailing_30d_revenue" -> analytics.Frames.trailing30dRevenueSql,
-    "value_ranks" -> analytics.Frames.valueRanksSql,
-    "weighted_median" -> analytics.Frames.weightedMedianSql,
-    "abc_analysis" -> analytics.Frames.abcAnalysisSql,
-    "unpivot_metrics" -> analytics.Frames.unpivotMetricsSql,
-    "shard_plan" -> etl.Layout.shardPlanSql,
-    "salt_plan" -> etl.Layout.saltPlanSql,
-    "encoding_stats" -> etl.Layout.encodingStatsSql,
-    "dedup_winnow" -> dedup.Winnow.dedupWinnowSql,
-    "nelson_aalen" -> analytics.Survival.nelsonAalenSql,
-    "seq_patterns" -> analytics.Sequences.seqPatternsSql,
-    "mix_shift" -> analytics.MixShift.mixShiftSql,
-    "quantile_normalize" -> pipeline.Normalize.quantileNormalizeSql,
-    "rank_fusion" -> ann.Fusion.rankFusionSql,
-    "time_split_embargo" -> pipeline.Splits.timeSplitEmbargoSql,
-    "cluster_silhouette" -> ann.Silhouette.clusterSilhouetteSql,
-    "holt_winters" -> analytics.Series.holtWintersSql,
-    "cuped_adjust" -> analytics.Stats.cupedAdjustSql,
-    "lift_table" -> analytics.Eval.liftTableSql,
-    "graph_clustering" -> graph.Graph.graphClusteringSql,
-    "bloom_plan" -> etl.Layout.bloomPlanSql,
-    "partition_plan" -> etl.Layout.partitionPlanSql,
-    "prune_stats" -> etl.Layout.pruneStatsSql,
-    "heaps_fit" -> text.TextQueries.heapsFitSql,
-    "conformal_pi" -> analytics.Stats.conformalPiSql,
-    "sequential_test" -> analytics.Stats.sequentialTestSql,
-    "watermark_plan" -> etl.Layout.watermarkPlanSql,
-    "power_analysis" -> analytics.Stats.powerAnalysisSql,
-    "mm_shard_plan" -> multimodal.Multimodal.mmShardPlanSql,
-    "logrank_test" -> analytics.Survival.logrankTestSql,
-    "mrr_eval" -> analytics.Eval.mrrEvalSql,
-    "degree_dist" -> graph.Graph.degreeDistSql,
-    "split_balance" -> pipeline.Splits.splitBalanceSql,
-    "bpe_fertility" -> text.TextQueries.bpeFertilitySql,
-    "cohens_kappa" -> analytics.Eval.cohensKappaSql,
-    "brier_decomposition" -> analytics.Eval.brierDecompositionSql,
-    "gini_lorenz" -> analytics.Mining.giniLorenzSql,
-    "zorder_stats" -> etl.Layout.zorderStatsSql,
-    "context_len_sweep" -> text.CorpusOps.contextLenSweepSql,
-    "slice_auc" -> analytics.Eval.sliceAucSql,
-    "strata_adjust" -> analytics.Stats.strataAdjustSql,
-    "spearman_corr" -> analytics.Stats.spearmanCorrSql,
-    "rank_movers" -> analytics.Growth.rankMoversSql,
-    "loo_source_impact" -> text.CorpusOps.looSourceImpactSql,
-    "upsert_amplification" -> etl.Layout.upsertAmplificationSql,
-    "hash_uniformity" -> analytics.Stats.hashUniformitySql,
-    "tail_risk" -> analytics.Mining.tailRiskSql,
-    "slo_burn" -> analytics.Growth.sloBurnSql,
-    "gold_rollup" -> etl.EtlQueries.goldRollupSql,
-    "kendall_tau" -> analytics.Assoc.kendallTauSql,
-    "cramers_v" -> analytics.Assoc.cramersVSql,
-    "runs_test" -> analytics.Assoc.runsTestSql,
-    "js_drift" -> dq.Drift.jsDriftSql,
-    "dau_mau_stickiness" -> analytics.Growth.dauMauStickinessSql,
-    "mann_kendall" -> analytics.Assoc.mannKendallSql,
-    "dup_spans_cut" -> dedup.Substring.dupSpansCutSql,
-    "url_canonicalize" -> text.Urls.urlCanonicalizeSql,
-    "host_quality" -> text.Urls.hostQualitySql,
-    "corpus_mix_topic" -> pipeline.Pipeline.corpusMixTopicSql,
-    "record_linkage" -> dedup.Linkage.recordLinkageSql,
-    "blocking_eval" -> dedup.Linkage.blockingEvalSql,
-    "uplift_deciles" -> analytics.Uplift.upliftDecilesSql,
-    "jl_projection" -> ann.Jl.jlProjectionSql,
-    "token_budget_plan" -> pipeline.Budget.tokenBudgetPlanSql,
-    "compaction_plan" -> etl.Compaction.compactionPlanSql,
-    "t_closeness" -> dq.Privacy.tClosenessSql,
-    "link_scores" -> graph.LinkPred.linkScoresSql,
-    "shapley_attribution" -> analytics.Shapley.shapleyAttributionSql,
-    "isotonic_calibration" -> analytics.Calibration.isotonicCalibrationSql,
-    "null_pattern" -> dq.NullPatterns.nullPatternSql,
-    "eb_shrinkage" -> analytics.Shrinkage.ebShrinkageSql,
-    "sax_motifs" -> analytics.SaxMotifs.saxMotifsSql,
-    "huber_mean" -> analytics.Huber.huberMeanSql,
-    "dtw_distance" -> analytics.Dtw.dtwDistanceSql,
-    "burst_detect" -> analytics.Burst.burstDetectSql,
-    "mmr_diversify" -> ann.Mmr.mmrDiversifySql(),
-    "l_diversity" -> dq.LDiversity.lDiversitySql,
-    "cliffs_delta" -> analytics.Stats.cliffsDeltaSql,
-    "trimmed_mean" -> analytics.Robust.trimmedMeanSql,
-    "tukey_fences" -> analytics.Robust.tukeyFencesSql,
-    "hill_tail" -> analytics.Robust.hillTailSql(),
-    "dedup_url" -> text.Urls.dedupUrlSql,
-    "chao1_vocab" -> text.CorpusOps.chao1VocabSql
-  )
 }

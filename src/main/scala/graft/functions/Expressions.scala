@@ -366,12 +366,16 @@ case class HexByteSum(child: Expression)
 
 /** array<string> symbols → array<struct<a,b>> of adjacent pairs —
   * the BPE pair-count explode input, replacing the interpreted
-  * transform(sequence(…), i -> named_struct(…)) formulation. */
+  * transform(sequence(…), i -> named_struct(…)) formulation. A pair
+  * field is nullable iff the input's elements are. */
 case class AdjacentPairs(child: Expression)
     extends UnaryExpression with KernelCodegen {
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("a", StringType, nullable = false),
-    StructField("b", StringType, nullable = false))), containsNull = false)
+  override def dataType: DataType = {
+    val elemNull = child.dataType.asInstanceOf[ArrayType].containsNull
+    ArrayType(StructType(Seq(
+      StructField("a", StringType, nullable = elemNull),
+      StructField("b", StringType, nullable = elemNull))), containsNull = false)
+  }
   override def compute(input: Any): Any = {
     val arr = input.asInstanceOf[ArrayData]
     val n = arr.numElements() - 1
@@ -437,7 +441,8 @@ case class HexResize(child: Expression, target: Int)
   * [start0, start0+len) joined with `sep` — the MinHash band-hash
   * input, replacing the interpreted
   * array_join(transform(slice(sigs, start, len), cast), sep)
-  * chain (same bytes: Long.toString == CAST(v AS STRING)). */
+  * chain (same bytes: Long.toString == CAST(v AS STRING); a null
+  * element is skipped, as array_join skips it). */
 case class LongSliceJoin(child: Expression, start0: Int, len: Int, sep: String)
     extends UnaryExpression with KernelCodegen {
   override def dataType: DataType = StringType
@@ -447,8 +452,10 @@ case class LongSliceJoin(child: Expression, start0: Int, len: Int, sep: String)
     val sb = new java.lang.StringBuilder(len * 12)
     var i = start0
     while (i < end) {
-      if (i > start0) sb.append(sep)
-      sb.append(arr.getLong(i))
+      if (!arr.isNullAt(i)) {
+        if (sb.length > 0) sb.append(sep)
+        sb.append(arr.getLong(i))
+      }
       i += 1
     }
     UTF8String.fromString(sb.toString)
@@ -478,18 +485,23 @@ case class PolyHashChars(child: Expression)
   override protected def withNewChildInternal(c: Expression): PolyHashChars = copy(c)
 }
 
-/** array<float> → array<double> (exact widening) — replaces the
-  * interpreted transform(embedding, x -> cast(x as double)) on the
-  * IVF corpus path. */
+/** array<float> → array<double> (exact widening; a null element
+  * stays null) — replaces the interpreted
+  * transform(embedding, x -> cast(x as double)) on the IVF corpus
+  * path. */
 case class ToDoubleArray(child: Expression)
     extends UnaryExpression with KernelCodegen {
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
+  override def dataType: DataType =
+    ArrayType(DoubleType, child.dataType.asInstanceOf[ArrayType].containsNull)
   override def compute(input: Any): Any = {
     val arr = input.asInstanceOf[ArrayData]
     val n = arr.numElements()
-    val out = new Array[Double](n)
+    val out = new Array[Any](n)
     var i = 0
-    while (i < n) { out(i) = arr.getFloat(i).toDouble; i += 1 }
+    while (i < n) {
+      if (!arr.isNullAt(i)) out(i) = arr.getFloat(i).toDouble
+      i += 1
+    }
     new GenericArrayData(out)
   }
   override protected def withNewChildInternal(c: Expression): ToDoubleArray = copy(c)

@@ -369,8 +369,8 @@ object GenData {
       Embedding(i, v.map(x => (x / norm).toFloat), r.nextInt(10))
     }.toDF, "embeddings")
 
-    println(s"[gendata] sf=$sf done: lineitem≈${nOrders * 4} orders=$nOrders " +
-      s"customer=$nCust events=$nEvents docs=$nDocs vecs=$nVecs → $outDir")
+    println(s"[gendata] sf=$sf done: lineitem~${nOrders * 4} orders=$nOrders " +
+      s"customer=$nCust events=$nEvents docs=$nDocs vecs=$nVecs -> $outDir")
     spark.stop()
   }
 }

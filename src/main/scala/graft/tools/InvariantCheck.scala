@@ -498,9 +498,10 @@ object InvariantCheck {
       .filter(col("m2") > col("rep_m") + 1e-5).count()
     val r = Seq(
       res("bt_one_per_source", badSrcDup, s"$nOut mined pairs"),
-      res("bt_pairs_are_candidates", badCand, "output ⊆ blocked candidates"),
+      res("bt_pairs_are_candidates", badCand, "output is a subset of the blocked candidates"),
       res("bt_cosines_rederived", badCos, "from raw embeddings"),
-      res("bt_margins_rederived", badMargin, "sorted-slice kNN averages, ≥ θ"),
+      res("bt_margins_rederived", badMargin,
+        s"sorted-slice kNN averages, margin >= ${Bitext.MarginMin}"),
       res("bt_best_pair_argmax", badBest, "no candidate beats the reported"))
     out.unpersist(); scored.unpersist(); m2.unpersist()
     r
@@ -1517,15 +1518,16 @@ object InvariantCheck {
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/repo/testdata/sf1")
-    val spark = graft.SparkEntry.session("graft-invariants", Some(dir))
-    val t0 = System.nanoTime()
     // SPARK_GRAFT_INV_ONLY=clusters runs just the CC family — used to
     // record rounds-to-converge at sf5 (VERDICT r08 #8) without paying
-    // the full-suite replay there
-    val rs = sys.env.get("SPARK_GRAFT_INV_ONLY") match {
-      case Some("clusters") => checkClusters(spark, dir)
-      case _ => runAll(spark, dir)
-    }
+    // the full-suite replay there. Any other value fails before the
+    // session: a typo must not silently run all the families.
+    val only = sys.env.get("SPARK_GRAFT_INV_ONLY")
+    require(only.forall(_ == "clusters"),
+      s"SPARK_GRAFT_INV_ONLY names no invariant family: ${only.get} (known: clusters)")
+    val spark = graft.SparkEntry.session("graft-invariants", Some(dir))
+    val t0 = System.nanoTime()
+    val rs = if (only.isDefined) checkClusters(spark, dir) else runAll(spark, dir)
     val secs = (System.nanoTime() - t0) / 1e9
     rs.foreach(r => println(
       s"INVARIANT ${r.name} ${if (r.pass) "PASS" else "FAIL"} ${r.detail}"))

@@ -209,7 +209,7 @@ object PlanGate {
       }, identity)
       dump.append("\n```\n")
       if (vs.isEmpty) println(s"[plangate] OK   $name")
-      else { bad += 1; vs.foreach(v => println(s"[plangate] FAIL $name — $v")) }
+      else { bad += 1; vs.foreach(v => println(s"[plangate] FAIL $name - $v")) }
     }
     java.nio.file.Files.writeString(java.nio.file.Paths.get(out), dump.toString)
     println(s"[plangate] wrote $out")

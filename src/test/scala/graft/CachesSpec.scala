@@ -63,8 +63,10 @@ class CachesSpec extends AnyFunSuite {
   test("a scope releases its barriers when it closes, also when the body throws") {
     SparkTestSession.releaseAll()
     val (_, names) = Barrier.scope {
-      barrier(10); barrier(20)
-      assert(SparkTestSession.persistedIds.size == 2)
+      // held: the registry keeps weak references, and a GC would let the
+      // ContextCleaner unpersist an unreachable barrier before the check
+      val held = Seq(barrier(10), barrier(20))
+      assert(SparkTestSession.persistedIds.size == 2, held)
     }
     assert(names == Seq("spec", "spec"))
     assert(SparkTestSession.persistedIds.isEmpty, "closed scope left its barriers")

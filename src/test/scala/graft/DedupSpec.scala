@@ -6,7 +6,7 @@ import graft.dedup.Dedup
 import graft.ann.Ann
 
 class DedupSpec extends AnyFunSuite {
-  import SparkTestSession.{spark, sf, withConf}
+  import SparkTestSession.{spark, sf, withConf, withTable}
   import spark.implicits._
 
   private val base = "the quick brown fox jumps over the lazy dog and runs far away into the woods tonight"
@@ -128,83 +128,89 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("persisted band index: indexed incremental dedup matches the one-shot op") {
-    val all = Tables.documents(spark, sf)
-    val corpus = all.filter(col("doc_id") % 5 =!= 4)
-    val batch = all.filter(col("doc_id") % 5 === 4)
-    Dedup.writeBandIndex(corpus, "dedup_band_idx", numBuckets = 4)
-    val indexed = Dedup.dedupIncrementalIndexed(spark, batch, "dedup_band_idx")
-      .collect().map(_.toSeq).toSeq
-    val oneShot = Dedup.dedupIncremental(all).collect().map(_.toSeq).toSeq
-    assert(indexed == oneShot,
-      s"indexed=${indexed.take(3)}... vs oneShot=${oneShot.take(3)}...")
+    withTable("dedup_band_idx") {
+      val all = Tables.documents(spark, sf)
+      val corpus = all.filter(col("doc_id") % 5 =!= 4)
+      val batch = all.filter(col("doc_id") % 5 === 4)
+      Dedup.writeBandIndex(corpus, "dedup_band_idx", numBuckets = 4)
+      val indexed = Dedup.dedupIncrementalIndexed(spark, batch, "dedup_band_idx")
+        .collect().map(_.toSeq).toSeq
+      val oneShot = Dedup.dedupIncremental(all).collect().map(_.toSeq).toSeq
+      assert(indexed == oneShot,
+        s"indexed=${indexed.take(3)}... vs oneShot=${oneShot.take(3)}...")
+    }
   }
 
   test("persisted band index joins with zero exchange on the index side") {
-    // the 100-TB contract: the corpus-sized index NEVER re-shuffles —
-    // only the daily batch is exchanged into the index's bucket layout
-    val all = Tables.documents(spark, sf)
-    Dedup.writeBandIndex(all.filter(col("doc_id") % 5 =!= 4), "dedup_band_idx2", 4)
-    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") { // force non-broadcast
-      val joined = Dedup.bandIndex(all.filter(col("doc_id") % 5 === 4))
-        .withColumnRenamed("doc_id", "new_id").withColumnRenamed("sigs", "new_sigs")
-        .join(spark.table("dedup_band_idx2"), Seq("bkey"))
-      // materialize THIS frame's own QueryExecution first (collect, not
-      // count — count wraps a fresh plan), then inspect the FINAL
-      // adaptive plan: pre-execution AQE plans need not show the real
-      // exchange count
-      assert(joined.collect().length > 0)
-      // AdaptiveSparkPlan.toString prints Final AND Initial plan
-      // sections — count exchanges in the FINAL section only
-      val plan = joined.queryExecution.executedPlan.toString
-        .split("== Initial Plan ==")(0)
-      val exchanges = "Exchange hashpartitioning".r.findAllIn(plan).length
-      assert(exchanges == 1, s"want 1 exchange (batch side only), got $exchanges:\n$plan")
-      assert(plan.contains("Bucketed: true"),
-        s"index side must read its bucketed layout:\n$plan")
+    withTable("dedup_band_idx2") {
+      // the 100-TB contract: the corpus-sized index NEVER re-shuffles —
+      // only the daily batch is exchanged into the index's bucket layout
+      val all = Tables.documents(spark, sf)
+      Dedup.writeBandIndex(all.filter(col("doc_id") % 5 =!= 4), "dedup_band_idx2", 4)
+      withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") { // force non-broadcast
+        val joined = Dedup.bandIndex(all.filter(col("doc_id") % 5 === 4))
+          .withColumnRenamed("doc_id", "new_id").withColumnRenamed("sigs", "new_sigs")
+          .join(spark.table("dedup_band_idx2"), Seq("bkey"))
+        // materialize THIS frame's own QueryExecution first (collect, not
+        // count — count wraps a fresh plan), then inspect the FINAL
+        // adaptive plan: pre-execution AQE plans need not show the real
+        // exchange count
+        assert(joined.collect().length > 0)
+        // AdaptiveSparkPlan.toString prints Final AND Initial plan
+        // sections — count exchanges in the FINAL section only
+        val plan = joined.queryExecution.executedPlan.toString
+          .split("== Initial Plan ==")(0)
+        val exchanges = "Exchange hashpartitioning".r.findAllIn(plan).length
+        assert(exchanges == 1, s"want 1 exchange (batch side only), got $exchanges:\n$plan")
+        assert(plan.contains("Bucketed: true"),
+          s"index side must read its bucketed layout:\n$plan")
+      }
     }
   }
 
   test("band-index maintenance: appends accrete files, compaction drops them, " +
        "bucketed zero-exchange plan and results survive") {
-    import graft.etl.Loader
-    val all = Tables.documents(spark, sf)
-    val tbl = "dedup_band_idx3"
-    val buckets = 4
-    // day 0: seed with 3/5 of the corpus; days 1-2: append a fifth each,
-    // with a 1-file/bucket budget so day 2's append triggers compaction
-    Dedup.writeBandIndex(all.filter(col("doc_id") % 5 === 0), tbl, buckets)
-    val f0 = Loader.dataFileCount(spark, tbl)
-    // day 1: generous budget — observe raw accretion, no compaction
-    val c1 = Dedup.appendBandIndex(all.filter(col("doc_id") % 5 === 1), tbl,
-      buckets, maxFilesPerBucket = 1000)
-    val f1 = Loader.dataFileCount(spark, tbl)
-    assert(!c1 && f1 > f0, s"append must accrete files: $f0 -> $f1")
-    // day 2: 1-file/bucket budget — the accreted files force a rewrite
-    val c2 = Dedup.appendBandIndex(all.filter(col("doc_id") % 5 === 2), tbl,
-      buckets, maxFilesPerBucket = 1)
-    assert(c2, "a 1-file/bucket budget must force a compaction")
-    val f2 = Loader.dataFileCount(spark, tbl)
-    assert(f2 == buckets, // aligned repartition => exactly one file per bucket
-      s"compaction must leave one file per bucket, got $f2")
-    // parity: the compacted index answers exactly like a fresh one-shot index
-    val batch = all.filter(col("doc_id") % 5 === 4)
-    val got = Dedup.dedupIncrementalIndexed(spark, batch, tbl)
-      .collect().map(_.toSeq).toSeq
-    Dedup.writeBandIndex(all.filter(col("doc_id") % 5 < 3), "dedup_band_idx3_ref", buckets)
-    val want = Dedup.dedupIncrementalIndexed(spark, batch, "dedup_band_idx3_ref")
-      .collect().map(_.toSeq).toSeq
-    assert(got == want)
-    // the zero-exchange contract survives the catalog-level swap
-    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
-      val joined = Dedup.bandIndex(batch)
-        .withColumnRenamed("doc_id", "new_id").withColumnRenamed("sigs", "new_sigs")
-        .join(spark.table(tbl), Seq("bkey"))
-      assert(joined.collect().length > 0)
-      val plan = joined.queryExecution.executedPlan.toString
-        .split("== Initial Plan ==")(0)
-      val exchanges = "Exchange hashpartitioning".r.findAllIn(plan).length
-      assert(exchanges == 1, s"want 1 exchange (batch side only), got $exchanges:\n$plan")
-      assert(plan.contains("Bucketed: true"))
+    withTable("dedup_band_idx3", "dedup_band_idx3_ref") {
+      import graft.etl.Loader
+      val all = Tables.documents(spark, sf)
+      val tbl = "dedup_band_idx3"
+      val buckets = 4
+      // day 0: seed with 3/5 of the corpus; days 1-2: append a fifth each,
+      // with a 1-file/bucket budget so day 2's append triggers compaction
+      Dedup.writeBandIndex(all.filter(col("doc_id") % 5 === 0), tbl, buckets)
+      val f0 = Loader.dataFileCount(spark, tbl)
+      // day 1: generous budget — observe raw accretion, no compaction
+      val c1 = Dedup.appendBandIndex(all.filter(col("doc_id") % 5 === 1), tbl,
+        buckets, maxFilesPerBucket = 1000)
+      val f1 = Loader.dataFileCount(spark, tbl)
+      assert(!c1 && f1 > f0, s"append must accrete files: $f0 -> $f1")
+      // day 2: 1-file/bucket budget — the accreted files force a rewrite
+      val c2 = Dedup.appendBandIndex(all.filter(col("doc_id") % 5 === 2), tbl,
+        buckets, maxFilesPerBucket = 1)
+      assert(c2, "a 1-file/bucket budget must force a compaction")
+      val f2 = Loader.dataFileCount(spark, tbl)
+      assert(f2 == buckets, // aligned repartition => exactly one file per bucket
+        s"compaction must leave one file per bucket, got $f2")
+      // parity: the compacted index answers exactly like a fresh one-shot index
+      val batch = all.filter(col("doc_id") % 5 === 4)
+      val got = Dedup.dedupIncrementalIndexed(spark, batch, tbl)
+        .collect().map(_.toSeq).toSeq
+      Dedup.writeBandIndex(all.filter(col("doc_id") % 5 < 3), "dedup_band_idx3_ref", buckets)
+      val want = Dedup.dedupIncrementalIndexed(spark, batch, "dedup_band_idx3_ref")
+        .collect().map(_.toSeq).toSeq
+      assert(got == want)
+      // the zero-exchange contract survives the catalog-level swap
+      withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+        val joined = Dedup.bandIndex(batch)
+          .withColumnRenamed("doc_id", "new_id").withColumnRenamed("sigs", "new_sigs")
+          .join(spark.table(tbl), Seq("bkey"))
+        assert(joined.collect().length > 0)
+        val plan = joined.queryExecution.executedPlan.toString
+          .split("== Initial Plan ==")(0)
+        val exchanges = "Exchange hashpartitioning".r.findAllIn(plan).length
+        assert(exchanges == 1, s"want 1 exchange (batch side only), got $exchanges:\n$plan")
+        assert(plan.contains("Bucketed: true"))
+      }
     }
   }
 

@@ -4,8 +4,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Contract-integrity guard: every SparkEntry query must fully
   * materialize at the smallest SF (catches scale-dependent failures
-  * like under-k sketch indexing before the oracle gate does), and the
-  * oracle map must stay consistent with the query map. */
+  * like under-k sketch indexing before the oracle gate does). The
+  * registry lists each query once with its operator and its oracle
+  * SQL, so `queries` and `oracleSql` share one key set by
+  * construction; the key-set cases pin that, and a name listed twice
+  * fails the registry. */
 class EntrySpec extends AnyFunSuite {
   import SparkTestSession.{spark, sf}
 
@@ -17,6 +20,12 @@ class EntrySpec extends AnyFunSuite {
   test("every query has an oracle (rows-only checks are deliberate)") {
     val missing = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
     assert(missing.isEmpty, s"queries without oracle SQL: $missing")
+  }
+
+  test("a name listed twice fails the registry instead of keeping the last") {
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.byName(Seq("top_k" -> 1, "q1_agg" -> 2, "top_k" -> 3)))
+    assert(e.getMessage.contains("registered twice: top_k"), e.getMessage)
   }
 
   test("entry returns rows") {

@@ -15,6 +15,9 @@ class InvariantSpec extends AnyFunSuite {
   private def assertAll(rs: Seq[InvariantCheck.Res]): Unit = {
     val bad = rs.filterNot(_.pass)
     assert(bad.isEmpty, bad.map(r => s"${r.name}: ${r.detail}").mkString("; "))
+    // the forked JVM prints non-ASCII as '?'
+    val garbled = rs.filterNot(r => (r.name + r.detail).forall(_ < 128))
+    assert(garbled.isEmpty, garbled.map(r => s"${r.name}: ${r.detail}").mkString("; "))
   }
 
   // one case per family `InvariantCheck.runAll` runs

@@ -6,18 +6,30 @@ import graft.etl.Loader
 import graft.analytics.Queries
 
 class LoaderSpec extends AnyFunSuite {
-  import SparkTestSession.{spark, sf}
+  import SparkTestSession.{spark, sf, withTable}
 
   test("bucketed tables join without a shuffle") {
-    Loader.writeBucketed(Tables.orders(spark, sf), "orders_b", Seq("o_orderkey"), 4)
-    Loader.writeBucketed(Tables.lineitem(spark, sf)
-      .withColumnRenamed("l_orderkey", "o_orderkey"), "lineitem_b", Seq("o_orderkey"), 4)
-    val joined = spark.table("lineitem_b")
-      .join(spark.table("orders_b"), "o_orderkey")
-    val plan = joined.queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange hashpartitioning"),
-      s"bucketed join still shuffles:\n$plan")
-    assert(joined.count() > 0)
+    withTable("loader_orders_b", "loader_lineitem_b") {
+      Loader.writeBucketed(Tables.orders(spark, sf), "loader_orders_b", Seq("o_orderkey"), 4)
+      Loader.writeBucketed(Tables.lineitem(spark, sf)
+        .withColumnRenamed("l_orderkey", "o_orderkey"), "loader_lineitem_b", Seq("o_orderkey"), 4)
+      val joined = spark.table("loader_lineitem_b")
+        .join(spark.table("loader_orders_b"), "o_orderkey")
+      val plan = joined.queryExecution.executedPlan.toString
+      assert(!plan.contains("Exchange hashpartitioning"),
+        s"bucketed join still shuffles:\n$plan")
+      assert(joined.count() > 0)
+    }
+  }
+
+  test("withTable drops a table its body wrote, also when the body throws") {
+    val e = intercept[IllegalStateException](withTable("loader_thrown") {
+      Loader.writeBucketed(Tables.region(spark, sf), "loader_thrown", Seq("r_regionkey"), 2)
+      assert(spark.catalog.tableExists("loader_thrown"))
+      throw new IllegalStateException("planted failure")
+    })
+    assert(e.getMessage === "planted failure")
+    assert(!spark.catalog.tableExists("loader_thrown"))
   }
 
   test("full vs batch write semantics") {

@@ -37,4 +37,10 @@ object SparkTestSession {
       case (k, None) => spark.conf.unset(k)
     }
   }
+
+  /** Run `body`, then drop each catalog table of `names`, also when
+    * `body` throws, so no table outlives the case that wrote it. */
+  def withTable[T](names: String*)(body: => T): T =
+    try body
+    finally names.foreach(n => spark.sql(s"DROP TABLE IF EXISTS `$n`"))
 }

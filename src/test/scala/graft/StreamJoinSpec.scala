@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.streaming.Streaming
 
 class StreamJoinSpec extends AnyFunSuite {
-  import SparkTestSession.{spark, sf}
+  import SparkTestSession.{spark, sf, withTable}
 
   test("watermarked stream-stream join matches the batch twin") {
     val q = Streaming.streamStreamJoin(Streaming.readEventsStream(spark, sf))
@@ -43,69 +43,70 @@ class StreamJoinSpec extends AnyFunSuite {
   }
 
   test("streaming incremental dedup: verdicts + index growth across micro-batches") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import graft.dedup.Dedup
-    val base = java.nio.file.Files.createTempDirectory("graft-sdi").toString
-    val tbl = "sdi_band_index"
-    spark.sql(s"DROP TABLE IF EXISTS $tbl")
-    // initial index: the corpus docs with doc_id % 5 != 4
-    val all = Tables.documents(spark, sf).select("doc_id", "text")
-    Dedup.writeBandIndex(all.filter(col("doc_id") % 5 =!= 4), tbl)
-    val idx0 = spark.table(tbl).count()
-    // batch 1: genuinely new docs (the %5==4 split, re-id'd to be safe)
-    val b1 = all.filter(col("doc_id") % 5 === 4)
-      .select((col("doc_id") + 100000L).as("doc_id"), col("text"))
-      .as[(Long, String)].collect().toSeq
-    // batch 2: exact copies of batch 1 under fresh ids — every one must
-    // be flagged against a batch-1 doc ACCEPTED into the index, proving
-    // cross-micro-batch incrementality
-    val b2 = b1.map { case (id, text) => (id + 100000L, text) }
-    val src = MemoryStream[(Long, String)]
-    val q = Streaming.dedupStreamIndexed(
-      src.toDF().toDF("doc_id", "text"), tbl, s"$base/verdicts", s"$base/ckpt")
-    try {
-      src.addData(b1); q.processAllAvailable()
-      src.addData(b2); q.processAllAvailable()
-    } finally q.stop()
-    val verdicts = spark.read.parquet(s"$base/verdicts")
-    assert(verdicts.count() == (b1.size + b2.size))
-    val v2 = verdicts.filter(col("batch_id") === 1)
-    // every batch-2 copy is an exact dup of its batch-1 twin: sigs are
-    // equal, so est = 1.0 and the best match is the twin's id (min id
-    // among equally-scored matches only if text unique; at minimum the
-    // match must exist and the twin must qualify)
-    assert(v2.count() == b2.size)
-    assert(v2.filter(!col("is_duplicate")).count() == 0,
-      "an exact copy of a batch-1 doc escaped (twin accepted OR twin's own dup is indexed)")
-    // copies whose twin was ACCEPTED into the index must score est=1.0
-    // against it; copies of REJECTED twins still flag (above) but match
-    // the index doc that shadowed the twin, at the twin's own est
-    val acceptedIds = verdicts
-      .filter(col("batch_id") === 0 && !col("is_duplicate"))
-      .select((col("doc_id") + 100000L).as("doc_id"))
-    assert(v2.join(acceptedIds, "doc_id")
-      .filter(col("est_jaccard") < 1.0).count() == 0)
-    // the index grew by bands × accepted(batch1) + bands × accepted(batch2 = 0... dup docs are rejected)
-    val accepted1 = verdicts.filter(col("batch_id") === 0 && !col("is_duplicate")).count()
-    val bands = Dedup.Bands
-    // the appends ran in foreachBatch's cloned session — drop this
-    // session's cached file listing before counting
-    spark.catalog.refreshTable(tbl)
-    assert(spark.table(tbl).count() == idx0 + bands * accepted1,
-      "index must contain exactly the initial docs plus batch-1 accepts")
-    // batch-1 verdicts match a direct one-shot call against the initial index
-    spark.sql(s"DROP TABLE IF EXISTS ${tbl}_ref")
-    Dedup.writeBandIndex(all.filter(col("doc_id") % 5 =!= 4), s"${tbl}_ref")
-    val direct = Dedup.dedupIncrementalIndexed(spark,
-      all.filter(col("doc_id") % 5 === 4)
-        .select((col("doc_id") + 100000L).as("doc_id"), col("text")),
-      s"${tbl}_ref").collect().map(_.toSeq).toSeq
-    val streamed = verdicts.filter(col("batch_id") === 0)
-      .select("doc_id", "is_duplicate", "best_match", "est_jaccard")
-      .orderBy("doc_id").collect().map(_.toSeq).toSeq
-    assert(streamed == direct)
+    withTable("sdi_band_index", "sdi_band_index_ref") {
+      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+      import spark.implicits._
+      implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+      import graft.dedup.Dedup
+      val base = java.nio.file.Files.createTempDirectory("graft-sdi").toString
+      val tbl = "sdi_band_index"
+      // initial index: the corpus docs with doc_id % 5 != 4
+      val all = Tables.documents(spark, sf).select("doc_id", "text")
+      Dedup.writeBandIndex(all.filter(col("doc_id") % 5 =!= 4), tbl)
+      val idx0 = spark.table(tbl).count()
+      // batch 1: genuinely new docs (the %5==4 split, re-id'd to be safe)
+      val b1 = all.filter(col("doc_id") % 5 === 4)
+        .select((col("doc_id") + 100000L).as("doc_id"), col("text"))
+        .as[(Long, String)].collect().toSeq
+      // batch 2: exact copies of batch 1 under fresh ids — every one must
+      // be flagged against a batch-1 doc ACCEPTED into the index, proving
+      // cross-micro-batch incrementality
+      val b2 = b1.map { case (id, text) => (id + 100000L, text) }
+      val src = MemoryStream[(Long, String)]
+      val q = Streaming.dedupStreamIndexed(
+        src.toDF().toDF("doc_id", "text"), tbl, s"$base/verdicts", s"$base/ckpt")
+      try {
+        src.addData(b1); q.processAllAvailable()
+        src.addData(b2); q.processAllAvailable()
+      } finally q.stop()
+      val verdicts = spark.read.parquet(s"$base/verdicts")
+      assert(verdicts.count() == (b1.size + b2.size))
+      val v2 = verdicts.filter(col("batch_id") === 1)
+      // every batch-2 copy is an exact dup of its batch-1 twin: sigs are
+      // equal, so est = 1.0 and the best match is the twin's id (min id
+      // among equally-scored matches only if text unique; at minimum the
+      // match must exist and the twin must qualify)
+      assert(v2.count() == b2.size)
+      assert(v2.filter(!col("is_duplicate")).count() == 0,
+        "an exact copy of a batch-1 doc escaped (twin accepted OR twin's own dup is indexed)")
+      // copies whose twin was ACCEPTED into the index must score est=1.0
+      // against it; copies of REJECTED twins still flag (above) but match
+      // the index doc that shadowed the twin, at the twin's own est
+      val acceptedIds = verdicts
+        .filter(col("batch_id") === 0 && !col("is_duplicate"))
+        .select((col("doc_id") + 100000L).as("doc_id"))
+      assert(v2.join(acceptedIds, "doc_id")
+        .filter(col("est_jaccard") < 1.0).count() == 0)
+      // the index grew by bands × accepted(batch1) + bands × accepted(batch2 = 0...
+      // dup docs are rejected)
+      val accepted1 = verdicts.filter(col("batch_id") === 0 && !col("is_duplicate")).count()
+      val bands = Dedup.Bands
+      // the appends ran in foreachBatch's cloned session — drop this
+      // session's cached file listing before counting
+      spark.catalog.refreshTable(tbl)
+      assert(spark.table(tbl).count() == idx0 + bands * accepted1,
+        "index must contain exactly the initial docs plus batch-1 accepts")
+      // batch-1 verdicts match a direct one-shot call against the initial index
+      Dedup.writeBandIndex(all.filter(col("doc_id") % 5 =!= 4), s"${tbl}_ref")
+      val direct = Dedup.dedupIncrementalIndexed(spark,
+        all.filter(col("doc_id") % 5 === 4)
+          .select((col("doc_id") + 100000L).as("doc_id"), col("text")),
+        s"${tbl}_ref").collect().map(_.toSeq).toSeq
+      val streamed = verdicts.filter(col("batch_id") === 0)
+        .select("doc_id", "is_duplicate", "best_match", "est_jaccard")
+        .orderBy("doc_id").collect().map(_.toSeq).toSeq
+      assert(streamed == direct)
+    }
   }
 
   test("streaming slice monitor: counts identical to the batch slice frame") {

@@ -150,9 +150,9 @@ class VerifyGateSpec extends AnyFunSuite {
 
   test("registry totality: every SparkEntry query has oracle SQL (driver compare covers all)") {
     // duplicated from EntrySpec on purpose: THIS spec is the gate
-    // contract in one place — if a query is registered without an
-    // oracle, the driver records only a weaker rows-only check and
-    // coverage shrinks without any red light
+    // contract in one place. The one registry pairs every query with
+    // its oracle; a query without one would leave the oracle gate only
+    // a weaker rows-only check, and coverage would shrink unseen
     val missing = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
     assert(missing.isEmpty, s"queries without oracle SQL: $missing")
   }
