@@ -274,30 +274,6 @@ object GraphAnn {
     edges
   }
 
-  /** The §2.108/§2.320 persisted-bucketed contract applied to the kNN
-    * GRAPH (the labels-table precedent): a crawl-scale pipeline runs
-    * the NN-Descent build ONCE per corpus and persists the edge table
-    * bucketed by `node`, so every beam-search consumer reads edges at
-    * zero exchange instead of re-running init + descent per query
-    * run — at sf5 the in-sweep build was ~100 s re-paid by every
-    * ann_graph invocation. Opt-in via `spark.graft.graph.table` (set
-    * after [[writeGraph]]): the driver gate never sets it, so oracle
-    * runs still verify the full computation; GraphTableSpec pins
-    * persisted == recomputed. */
-  def persistedGraph(spark: org.apache.spark.sql.SparkSession): Option[DataFrame] =
-    spark.conf.getOption("spark.graft.graph.table")
-      .filter(spark.catalog.tableExists)
-      .map(spark.table)
-
-  /** Build the kNN graph once and persist it bucketed by `node`
-    * (8 buckets — the band-index convention), so beam-hop edge joins
-    * run exchange-free on the edge side. */
-  def writeGraph(spark: org.apache.spark.sql.SparkSession, dir: String,
-      table: String = "graft_knn_graph", numBuckets: Int = 8): Unit =
-    graft.etl.Loader.writeBucketed(
-      knnGraph(graft.Tables.embeddings(spark, dir)), table,
-      Seq("node"), numBuckets)
-
   /** §2.333 `ann_graph`: top-k by beam search over the NN-Descent
     * graph for the first `nq` vectors, (q_id, rk, vec_id, cosine) —
     * the [[Ivf.ivfTopK]] output shape. */
@@ -334,8 +310,7 @@ object GraphAnn {
   private[graft] def visitedSet(embeddings: DataFrame, nq: Int): DataFrame = {
     // one widening pass for the entry scan + every hop's scoring join
     val v = graft.Barrier("ann_search.vecs", Ivf.vecsD(embeddings))
-    val edges = persistedGraph(embeddings.sparkSession)
-      .getOrElse(knnGraph(embeddings))
+    val edges = knnGraph(embeddings)
     // nq rows by construction; the limit also MARKS the bound so the
     // plan gate can prove the broadcast is not data-sized
     val q = v.filter(col("vec_id") < nq).limit(nq)

@@ -154,7 +154,7 @@ object Graph {
   private[graft] def lpLabels(spark: SparkSession, dir: String,
       iters: Int = LpIters): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val (adj, nodes, _) = adjacency(spark, dir)
+    val (adj, nodes, n) = adjacency(spark, dir)
     var labels = nodes.withColumn("lbl", col("node"))
     for (_ <- 1 to iters) {
       val votes = adj.join(labels, col("src") === col("node"))
@@ -384,11 +384,18 @@ object Graph {
     * node-sized survivor set (twice: src and dst side) + one map-side
     * combined degree count — never edges²; survivors are pinned
     * shuffle_hash (node-sized but DATA-DEPENDENT — the §6 round-5
-    * broadcast trap), and each round's degree frame is an eager
-    * [[graft.Barrier]] whose count decides the early exit. */
+    * broadcast trap), and each round's degree frame is one
+    * [[graft.Rounds]] cut (`kcore.deg`) whose observed survivor count
+    * decides the early exit.
+    *
+    * Returns the survivors' in-core degrees (src, c) and the rounds run
+    * (−1 = `rounds` ran out before the survivor set stopped shrinking);
+    * the degrees read the last round's barrier. */
   private[graft] def kcoreSurvivors(spark: SparkSession, dir: String,
-      rounds: Int = KcoreRounds): (DataFrame, DataFrame) = {
+      rounds: Int = KcoreRounds): (DataFrame, Int) = {
     val (adj, nodes, n) = adjacency(spark, dir)
+    def survivors(deg: DataFrame): DataFrame =
+      deg.filter(col("c") >= KcoreK).select(col("src").as("node"))
     def coreDeg(surv: DataFrame): DataFrame =
       adj.join(surv.select(col("node").as("src")).hint("shuffle_hash"), "src")
         .join(surv.select(col("node").as("dst")).hint("shuffle_hash"), "dst")
@@ -398,40 +405,27 @@ object Graph {
     // remaining round is a no-op — the result is bit-identical to the
     // full fixed-round unroll the oracle replays, without paying the
     // no-op rounds (at sf0.1 the whole graph is already a 3-core:
-    // 1 real round instead of 8). Eager checkpoint + count per round,
-    // the ccBigSmallStar pattern.
-    var surv = nodes
-    var prevCnt = n
-    var stable = false
-    var r = 0
-    var lastDeg: DataFrame = null
-    while (r < rounds && !stable) {
-      val d = graft.Barrier("kcore.deg", coreDeg(surv), eager = true)
-      val next = d.filter(col("c") >= KcoreK)
-        .select(col("src").as("node"))
-      val cnt = next.count()
-      stable = cnt == prevCnt
-      prevCnt = cnt
-      surv = next
-      lastDeg = d
-      r += 1
+    // 1 real round instead of 8). Round 0 is every node a survivor, read
+    // from the persisted node list.
+    val (last, peeled) = graft.Rounds("kcore.deg",
+        nodes.select(col("node").as("src"), lit(KcoreK.toLong).as("c")), rounds,
+        settled = (before, after) => before == after, initRows = Some(n)) { (deg, round) =>
+      round.count(coreDeg(survivors(deg)), col("c") >= KcoreK)
     }
-    // On the stable exit the final coreDeg(surv) is provably the last
-    // round's (checkpointed) degree frame: stability means next ==
-    // prevSurv as a SET (monotone subset + equal count), so
-    // coreDeg(next) == coreDeg(prevSurv) == lastDeg, and every lastDeg
-    // row has c >= k (a sub-k row would have shrunk the count). Reusing
-    // it drops the whole second adj⋈surv⋈surv round from the plan; the
+    // On the settled exit the final coreDeg is provably the last
+    // round's (checkpointed) degree frame: an equal count means an
+    // equal survivor SET, so coreDeg(next) == coreDeg(prev) == last,
+    // and every row of it with c < k would have shrunk the count.
+    // Reusing it drops a whole adj⋈surv⋈surv round from the plan; the
     // rounds-exhausted exit still recomputes, where the sets differ.
-    val finalDeg =
-      if (stable && lastDeg != null) lastDeg.filter(col("c") >= KcoreK)
-      else coreDeg(surv)
-    (surv, finalDeg)
+    val deg =
+      if (peeled >= 0) last.filter(col("c") >= KcoreK)
+      else coreDeg(survivors(last))
+    (deg, peeled)
   }
 
   def graphKcore(spark: SparkSession, dir: String): DataFrame = {
-    val (_, deg) = kcoreSurvivors(spark, dir)
-    deg.select(col("src").as("node"), col("c").as("deg_core"))
+    kcoreSurvivors(spark, dir)._1.select(col("src").as("node"), col("c").as("deg_core"))
       .orderBy("node")
   }
 
@@ -569,7 +563,7 @@ object Graph {
     * order-dependent). The correlation is then one fixed-sequence
     * double expression of identical integers, rounded at 6 dp. */
   def graphAssortativity(spark: SparkSession, dir: String): DataFrame = {
-    val (adj, nodes, _) = adjacency(spark, dir)
+    val (adj, nodes, n) = adjacency(spark, dir)
     val degD = adj.select("src", "deg").distinct()
     val ed = adj.select(col("dst"), col("deg").as("dx"))
       .join(degD.select(col("src").as("dst"), col("deg").as("dy")), "dst")

@@ -483,8 +483,7 @@ object Pipeline {
   /** §2.39 duplicate-cluster resolution: connected components over the
     * MinHash near-dup pair graph by [[ccBigSmallStar]], memoized;
     * cluster_id = min doc_id in the component. Returns the labels and
-    * the star rounds (−1 = unconverged at the cap). Never reads the
-    * persisted table. */
+    * the star rounds (−1 = unconverged at the cap). */
   def clusterLabels(spark: SparkSession, dir: String): (DataFrame, Int) =
     labelsCache.getOrElseUpdate(spark, dir) {
       val docs = Tables.documents(spark, dir).select(col("doc_id"))
@@ -498,37 +497,15 @@ object Pipeline {
         .orderBy("doc_id")
       // EAGER barrier, not persist(): every reference to a lazily
       // persisted label frame re-executed its plan (~2.7 s/ref at sf1).
-      // The checkpoint materializes the labels once and cuts lineage,
-      // the in-process stand-in for the §2.320 persisted table.
+      // The checkpoint materializes the labels once and cuts lineage.
       val cut = graft.Barrier("clusters.labels", labels, eager = true)
       graft.Barrier.release(labels) // the star loop's last edge set
       (cut, rounds)
     }
 
-  /** The labels every label reader joins: the persisted table when
-    * `spark.graft.labels.table` names one, else [[clusterLabels]]. */
+  /** The labels every label reader joins: [[clusterLabels]]. */
   def dedupClustersCached(spark: SparkSession, dir: String): DataFrame =
-    persistedLabels(spark).getOrElse(clusterLabels(spark, dir)._1)
-
-  /** The §2.108 persisted-bucketed contract applied to cluster labels:
-    * a crawl-scale pipeline labels ONCE per crawl and persists the
-    * table; every label reader then reads a doc_id-bucketed parquet
-    * table instead of re-deriving the chain (~110 s at sf5, re-paid
-    * per reader). Opt-in via the `spark.graft.labels.table` conf (set
-    * after [[writeLabels]]), which oracle runs never set, so they
-    * verify the full computation; a spec pins persisted == recomputed. */
-  def persistedLabels(spark: SparkSession): Option[DataFrame] =
-    spark.conf.getOption("spark.graft.labels.table")
-      .filter(spark.catalog.tableExists)
-      .map(spark.table)
-
-  /** Compute the label table once and persist it bucketed by doc_id
-    * (8 buckets — the band-index convention), so label⋈doc joins can
-    * run exchange-free on the label side as the table accretes. */
-  def writeLabels(spark: SparkSession, dir: String,
-      table: String = "graft_labels", numBuckets: Int = 8): Unit =
-    graft.etl.Loader.writeBucketed(
-      clusterLabels(spark, dir)._1, table, Seq("doc_id"), numBuckets)
+    clusterLabels(spark, dir)._1
 
   /** §2.84 the end-to-end corpus-construction capstone: everything a
     * training-data job runs, composed — corpus_filter survivors
@@ -595,13 +572,14 @@ object Pipeline {
   /** One large-star round: every neighbor of u strictly larger than u
     * is connected to the minimum of u's closed neighborhood. Input and
     * output edges are self-loop-free; output stays oriented src>dst. */
-  private def largeStar(edges: DataFrame): DataFrame = {
+  private def largeStar(edges: DataFrame, round: graft.Rounds.Round): DataFrame = {
     val sym = edges.select(col("src"), col("dst"))
       .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
     val mins = sym.groupBy("src").agg(min("dst").as("mn"))
       .select(col("src"), least(col("mn"), col("src")).as("m"))
-    sym.join(mins, "src")
-      .filter(col("dst") > col("src"))
+    // a row moves when its edge is re-pointed from src to a smaller m
+    round.count(sym.join(mins, "src").filter(col("dst") > col("src")),
+        col("m") =!= col("src"))
       .select(col("dst").as("src"), col("m").as("dst"))
       .distinct()
   }
@@ -609,12 +587,13 @@ object Pipeline {
   /** One small-star round on large→small oriented edges: every
     * smaller-or-equal neighbor of u, and u itself, connects to the
     * minimum of u's smaller neighborhood. */
-  private def smallStar(edges: DataFrame): DataFrame = {
+  private def smallStar(edges: DataFrame, round: graft.Rounds.Round): DataFrame = {
     val oriented = edges.select(
       greatest(col("src"), col("dst")).as("src"),
       least(col("src"), col("dst")).as("dst"))
     val mins = oriented.groupBy("src").agg(min("dst").as("m"))
-    oriented.join(mins, "src")
+    // a row moves when u's edge to dst becomes an edge dst -> m
+    round.count(oriented.join(mins, "src"), col("dst") =!= col("m"))
       .select(col("dst").as("src"), col("m").as("dst"))
       .unionByName(mins.select(col("src"), col("m").as("dst")))
       .filter(col("src") =!= col("dst"))
@@ -631,33 +610,25 @@ object Pipeline {
     * non-root node — callers coalesce missing nodes to themselves.
     * rounds = −1 when the loop stops at `maxIter` unconverged (its
     * labels are then not components), so a rounds gate fails loudly.
-    * The labels read the last round's barrier: release it with
-    * `Barrier.release` once they are materialized. */
+    *
+    * Each round is one [[graft.Rounds]] cut (`cc.edges`): an uncut
+    * lineage nests every earlier round's joins and blows up planning
+    * itself. A round that re-points no edge in either star step left
+    * the edge set as it was: the fixed point. The labels read the last
+    * round's barrier: release it with `Barrier.release` once they are
+    * materialized. */
   def ccBigSmallStar(pairs: DataFrame, maxIter: Int = 25): (DataFrame, Int) = {
-    // eager barrier, not cache: each round's plan nests the previous
-    // round's joins/unions, so an uncut lineage grows exponentially and
-    // blows up planning itself — the barrier truncates the logical plan
-    // to the materialized edge set.
-    var cur = graft.Barrier("cc.edges", pairs.select(
+    val edges = pairs.select(
         greatest(col("id_a"), col("id_b")).as("src"),
         least(col("id_a"), col("id_b")).as("dst"))
-      .filter(col("src") =!= col("dst")).distinct(), eager = true)
-    var curCnt = cur.count()
-    var rounds = 0
-    var converged = curCnt == 0
-    while (!converged && rounds < maxIter) {
-      val next = graft.Barrier("cc.edges", smallStar(largeStar(cur)), eager = true)
-      val nextCnt = next.count()
-      // sets are distinct: equal size + empty one-sided difference ⇒ equal
-      converged = nextCnt == curCnt && next.except(cur).limit(1).count() == 0
-      graft.Barrier.release(cur)
-      cur = next
-      curCnt = nextCnt
-      rounds += 1
-    }
-    (cur.select(col("src").as("node"), col("dst").as("label")),
-      if (converged) rounds else -1)
+      .filter(col("src") =!= col("dst")).distinct()
+    val (cut, rounds) = graft.Rounds("cc.edges", edges, maxIter)(starRound)
+    (cut.select(col("src").as("node"), col("dst").as("label")), rounds)
   }
+
+  /** One big-star/small-star round over src>dst edges. */
+  private[graft] def starRound(edges: DataFrame, round: graft.Rounds.Round): DataFrame =
+    smallStar(largeStar(edges, round), round)
 
   /** Min-label propagation rounds the oracle unrolls. Plain
     * propagation converges once the per-component min label has

@@ -448,8 +448,10 @@ object TextQueries {
     * driver-side top-pair collect, the same tiny-stat pattern as
     * Silver's medians. The merge itself is the compiled
     * [[graft.functions.BpeMergeFold]] kernel, and the symbols frame is
-    * localCheckpoint'd per round — plan barrier + no recompute of
-    * earlier rounds, the same lineage-cut ccBigSmallStar uses. The
+    * cut by a lazy [[graft.Barrier]] per round — plan barrier + no
+    * recompute of earlier rounds. A fixed round count with no
+    * convergence test, so it stays outside [[graft.Rounds]], whose cuts
+    * are eager. The
     * DuckDB oracle replays each round's fold with a recursive CTE over
     * symbol positions. */
   /** The shared BPE induction loop: `BpeRounds` top-pair selections +

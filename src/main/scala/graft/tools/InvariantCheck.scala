@@ -149,24 +149,23 @@ object InvariantCheck {
     val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
       .union(pairs.select(col("id_b"), col("id_a")))
       .union(docs.select(col("doc_id"), col("doc_id"))).cache()
-    var labels = docs.select(col("doc_id"), col("doc_id").as("label"))
-    var (rounds, changed) = (0, 1L)
-    while (changed > 0 && rounds < maxIter) {
-      // a barrier, not cache: a cached round still nests its whole
-      // lineage in the plan, whose string rendering OOM'd an sf20 sweep
-      val next = graft.Barrier("clusters.round", edges
-        .join(labels, col("dst") === col("doc_id"))
-        .groupBy(col("src").as("doc_id")).agg(min("label").as("label")), eager = true)
-      changed = next.join(labels.withColumnRenamed("label", "old"), "doc_id")
-        .filter(col("label") < col("old")).count()
-      graft.Barrier.release(labels) // the previous round's blocks
-      labels = next
-      rounds += 1
+    // one Rounds cut per round (`clusters.round`), not cache: a cached
+    // round still nests its whole lineage in the plan, whose string
+    // rendering OOM'd an sf20 sweep. A node moves when its new label is
+    // below its old one, which its self-loop carries into the groupBy.
+    val (labels, rounds) = graft.Rounds("clusters.round",
+        docs.select(col("doc_id"), col("doc_id").as("label")), maxIter) { (prev, round) =>
+      round.count(edges.join(prev, col("dst") === col("doc_id"))
+          .groupBy(col("src").as("doc_id"))
+          .agg(min("label").as("label"),
+            min(when(col("src") === col("dst"), col("label"))).as("old")),
+          col("label") < col("old"))
+        .select("doc_id", "label")
     }
     edges.unpersist()
     (labels.select(col("doc_id"), col("label").as("cluster_id"),
         (col("doc_id") === col("label")).as("is_canonical")).orderBy("doc_id"),
-      if (changed == 0) rounds else -1)
+      rounds)
   }
 
   // ---- IVF ----

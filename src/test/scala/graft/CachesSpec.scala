@@ -103,10 +103,61 @@ class CachesSpec extends AnyFunSuite {
   test("Barrier is the only localCheckpoint call in src/main") {
     val root = java.nio.file.Paths.get("src/main/scala")
     assert(java.nio.file.Files.isDirectory(root), s"no $root under ${sys.props("user.dir")}")
-    val raw = java.nio.file.Files.walk(root).iterator().asScala.toSeq
-      .filter(p => p.toString.endsWith(".scala") && p.getFileName.toString != "Barrier.scala")
-      .filter(p => java.nio.file.Files.readString(p).contains(".localCheckpoint("))
+    def callers(call: String, owner: String) = java.nio.file.Files.walk(root).iterator()
+      .asScala.toSeq
+      .filter(p => p.toString.endsWith(".scala") && p.getFileName.toString != owner)
+      .filter(p => java.nio.file.Files.readString(p).contains(call))
+    val raw = callers(".localCheckpoint(", "Barrier.scala")
     assert(raw.isEmpty, s"raw localCheckpoint calls (use graft.Barrier): ${raw.mkString(", ")}")
+    // an observation on a lazy cut completes before its rows are computed
+    // and reads 0, so only the eager cuts of graft.Rounds observe
+    val observers = callers(".observe(", "Rounds.scala")
+    assert(observers.isEmpty, s"observe outside graft.Rounds: ${observers.mkString(", ")}")
+  }
+
+  test("Rounds holds one cut at a time: the star loop on a 100-node chain") {
+    import spark.implicits._
+    SparkTestSession.releaseAll()
+    val pairs = (0 until 99).map(i => (i.toLong, (i + 1).toLong)).toDF("id_a", "id_b")
+    val chain = pairs.select($"id_b".as("src"), $"id_a".as("dst")) // src > dst
+    val held = scala.collection.mutable.ArrayBuffer.empty[Int]
+    val (last, rounds) = Rounds("cc.edges", chain, 25) { (cur, round) =>
+      held += SparkTestSession.persistedIds.size // the previous round's cut
+      pipeline.Pipeline.starRound(cur, round)
+    }
+    held += SparkTestSession.persistedIds.size
+    assert(rounds == 8 && held == Seq.fill(rounds + 1)(1), held)
+    Barrier.release(last)
+    assert(Barrier.scope(pipeline.Pipeline.ccBigSmallStar(pairs))._1._2 == 8)
+  }
+
+  test("a Rounds step that throws leaves no cut and no call site behind") {
+    SparkTestSession.releaseAll()
+    val sc = spark.sparkContext
+    def state = (SparkTestSession.persistedIds, sc.getLocalProperty("callSite.short"))
+    val before = state
+    intercept[IllegalStateException](Barrier.scope {
+      Rounds("spec.rounds", spark.range(10).toDF("v"), 5) { (cur, round) =>
+        if (round.name == "spec.rounds.r2") throw new IllegalStateException("round failed")
+        round.count(cur, org.apache.spark.sql.functions.lit(true)) // never settles
+      }
+    })
+    assert(state == before)
+  }
+
+  test("Rounds: an empty edge set settles at 0 rounds, a loop at its cap reports -1") {
+    import spark.implicits._
+    SparkTestSession.releaseAll()
+    Barrier.scope {
+      assert(pipeline.Pipeline.ccBigSmallStar(Seq.empty[(Long, Long)].toDF("id_a", "id_b"))._2 == 0)
+      // an init the caller cut and counted stays the caller's
+      val init = barrier(10)
+      val held = SparkTestSession.persistedIds
+      val (_, capped) = Rounds("spec.rounds", init, 3, initRows = Some(10)) { (cur, round) =>
+        round.count(cur, org.apache.spark.sql.functions.lit(true)) // never settles
+      }
+      assert(capped == -1 && held.subsetOf(SparkTestSession.persistedIds))
+    }
   }
 
   test("entries are keyed by session identity, not dir alone") {

@@ -168,21 +168,36 @@ class Round7OpsSpec extends AnyFunSuite {
     }
   }
 
-  test("graph_kcore = brute-force fixed-round peeling; fixed point at this SF") {
-    import graft.graph.Graph
-    // rebuild the undirected click graph independently
+  // the undirected click graph, rebuilt independently of Graph
+  private lazy val clickEdges: Seq[(String, String)] = {
     val uv = Tables.events(spark, sf)
       .filter(org.apache.spark.sql.functions.col("event_type") === "click")
       .selectExpr("concat('u', cast(user_id as string)) AS u",
         "concat('i', get_json_object(props, '$.k')) AS v")
       .distinct().collect().map(r => (r.getString(0), r.getString(1)))
-    val edges = (uv.map(p => (p._1, p._2)) ++ uv.map(p => (p._2, p._1))).toSeq
-    def degrees(surv: Set[String]): Map[String, Int] =
-      edges.filter(e => surv(e._1) && surv(e._2))
-        .groupBy(_._1).map { case (n, es) => n -> es.size }
-    var surv: Set[String] = edges.map(_._1).toSet
-    for (_ <- 1 to Graph.KcoreRounds)
-      surv = degrees(surv).filter(_._2 >= Graph.KcoreK).keySet
+    (uv.map(p => (p._1, p._2)) ++ uv.map(p => (p._2, p._1))).toSeq
+  }
+  private def degrees(surv: Set[String]): Map[String, Int] =
+    clickEdges.filter(e => surv(e._1) && surv(e._2))
+      .groupBy(_._1).map { case (n, es) => n -> es.size }
+  /** The survivor sets of 0, 1, … brute synchronous peels. */
+  private def peels(rounds: Int): Seq[Set[String]] =
+    Iterator.iterate(clickEdges.map(_._1).toSet)(
+      degrees(_).filter(_._2 >= graph.Graph.KcoreK).keySet).take(rounds + 1).toSeq
+  /** What a `budget`-round peel reports: the last survivors' in-core
+    * degrees, and the first round that removed nothing, else -1. */
+  private def brute(budget: Int): (Map[String, Int], Int) = {
+    val s = peels(budget)
+    (degrees(s.last), (1 to budget).find(r => s(r) == s(r - 1)).getOrElse(-1))
+  }
+  private def kcore(budget: Int): (Map[String, Int], Int) = {
+    val (deg, rounds) = graph.Graph.kcoreSurvivors(spark, sf, budget)
+    (deg.collect().map(r => r.getString(0) -> r.getLong(1).toInt).toMap, rounds)
+  }
+
+  test("graph_kcore = brute-force fixed-round peeling; fixed point at this SF") {
+    import graft.graph.Graph
+    val surv = peels(Graph.KcoreRounds).last
     val expected = degrees(surv) // in-core degree of the survivor set
     val got = Graph.graphKcore(spark, sf).collect()
       .map(r => r.getString(0) -> r.getLong(1).toInt).toMap
@@ -190,6 +205,24 @@ class Round7OpsSpec extends AnyFunSuite {
     // the round budget converged here: one more peel removes nothing
     assert(degrees(surv).count(_._2 >= Graph.KcoreK) === surv.size ||
       expected.isEmpty)
+  }
+
+  test("k-core peels in round 1 and settles in round 2, as the brute peel does") {
+    // round 1 peels nodes and round 2 removes none, so every budget
+    // from 2 on reports 2 rounds and the degrees of the one peel
+    assert(peels(1).distinct.size == 2 && degrees(peels(1).last).nonEmpty,
+      "this SF no longer peels in round 1")
+    for (budget <- Seq(2, graph.Graph.KcoreRounds)) {
+      val (want, rounds) = brute(budget)
+      assert(rounds == 2)
+      assert(kcore(budget) === (want, rounds), s"budget $budget")
+    }
+  }
+
+  test("k-core stopped by its round budget recomputes the last survivors' degrees") {
+    val (want, rounds) = brute(1)
+    assert(rounds == -1 && want != degrees(peels(0).last))
+    assert(kcore(1) === (want, -1))
   }
 
   test("benford_check = brute first-digit histogram; z from binomial moments") {

@@ -138,6 +138,11 @@ class VerifyGateSpec extends AnyFunSuite {
     // the labels and the star loop's barriers belong to the memo entry
     assert(barriers(sizes).isEmpty && barriers(star).isEmpty, Seq(sizes, star))
     assert(star.get("jobs").asInt < sizes.get("jobs").asInt, Seq(sizes, star))
+    // each star round names its stages
+    val stages = sizes.get("stage_rows")
+    val names = (0 until stages.size).map(stages.get(_).get("name").asText).toSet
+    val rounds = pipeline.Pipeline.clusterLabels(spark, sf)._2
+    assert(rounds >= 0 && (0 to rounds).forall(k => names(s"cc.edges.r$k")), names)
   }
 
   test("failureText: root cause, one line, at most 300 chars") {
